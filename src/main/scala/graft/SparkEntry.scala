@@ -278,19 +278,22 @@ object SparkEntry {
     * intersect, once for its own count) and paid three job floors.
     * Semantics match exactly: `intersect` is the null-safe distinct
     * row intersection (groupBy treats nulls as equal the same way);
-    * the side counts keep duplicates. */
+    * the side counts keep duplicates. The helper's own columns are
+    * longer than every input column name, so they cannot collide. */
   private def setCompareCounts(a: DataFrame, b: DataFrame)
       : (Long, Long, Long) = {
     val cols = a.columns.toSeq.map(col)
-    val tagged = a.withColumn("__side", lit(1))
-      .unionByName(b.toDF(a.columns: _*).withColumn("__side", lit(2)))
+    val p = "_" * (a.columns.map(_.length).max + 1)
+    val (side, na, nb) = (s"${p}side", s"${p}na", s"${p}nb")
+    val tagged = a.withColumn(side, lit(1))
+      .unionByName(b.toDF(a.columns: _*).withColumn(side, lit(2)))
     val r = tagged.groupBy(cols: _*)
-      .agg(sum(when(col("__side") === 1, 1L).otherwise(0L)).as("__na"),
-        sum(when(col("__side") === 2, 1L).otherwise(0L)).as("__nb"))
-      .agg(coalesce(sum(col("__na")), lit(0L)),
-        coalesce(sum(when(col("__na") > 0 && col("__nb") > 0, 1L)
+      .agg(sum(when(col(side) === 1, 1L).otherwise(0L)).as(na),
+        sum(when(col(side) === 2, 1L).otherwise(0L)).as(nb))
+      .agg(coalesce(sum(col(na)), lit(0L)),
+        coalesce(sum(when(col(na) > 0 && col(nb) > 0, 1L)
           .otherwise(0L)), lit(0L)),
-        coalesce(sum(col("__nb")), lit(0L)))
+        coalesce(sum(col(nb)), lit(0L)))
       .head()
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
@@ -2341,8 +2344,8 @@ object SparkEntry {
         .localCheckpoint(true)
       val os = R.bm25ScoresIndexed(
         R.buildBm25Acc(docs, col("doc_id"), col("text")).index, terms)
-      val (nF, nBoth) = (fs.count(), fs.intersect(os).count())
-      require(nF == nBoth && nF == os.count(),
+      val (nF, nBoth, nO) = setCompareCounts(fs, os)
+      require(nF == nBoth && nF == nO,
         s"folded-index scores != one-shot rebuild ($nF vs $nBoth)")
       fs.orderBy(col("bm25").desc, col("id")).limit(25)
         .withColumnRenamed("id", "doc_id")
@@ -2631,8 +2634,8 @@ object SparkEntry {
           .join(ann.pqEncode(emb, idx.pq.model), "id"),
         queries, k = 10, idx.ivf.model, idx.pq.model,
         nprobe = 6, rerank = 16)
-      val (nInc, nBoth) = (inc.count(), inc.intersect(oneShot).count())
-      require(nInc == nBoth && nInc == oneShot.count(),
+      val (nInc, nBoth, nOne) = setCompareCounts(inc, oneShot)
+      require(nInc == nBoth && nInc == nOne,
         s"incremental top-k != one-shot rebuild top-k ($nInc vs $nBoth)")
       idx.unpersist()
       inc.select(col("query_id")).distinct()
@@ -2668,9 +2671,8 @@ object SparkEntry {
       val oneShot = ann.ivfTopKIndexed(
         ann.buildIvfIndex(emb, idx.model), queries, k = 10,
         idx.model, nprobe = 6)
-      val (nInc, nBoth) = (inc.count(),
-        inc.intersect(oneShot).count())
-      require(nInc == nBoth && nInc == oneShot.count(),
+      val (nInc, nBoth, nOne) = setCompareCounts(inc, oneShot)
+      require(nInc == nBoth && nInc == nOne,
         s"incremental top-k != one-shot rebuild top-k ($nInc vs $nBoth)")
       idx.unpersist()
       inc.select(col("query_id")).distinct()
@@ -2704,8 +2706,8 @@ object SparkEntry {
         k = 10, idx.model, rerank = 16).localCheckpoint(true)
       val oneShot = ann.pqTopKIndexed(ann.pqEncode(emb, idx.model),
         emb, queries, k = 10, idx.model, rerank = 16)
-      val (nInc, nBoth) = (inc.count(), inc.intersect(oneShot).count())
-      require(nInc == nBoth && nInc == oneShot.count(),
+      val (nInc, nBoth, nOne) = setCompareCounts(inc, oneShot)
+      require(nInc == nBoth && nInc == nOne,
         s"incremental PQ top-k != one-shot re-encode ($nInc vs $nBoth)")
       idx.unpersist()
       inc.select(col("query_id")).distinct()
@@ -3374,8 +3376,8 @@ object SparkEntry {
       val oneShot = S.buildDsirModel(docs, col("doc_id"), col("text"),
         col("lang") === "zh", buckets = 256)
       val fc = folded.counts.localCheckpoint(true)
-      val (nF, nBoth) = (fc.count(), fc.intersect(oneShot.counts).count())
-      require(nF == nBoth && nF == oneShot.counts.count(),
+      val (nF, nBoth, nO) = setCompareCounts(fc, oneShot.counts)
+      require(nF == nBoth && nF == nO,
         s"folded model != one-shot model ($nF vs $nBoth)")
       val w = S.dsirWeightsWithModel(docs, col("doc_id"), col("text"),
         S.DsirModel(fc, 256))

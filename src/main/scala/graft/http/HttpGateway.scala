@@ -179,9 +179,13 @@ final class HttpGateway(api: HttpApiServer, port: Int = 0,
     * the response back until upstream EOF (which covers SSE: the REST
     * server ends the stream itself on its idle timeout). `Connection:
     * close` is forced upstream so the response is close-delimited —
-    * the same framing this per-request client socket uses. A down
-    * upstream answers 502 instead of an empty reply; a wedged one is
-    * cut off by the read timeout instead of pinning the thread. */
+    * the same framing this per-request client socket uses — and is
+    * set on the relayed response head too: the REST server answers a
+    * close-requested request with no `Connection` header at all, so a
+    * keep-alive client would otherwise reuse the socket this gateway
+    * closes. A down upstream answers 502 instead of an empty reply; a
+    * wedged one is cut off by the read timeout instead of pinning the
+    * thread. */
   private def relay(out: OutputStream, requestLine: String,
       rawHeaders: Seq[String], body: Array[Byte]): Unit = {
     val upstream = new Socket()
@@ -202,6 +206,16 @@ final class HttpGateway(api: HttpApiServer, port: Int = 0,
       uo.write(body)
       uo.flush()
       val ui = new BufferedInputStream(upstream.getInputStream)
+      val respHead = readHead(ui).split("\r\n").filter(_.nonEmpty)
+      if (respHead.nonEmpty) {
+        out.write(respHead.filterNot(
+          _.toLowerCase.startsWith("connection:"))
+          .mkString("", "\r\n", "\r\nConnection: close\r\n\r\n")
+          .getBytes(StandardCharsets.ISO_8859_1))
+        // head and body leave as one write when the body is already
+        // here (REST); an SSE head goes out before the first event
+        if (ui.available() == 0) out.flush()
+      }
       val buf = new Array[Byte](8192)
       var n = ui.read(buf)
       while (n >= 0) {
@@ -209,18 +223,18 @@ final class HttpGateway(api: HttpApiServer, port: Int = 0,
         out.flush() // SSE events must not sit in the relay buffer
         n = ui.read(buf)
       }
+      out.flush()
     } finally {
       try upstream.close() catch { case _: Exception => () }
     }
   }
 
-  /** (request line, raw header lines, lowercased header map, body). The
-    * body is read per Content-Length (capped) so it can be relayed. */
-  private def readRequest(in: InputStream)
-      : (String, Seq[String], Map[String, String], Array[Byte]) = {
+  /** An HTTP message head: bytes up to and including the blank line
+    * (or EOF). */
+  private def readHead(in: InputStream): String = {
     val sb = new StringBuilder
     // append-then-check: reading one byte past the terminator would
-    // block on a socket that has sent its whole request
+    // block on a socket that has sent its whole message head
     var done = false
     while (!done) {
       val b = in.read()
@@ -229,10 +243,17 @@ final class HttpGateway(api: HttpApiServer, port: Int = 0,
         sb.append(b.toChar)
         if (sb.endsWith("\r\n\r\n")) done = true
         if (sb.length > 65536) throw new IllegalArgumentException(
-          "oversized request header")
+          "oversized header")
       }
     }
-    val lines = sb.toString.split("\r\n").filter(_.nonEmpty)
+    sb.toString
+  }
+
+  /** (request line, raw header lines, lowercased header map, body). The
+    * body is read per Content-Length (capped) so it can be relayed. */
+  private def readRequest(in: InputStream)
+      : (String, Seq[String], Map[String, String], Array[Byte]) = {
+    val lines = readHead(in).split("\r\n").filter(_.nonEmpty)
     val headers = lines.drop(1).flatMap { l =>
       l.split(":", 2) match {
         case Array(k, v) => Some(k.trim.toLowerCase -> v.trim)

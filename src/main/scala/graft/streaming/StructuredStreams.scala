@@ -4,6 +4,7 @@ import graft.comparator.{ComparatorConfig, ComparisonResult,
   StatefulComparator}
 import graft.parsing.NQuadsParser
 import graft.storage.EventLog
+import graft.util.Lineage
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,51 +29,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   *     state storage, sharded across executors.
   */
 object StructuredStreams {
-
-  /** See [[graft.util.Lineage.release]] — a standing stream that
-    * re-pins per fold must release the superseded generation through
-    * the underlying checkpoint RDD (`Dataset.unpersist` is a no-op for
-    * checkpoint blocks). */
-  private[streaming] def releaseCheckpoint(df: DataFrame): Unit =
-    graft.util.Lineage.release(df)
-
-  /** Restart durability for the Streaming* folds below. Every standing
-    * state is one or two plain DataFrames plus, for a few classes,
-    * bounded driver metadata (per-stratum count maps, a watermark
-    * scalar) — so surviving a driver restart is a parquet write + read,
-    * the same operational claim the standing indexes prove in
-    * IndexPersistenceSpec, now FIRST-CLASS on every fold: a
-    * driver-memory localCheckpoint pin alone is NOT restart-durable,
-    * and before this the round-13 folds would silently lose their
-    * standing sample/funnel on restart. Each class exposes
-    * `save(path)` (overwrite the state under `path`; fails loudly when
-    * nothing has been folded) and `restore(spark, path)` (load into a
-    * FRESH instance constructed with the same parameters; fails loudly
-    * on a non-fresh instance), after which `fold` resumes exactly
-    * where the saved instance stopped — StreamingDurabilitySpec pins
-    * fold-k → save → new instance → restore → fold-rest ≡ the
-    * uninterrupted fold, and the `events_funnel_durable` gate entry
-    * routes a save/restore through the DuckDB oracle. */
-  private def saveFrame(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-  private def loadFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).localCheckpoint(true)
-  private def saveCounts(spark: SparkSession,
-      m: scala.collection.mutable.Map[String, Long], path: String): Unit = {
-    import spark.implicits._
-    saveFrame(m.toSeq.toDF("k", "n"), path)
-  }
-  private def loadCounts(spark: SparkSession, path: String,
-      into: scala.collection.mutable.Map[String, Long]): Unit =
-    spark.read.parquet(path).select("k", "n").collect()
-      .foreach(r => into(r.getString(0)) = r.getLong(1))
-  private def requireFresh(isEmpty: Boolean, cls: String): Unit =
-    require(isEmpty, s"$cls.restore must target a fresh instance " +
-      "(state already folded — restoring over live state would " +
-      "silently merge two histories)")
-  private def requireSaved(nonEmpty: Boolean, cls: String): Unit =
-    if (!nonEmpty) throw new IllegalStateException(
-      s"$cls.save: nothing to save — no batch folded yet")
 
   /** Streaming N-Quads ingest: any streaming Dataset of raw lines
     * (file source, socket, Kafka value, MemoryStream in tests) →
@@ -276,7 +232,21 @@ object StructuredStreams {
       .trigger(Trigger.ProcessingTime(0))
       .start()
 
-  // ---- streaming sketch maintenance ------------------------------------
+  // ---- standing folds ([[StandingFold]]) -------------------------------
+
+  /** Attach a standing fold to a stream: one `foreachBatch` folding each
+    * micro-batch into `fold`. The stream carries the raw rows; the fold
+    * is the only aggregation. */
+  def maintain(stream: DataFrame, fold: StandingFold,
+      checkpointDir: String): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+        fold.fold(batch.toDF())
+      }
+      .trigger(Trigger.ProcessingTime(0))
+      .start()
 
   /** Standing mergeable-sketch state (per-group HLL distinct + KLL
     * quantile + CMS frequency, [[graft.pipeline.Sketches]]) maintained
@@ -289,41 +259,22 @@ object StructuredStreams {
     * lineage-truncated per fold (an always-on stream must not grow the
     * plan) and superseded blocks are released. */
   final class StreamingSketches(groupCols: Seq[String], valueCol: String,
-      lgK: Int = 12, kllK: Int = 200) {
-    @volatile private var state: Option[DataFrame] = None
+      lgK: Int = 12, kllK: Int = 200) extends StandingFold {
+    private val state = new Pinned("state")
 
-    /** Fold one (micro-)batch into the standing table. */
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val b = graft.pipeline.Sketches.sketchTable(batch,
         groupCols.map(col), col(valueCol), lgK = lgK, kllK = kllK)
-      val next = state match {
-        case None => b.localCheckpoint(true)
-        case Some(s0) =>
-          val merged = graft.pipeline.Sketches.mergeSketchTables(
-            s0.unionByName(b), groupCols.map(col)).localCheckpoint(true)
-          releaseCheckpoint(s0)
-          merged
-      }
-      state = Some(next)
+      state.replace(state.frame match {
+        case None     => b
+        case Some(s0) => graft.pipeline.Sketches.mergeSketchTables(
+          s0.unionByName(b), groupCols.map(col))
+      })
     }
 
     /** Current standing sketch table (empty-schema None before any
       * batch). */
-    def current: Option[DataFrame] = state
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(state.nonEmpty, "StreamingSketches")
-      saveFrame(state.get, s"$path/state")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(state.isEmpty, "StreamingSketches")
-      state = Some(loadFrame(spark, s"$path/state"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      state.foreach(releaseCheckpoint); state = None
-    }
+    def current: Option[DataFrame] = state.frame
   }
 
   /** Standing BM25 inverted index over a document stream: each
@@ -341,12 +292,15 @@ object StructuredStreams {
     * O(standing) per fold). The one-row integer counts stay a
     * checkpoint pin. */
   final class StreamingBm25(idCol: String, textCol: String,
-      compactEvery: Int = 64, spoolDir: Option[String] = None) {
-    @volatile private var postDl: Option[DeltaFrame] = None
-    @volatile private var countsSt: Option[DataFrame] = None
+      compactEvery: Int = 64, spoolDir: Option[String] = None)
+      extends StandingFold {
+    private val postings =
+      new Spool("postings", "bm25-post", compactEvery, spoolDir)
+    private val counts = new Pinned("counts")
 
     /** Live postings generation count (spec observability). */
-    def generationCount: Int = postDl.map(_.generationCount).getOrElse(0)
+    def generationCount: Int =
+      postings.spool.map(_.generationCount).getOrElse(0)
 
     /** Per-fold work attribution (`graft.debug.foldstats` system
       * property turns the counters on — they cost extra actions):
@@ -358,26 +312,21 @@ object StructuredStreams {
     @volatile private var foldStats: Option[Bm25FoldStats] = None
     def lastFoldStats: Option[Bm25FoldStats] = foldStats
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val R = graft.pipeline.Retrieval
       val b = R.buildBm25Acc(batch, col(idCol), col(textCol))
-      if (postDl.isEmpty)
-        postDl = Some(new DeltaFrame(batch.sparkSession, "bm25-post",
-          compactEvery, spoolDir.map(d => s"$d/postings")))
-      postDl.get.append(b.postings)
+      val post = postings(batch.sparkSession)
+      post.append(b.postings)
       if (sys.props.contains("graft.debug.foldstats"))
         foldStats = Some(Bm25FoldStats(
           b.counts.select(col("n_docs")).head().getLong(0),
-          b.postings.count(), postDl.get.generationCount))
-      val foldedCounts = countsSt match {
+          b.postings.count(), post.generationCount))
+      counts.replace(counts.frame match {
         case None     => b.counts
         case Some(c0) => c0.unionByName(b.counts)
           .agg(sum(col("n_docs")).as("n_docs"),
             sum(col("sum_dl")).as("sum_dl"))
-      }
-      val pinned = foldedCounts.localCheckpoint(true)
-      countsSt.foreach(releaseCheckpoint)
-      countsSt = Some(pinned)
+      })
     }
 
     /** Current standing accumulator (None before any batch); serve
@@ -386,40 +335,9 @@ object StructuredStreams {
       * frame is backed by the delta spool — valid until the next fold
       * (compaction may rewrite the files behind it). */
     def current: Option[graft.pipeline.Retrieval.Bm25Acc] =
-      countsSt.map(c =>
-        graft.pipeline.Retrieval.Bm25Acc(postDl.get.read, c))
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(countsSt.nonEmpty, "StreamingBm25")
-      postDl.get.saveTo(s"$path/postings")
-      saveFrame(countsSt.get, s"$path/counts")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(countsSt.isEmpty && postDl.isEmpty, "StreamingBm25")
-      postDl = Some(new DeltaFrame(spark, "bm25-post",
-        spoolDir = spoolDir.map(d => s"$d/postings")))
-      postDl.get.loadFrom(s"$path/postings")
-      countsSt = Some(loadFrame(spark, s"$path/counts"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      countsSt.foreach(releaseCheckpoint); countsSt = None
-      postDl.foreach(_.delete()); postDl = None
-    }
+      counts.frame.map(c =>
+        graft.pipeline.Retrieval.Bm25Acc(postings.spool.get.read, c))
   }
-
-  /** Attach standing BM25 index maintenance to a document stream. */
-  def maintainBm25(stream: DataFrame, index: StreamingBm25,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        index.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
 
   /** Standing DSIR bucket model over a document stream: each
     * micro-batch's (raw, target) bucket counts fold into the standing
@@ -430,55 +348,24 @@ object StructuredStreams {
     * (`StreamingDsirSpec`). Lineage-truncated per fold, superseded
     * checkpoints released. */
   final class StreamingDsir(idCol: String, textCol: String,
-      isTarget: String, buckets: Int = 256) {
-    @volatile private var state
-        : Option[graft.pipeline.Sampling.DsirModel] = None
+      isTarget: String, buckets: Int = 256) extends StandingFold {
+    private val state = new Pinned("state")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val S = graft.pipeline.Sampling
       val b = S.buildDsirModel(batch, col(idCol), col(textCol),
         col(isTarget), buckets)
-      val folded = state match {
+      state.replace((current match {
         case None     => b
         case Some(s0) => S.foldDsirModel(s0, b)
-      }
-      val pinned = S.DsirModel(folded.counts.localCheckpoint(true),
-        buckets)
-      state.foreach(s0 => releaseCheckpoint(s0.counts))
-      state = Some(pinned)
+      }).counts)
     }
 
     /** Current standing model (None before any batch); score via
       * [[graft.pipeline.Sampling.dsirWeightsWithModel]]. */
-    def current: Option[graft.pipeline.Sampling.DsirModel] = state
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(state.nonEmpty, "StreamingDsir")
-      saveFrame(state.get.counts, s"$path/state")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(state.isEmpty, "StreamingDsir")
-      state = Some(graft.pipeline.Sampling.DsirModel(
-        loadFrame(spark, s"$path/state"), buckets))
-    }
-
-    def unpersist(): Unit = synchronized {
-      state.foreach(s0 => releaseCheckpoint(s0.counts)); state = None
-    }
+    def current: Option[graft.pipeline.Sampling.DsirModel] =
+      state.frame.map(graft.pipeline.Sampling.DsirModel(_, buckets))
   }
-
-  /** Attach standing DSIR-model maintenance to a document stream. */
-  def maintainDsir(stream: DataFrame, model: StreamingDsir,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        model.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
 
   /** Standing additive CUBE dashboard over a stream
     * ([[graft.pipeline.Reports]]): each micro-batch aggregates to its
@@ -490,40 +377,22 @@ object StructuredStreams {
     * ([[StreamingCubeSpec]]). State lineage-truncated per fold,
     * superseded checkpoints released — the standing-state discipline
     * shared by every Streaming* class here. */
-  final class StreamingCube(dims: Seq[String], measure: String) {
-    @volatile private var state: Option[DataFrame] = None
+  final class StreamingCube(dims: Seq[String], measure: String)
+      extends StandingFold {
+    private val state = new Pinned("state")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val b = graft.pipeline.Reports.cubePartial(batch,
         dims.map(col), col(measure))
-      val next = state match {
-        case None => b.localCheckpoint(true)
-        case Some(s0) =>
-          val merged = graft.pipeline.Reports.foldCubes(Seq(s0, b))
-            .localCheckpoint(true)
-          releaseCheckpoint(s0)
-          merged
-      }
-      state = Some(next)
+      state.replace(state.frame match {
+        case None     => b
+        case Some(s0) => graft.pipeline.Reports.foldCubes(Seq(s0, b))
+      })
     }
 
     /** Current standing cube (None before any batch); read through
       * [[graft.pipeline.Reports.withAvg]] for derived means. */
-    def current: Option[DataFrame] = state
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(state.nonEmpty, "StreamingCube")
-      saveFrame(state.get, s"$path/state")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(state.isEmpty, "StreamingCube")
-      state = Some(loadFrame(spark, s"$path/state"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      state.foreach(releaseCheckpoint); state = None
-    }
+    def current: Option[DataFrame] = state.frame
   }
 
   /** Standing per-stratum quota sample over a stream: the top-n rows
@@ -537,37 +406,21 @@ object StructuredStreams {
     * (the standing state), never stream history; state is
     * lineage-truncated per fold and superseded checkpoints released. */
   final class StreamingQuotaSample(stratumCol: String, keyCol: String,
-      n: Int) {
-    @volatile private var state: Option[DataFrame] = None
+      n: Int) extends StandingFold {
+    private val state = new Pinned("state")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val b = batch.select(col(stratumCol), col(keyCol))
-      val merged = state match {
+      val merged = state.frame match {
         case None     => b
         case Some(s0) => s0.unionByName(b)
       }
-      val next = graft.pipeline.Sampling.quotaSample(merged,
-        col(stratumCol), col(keyCol), n).localCheckpoint(true)
-      state.foreach(releaseCheckpoint)
-      state = Some(next)
+      state.replace(graft.pipeline.Sampling.quotaSample(merged,
+        col(stratumCol), col(keyCol), n))
     }
 
     /** Current standing sample (None before any batch). */
-    def current: Option[DataFrame] = state
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(state.nonEmpty, "StreamingQuotaSample")
-      saveFrame(state.get, s"$path/state")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(state.isEmpty, "StreamingQuotaSample")
-      state = Some(loadFrame(spark, s"$path/state"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      state.foreach(releaseCheckpoint); state = None
-    }
+    def current: Option[DataFrame] = state.frame
   }
 
   /** Standing temperature-rebalanced sample over a document stream —
@@ -585,29 +438,27 @@ object StructuredStreams {
     * driver like the one-shot's). Folded state ≡ the one-shot over
     * everything ingested (`sample_temperature_incremental`). */
   final class StreamingTemperatureSample(stratumCol: String,
-      keyCol: String, alpha: Double, targetN: Long) {
+      keyCol: String, alpha: Double, targetN: Long) extends StandingFold {
     require(alpha >= 0 && alpha <= 1,
       s"alpha must be in [0, 1] (rates must be non-increasing as " +
         s"counts grow or the fold would need rejected rows back), " +
         s"got $alpha")
     require(targetN > 0, s"targetN must be > 0, got $targetN")
-    private val counts =
-      scala.collection.mutable.Map.empty[String, Long]
-    @volatile private var state: Option[DataFrame] = None
+    private val state = new Pinned("state")
+    private val counts = new Counts("counts")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val spark = batch.sparkSession
       import spark.implicits._
       val b = batch.where(col(stratumCol).isNotNull)
       b.groupBy(col(stratumCol).cast("string")).count().collect()
-        .foreach(r => counts(r.getString(0)) =
-          counts.getOrElse(r.getString(0), 0L) + r.getLong(1))
+        .foreach(r => counts.add(r.getString(0), r.getLong(1)))
       // canonical (sorted-stratum) accumulation order — the one-shot
       // [[graft.pipeline.Sampling.temperatureSample]] sums the same
       // way, so the double powSum (and hence every rate compared
       // against hashUnit) is bit-identical between fold and one-shot,
       // not just equal after round-to-9
-      val sorted = counts.toSeq.sortBy(_._1)
+      val sorted = counts.map.toSeq.sortBy(_._1)
       val powSum =
         sorted.map { case (_, n) => math.pow(n.toDouble, alpha) }.sum
       val rates = sorted.map { case (s, n) =>
@@ -616,40 +467,20 @@ object StructuredStreams {
         (s, BigDecimal(rate)
           .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }.toDF("__stratum", "__rate")
-      val merged = state match {
+      val merged = state.frame match {
         case None     => b
         case Some(s0) => s0.unionByName(b)
       }
-      val next = merged
+      state.replace(merged
         .join(broadcast(rates),
           col(stratumCol).cast("string") === col("__stratum"))
         .where(graft.pipeline.Sampling.hashUnit(col(keyCol)) <
           col("__rate"))
-        .drop("__stratum", "__rate")
-        .localCheckpoint(true)
-      state.foreach(releaseCheckpoint)
-      state = Some(next)
+        .drop("__stratum", "__rate"))
     }
 
     /** Current standing sample (None before any batch). */
-    def current: Option[DataFrame] = state
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(state.nonEmpty, "StreamingTemperatureSample")
-      saveFrame(state.get, s"$path/state")
-      saveCounts(state.get.sparkSession, counts, s"$path/counts")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(state.isEmpty && counts.isEmpty,
-        "StreamingTemperatureSample")
-      state = Some(loadFrame(spark, s"$path/state"))
-      loadCounts(spark, s"$path/counts", counts)
-    }
-
-    def unpersist(): Unit = synchronized {
-      state.foreach(releaseCheckpoint); state = None; counts.clear()
-    }
+    def current: Option[DataFrame] = state.frame
   }
 
   /** Standing distribution-matched sample over a document stream — the
@@ -668,53 +499,49 @@ object StructuredStreams {
     * exact fold would have to retain nearly every bin in full —
     * output-unbounded state is a rebuild, not a fold. */
   final class StreamingMatchedSample(binCol: String, keyCol: String,
-      targetWeights: Seq[(String, Long)], targetN: Long) {
+      targetWeights: Seq[(String, Long)], targetN: Long)
+      extends StandingFold {
     require(targetWeights.nonEmpty, "need at least one target bin")
     require(targetWeights.forall(_._2 > 0), "weights must be positive")
     require(targetN > 0, s"targetN must be > 0, got $targetN")
     private val w = targetWeights.map(_._2).sum
     private val caps =
       targetWeights.map { case (b, wb) => (b, targetN * wb / w) }
-    private val counts =
-      scala.collection.mutable.Map.empty[String, Long]
-    @volatile private var pools: Option[DataFrame] = None
+    private val pools = new Pinned("state")
+    private val counts = new Counts("counts")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val spark = batch.sparkSession
       import spark.implicits._
       val b = batch.withColumn("__bin", col(binCol).cast("string"))
         .where(col("__bin").isin(targetWeights.map(_._1): _*))
       b.groupBy("__bin").count().collect()
-        .foreach(r => counts(r.getString(0)) =
-          counts.getOrElse(r.getString(0), 0L) + r.getLong(1))
-      val merged = pools match {
+        .foreach(r => counts.add(r.getString(0), r.getLong(1)))
+      val merged = pools.frame match {
         case None     => b
         case Some(p0) => p0.unionByName(b)
       }
       val capDf = caps.toDF("__bin", "__cap")
-      val next = graft.pipeline.Sampling.topKPerGroup(merged,
+      pools.replace(graft.pipeline.Sampling.topKPerGroup(merged,
           col("__bin"),
           lit(0.0) - graft.pipeline.Sampling.hashUnit(col(keyCol)),
           col(keyCol).asc,
           math.max(caps.map(_._2).max, 1L).toInt)
         .join(broadcast(capDf), Seq("__bin"))
         .where(col("rank") <= col("__cap"))
-        .drop("rank", "__cap")
-        .localCheckpoint(true)
-      pools.foreach(releaseCheckpoint)
-      pools = Some(next)
+        .drop("rank", "__cap"))
     }
 
     /** Current matched sample: quotas from the exact standing counts,
       * each pool trimmed to its quota (None before any batch; empty
       * when a weighted bin has no rows yet — loudly empty, the
       * one-shot's contract). */
-    def current: Option[DataFrame] = pools.map { p =>
+    def current: Option[DataFrame] = pools.frame.map { p =>
       val spark = p.sparkSession
       import spark.implicits._
       val nStar = math.min(
         targetWeights.map { case (b, wb) =>
-          counts.getOrElse(b, 0L) * w / wb }.min,
+          counts.map.getOrElse(b, 0L) * w / wb }.min,
         targetN)
       val quotas = targetWeights
         .map { case (b, wb) => (b, nStar * wb / w) }
@@ -727,23 +554,6 @@ object StructuredStreams {
       ranked.join(broadcast(quotas), Seq("__bin"))
         .where(col("__rn") <= col("__quota"))
         .drop("__rn", "__quota", "__bin")
-    }
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(pools.nonEmpty, "StreamingMatchedSample")
-      saveFrame(pools.get, s"$path/state")
-      saveCounts(pools.get.sparkSession, counts, s"$path/counts")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(pools.isEmpty && counts.isEmpty,
-        "StreamingMatchedSample")
-      pools = Some(loadFrame(spark, s"$path/state"))
-      loadCounts(spark, s"$path/counts", counts)
-    }
-
-    def unpersist(): Unit = synchronized {
-      pools.foreach(releaseCheckpoint); pools = None; counts.clear()
     }
   }
 
@@ -792,7 +602,7 @@ object StructuredStreams {
     * counts. Parquet save/restore durable (saves compact). */
   final class StreamingContainmentDedup(idCol: String, textCol: String,
       minPpm: Long, shingleSize: Int = 3, compactEvery: Int = 64,
-      spoolDir: Option[String] = None) {
+      spoolDir: Option[String] = None) extends StandingFold {
     require(minPpm > 0L && minPpm <= 1000000L,
       "minPpm must be in (0, 1000000]")
     // corpus-sized, log-structured: (id, sh, n) docs / (t, id, n)
@@ -800,30 +610,20 @@ object StructuredStreams {
     // separate spool: df(t) ≡ posting count of t, so the at-arrival df
     // a batch ranks against is an aggregate over the postings spool —
     // one fewer write+read per fold, one fewer restore surface.
-    @volatile private var docsDl: Option[DeltaFrame] = None
-    @volatile private var postDl: Option[DeltaFrame] = None
-    @volatile private var prefDl: Option[DeltaFrame] = None
+    private val docSpool =
+      new Spool("docs", "containment-docs", compactEvery, spoolDir)
+    private val postSpool =
+      new Spool("postings", "containment-post", compactEvery, spoolDir)
+    private val prefSpool =
+      new Spool("prefixes", "containment-pref", compactEvery, spoolDir)
     // thin, per-fold checkpoint pins: (id) ids / (id) dropped
-    @volatile private var idsSt: Option[DataFrame] = None
-    @volatile private var dropSt: Option[DataFrame] = None
-
-    private def deltas(spark: SparkSession)
-        : (DeltaFrame, DeltaFrame, DeltaFrame) = {
-      if (docsDl.isEmpty) {
-        docsDl = Some(new DeltaFrame(spark, "containment-docs",
-          compactEvery, spoolDir.map(d => s"$d/docs")))
-        postDl = Some(new DeltaFrame(spark, "containment-post",
-          compactEvery, spoolDir.map(d => s"$d/postings")))
-        prefDl = Some(new DeltaFrame(spark, "containment-pref",
-          compactEvery, spoolDir.map(d => s"$d/prefixes")))
-      }
-      (docsDl.get, postDl.get, prefDl.get)
-    }
+    private val ids = new Pinned("ids")
+    private val dropped = new Pinned("dropped")
 
     /** Live generation counts (docs, postings, prefixes) — spec
       * observability for the flat-fold-cost proof. */
-    def generationCounts: Seq[Int] =
-      Seq(docsDl, postDl, prefDl).flatten.map(_.generationCount)
+    def generationCounts: Seq[Int] = Seq(docSpool, postSpool, prefSpool)
+      .flatMap(_.spool).map(_.generationCount)
 
     /** Per-fold work attribution, populated only when the
       * `graft.debug.containment` channel is on (counting costs extra
@@ -850,15 +650,16 @@ object StructuredStreams {
         .withColumn("shh",
           sort_array(transform(col("sh"), x => xxhash64(x))))
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val D = graft.pipeline.Dedup
-      val L = graft.util.Lineage
       val W = org.apache.spark.sql.expressions.Window
-      val (docs, post, pref) = deltas(batch.sparkSession)
+      val spark = batch.sparkSession
+      val (docs, post, pref) =
+        (docSpool(spark), postSpool(spark), prefSpool(spark))
       // direction-2's skip derives from the ACTUAL state it depends on
-      // — the standing prefix spool — not the idsSt proxy: if a fold
+      // — the standing prefix spool — not the ids proxy: if a fold
       // path ever reorders state writes, or a fold throws between the
-      // appends and the idsSt assignment and is retried, the proxy
+      // appends and the ids assignment and is retried, the proxy
       // would silently skip retro-drops while a standing index exists
       val firstFold = pref.isEmpty
       val b = shingled(batch).localCheckpoint(true)
@@ -946,7 +747,7 @@ object StructuredStreams {
             } else {
               val prefOld0 = pref.read
                 .join(b.select(col("id")), Seq("id"), "left_anti")
-              val prefOld = dropSt match {
+              val prefOld = dropped.frame match {
                 case Some(d) => prefOld0.join(d, Seq("id"), "left_anti")
                 case None    => prefOld0
               }
@@ -992,68 +793,24 @@ object StructuredStreams {
               foldStats = Some(FoldStats(bIds.count(), batchDrops,
                 retroDrops, ls.rounds, ls.candidatePairs))
             }
-            // pin the thin next-generation frames before releasing the
-            // previous ones (the drop plan reads the old drop pin)
-            val nextIds = idsSt.map(_.unionByName(bIds)).getOrElse(bIds)
-              .localCheckpoint(true)
-            val nextDrop = dropSt.map(_.unionByName(newlyDropped))
-              .getOrElse(newlyDropped).localCheckpoint(true)
-            Seq(idsSt, dropSt).foreach(_.foreach(releaseCheckpoint))
-            idsSt = Some(nextIds); dropSt = Some(nextDrop)
-            Seq(drops, ranked).foreach(L.release)
-          } finally releaseCheckpoint(bPref)
-        } finally releaseCheckpoint(bPost)
-      } finally releaseCheckpoint(b)
+            // the drop plan reads the old drop pin, which replace
+            // releases only after the next generation is pinned
+            ids.replace(ids.frame.map(_.unionByName(bIds)).getOrElse(bIds))
+            dropped.replace(dropped.frame.map(_.unionByName(newlyDropped))
+              .getOrElse(newlyDropped))
+            Seq(drops, ranked).foreach(Lineage.release)
+          } finally Lineage.release(bPref)
+        } finally Lineage.release(bPost)
+      } finally Lineage.release(b)
     }
 
     /** Kept ids of everything ingested — shingle-less docs (no
       * signature) always keep, matching the one-shot's contract.
       * None before any batch. */
-    def current: Option[DataFrame] = idsSt.map { ids =>
-      ids.join(dropSt.get, Seq("id"), "left_anti")
-    }
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(idsSt.nonEmpty, "StreamingContainmentDedup")
-      docsDl.get.saveTo(s"$path/docs")
-      postDl.get.saveTo(s"$path/postings")
-      prefDl.get.saveTo(s"$path/prefixes")
-      saveFrame(idsSt.get, s"$path/ids")
-      saveFrame(dropSt.get, s"$path/dropped")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(idsSt.isEmpty && docsDl.isEmpty,
-        "StreamingContainmentDedup")
-      val (docs, post, pref) = deltas(spark)
-      docs.loadFrom(s"$path/docs")
-      post.loadFrom(s"$path/postings")
-      pref.loadFrom(s"$path/prefixes")
-      idsSt = Some(loadFrame(spark, s"$path/ids"))
-      dropSt = Some(loadFrame(spark, s"$path/dropped"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      Seq(idsSt, dropSt).foreach(_.foreach(releaseCheckpoint))
-      idsSt = None; dropSt = None
-      Seq(docsDl, postDl, prefDl).foreach(_.foreach(_.delete()))
-      docsDl = None; postDl = None; prefDl = None
+    def current: Option[DataFrame] = ids.frame.map {
+      _.join(dropped.frame.get, Seq("id"), "left_anti")
     }
   }
-
-  /** Attach standing containment-dedup maintenance to a document
-    * stream. */
-  def maintainContainmentDedup(stream: DataFrame,
-      dedup: StreamingContainmentDedup, checkpointDir: String)
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        dedup.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
 
   /** Standing n-gram novelty over a document stream: the first-owner
     * shingle index ([[graft.pipeline.TextAnalysis.NoveltyIndex]])
@@ -1074,13 +831,15 @@ object StructuredStreams {
     * with the corpus). */
   final class StreamingNovelty(idCol: String, textCol: String,
       n: Int = 3, compactEvery: Int = 64,
-      spoolDir: Option[String] = None) {
-    @volatile private var idxDl: Option[DeltaFrame] = None
-    @volatile private var outDl: Option[DeltaFrame] = None
+      spoolDir: Option[String] = None) extends StandingFold {
+    private val index =
+      new Spool("index", "novelty-idx", compactEvery, spoolDir)
+    private val outputs =
+      new Spool("outputs", "novelty-out", compactEvery, spoolDir)
 
     /** Live generation counts (index, outputs) — spec observability. */
     def generationCounts: Seq[Int] =
-      Seq(idxDl, outDl).flatten.map(_.generationCount)
+      Seq(index, outputs).flatMap(_.spool).map(_.generationCount)
 
     /** Per-fold work attribution (`graft.debug.foldstats` turns the
       * counters on — they cost extra actions): batch docs, distinct
@@ -1094,20 +853,16 @@ object StructuredStreams {
     @volatile private var foldStats: Option[NoveltyFoldStats] = None
     def lastFoldStats: Option[NoveltyFoldStats] = foldStats
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val T = graft.pipeline.TextAnalysis
-      if (idxDl.isEmpty) {
-        idxDl = Some(new DeltaFrame(batch.sparkSession, "novelty-idx",
-          compactEvery, spoolDir.map(d => s"$d/index")))
-        outDl = Some(new DeltaFrame(batch.sparkSession, "novelty-out",
-          compactEvery, spoolDir.map(d => s"$d/outputs")))
-      }
+      val spark = batch.sparkSession
+      val (idx, out) = (index(spark), outputs(spark))
       val b = T.buildNoveltyIndex(batch, col(idCol), col(textCol), n)
       // batch partial pinned once: it is both appended (parquet write)
       // and the semi-filter vocabulary below
       val bOwners = b.firstOwners.localCheckpoint(true)
       try {
-        idxDl.get.append(bOwners)
+        idx.append(bOwners)
         // standing owners for exactly this batch's shingles: min over
         // generations, semi-filtered BEFORE the aggregation so the
         // shuffle is ∝ batch matches, not the standing index — and the
@@ -1117,45 +872,22 @@ object StructuredStreams {
         // scan before the exact semi-join (see StreamingLineDedup —
         // same rationale, same output-identity argument).
         val nb = math.max(bOwners.count(), 1L)
-        val standing = graft.pipeline.Joins.bloomReduce(idxDl.get.read,
+        val standing = graft.pipeline.Joins.bloomReduce(idx.read,
           "sh", graft.pipeline.Joins.keyBloom(bOwners, "sh", nb, 0.01))
         val ownersNow = standing
           .join(bOwners.select(col("sh")), Seq("sh"), "left_semi")
           .groupBy(col("sh")).agg(min(col("first_doc")).as("first_doc"))
-        val out = T.noveltyWithIndex(batch, col(idCol), col(textCol),
-          T.NoveltyIndex(ownersNow), n)
-        outDl.get.append(out)
+        out.append(T.noveltyWithIndex(batch, col(idCol), col(textCol),
+          T.NoveltyIndex(ownersNow), n))
         if (sys.props.contains("graft.debug.foldstats"))
           foldStats = Some(NoveltyFoldStats(batch.count(), nb,
-            ownersNow.count(), idxDl.get.generationCount))
-      } finally releaseCheckpoint(bOwners)
+            ownersNow.count(), idx.generationCount))
+      } finally Lineage.release(bOwners)
     }
 
     /** Accumulated per-batch novelty rows — backed by the delta spool,
       * valid until the next fold. None before any batch. */
-    def current: Option[DataFrame] =
-      outDl.filter(!_.isEmpty).map(_.read)
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(idxDl.exists(!_.isEmpty), "StreamingNovelty")
-      idxDl.get.saveTo(s"$path/index")
-      outDl.get.saveTo(s"$path/outputs")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(idxDl.isEmpty && outDl.isEmpty, "StreamingNovelty")
-      idxDl = Some(new DeltaFrame(spark, "novelty-idx",
-        spoolDir = spoolDir.map(d => s"$d/index")))
-      outDl = Some(new DeltaFrame(spark, "novelty-out",
-        spoolDir = spoolDir.map(d => s"$d/outputs")))
-      idxDl.get.loadFrom(s"$path/index")
-      outDl.get.loadFrom(s"$path/outputs")
-    }
-
-    def unpersist(): Unit = synchronized {
-      Seq(idxDl, outDl).foreach(_.foreach(_.delete()))
-      idxDl = None; outDl = None
-    }
+    def current: Option[DataFrame] = outputs.contents
   }
 
   /** Standing cross-document line dedup over a document stream — the
@@ -1177,13 +909,15 @@ object StructuredStreams {
     * every rewrite so far. */
   final class StreamingLineDedup(idCol: String, textCol: String,
       sep: String = "\n", compactEvery: Int = 64,
-      spoolDir: Option[String] = None) {
-    @volatile private var idxDl: Option[DeltaFrame] = None
-    @volatile private var outDl: Option[DeltaFrame] = None
+      spoolDir: Option[String] = None) extends StandingFold {
+    private val index =
+      new Spool("index", "linededup-idx", compactEvery, spoolDir)
+    private val outputs =
+      new Spool("outputs", "linededup-out", compactEvery, spoolDir)
 
     /** Live generation counts (index, outputs) — spec observability. */
     def generationCounts: Seq[Int] =
-      Seq(idxDl, outDl).flatten.map(_.generationCount)
+      Seq(index, outputs).flatMap(_.spool).map(_.generationCount)
 
     /** Per-fold work attribution (`graft.debug.foldstats` turns the
       * counters on): batch docs, distinct batch lines (the appended
@@ -1196,20 +930,16 @@ object StructuredStreams {
     @volatile private var foldStats: Option[LineFoldStats] = None
     def lastFoldStats: Option[LineFoldStats] = foldStats
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val D = graft.pipeline.Dedup
-      if (idxDl.isEmpty) {
-        idxDl = Some(new DeltaFrame(batch.sparkSession, "linededup-idx",
-          compactEvery, spoolDir.map(d => s"$d/index")))
-        outDl = Some(new DeltaFrame(batch.sparkSession, "linededup-out",
-          compactEvery, spoolDir.map(d => s"$d/outputs")))
-      }
+      val spark = batch.sparkSession
+      val (idx, out) = (index(spark), outputs(spark))
       val b = D.buildLineIndex(batch, col(idCol), col(textCol), sep)
       // batch partial pinned once: it is both appended (parquet write)
       // and the semi-filter vocabulary below
       val bOwners = b.owners.localCheckpoint(true)
       try {
-        idxDl.get.append(bOwners)
+        idx.append(bOwners)
         // standing owners for exactly this batch's hashes: min over
         // generations, semi-filtered BEFORE the aggregation so the
         // shuffle is ∝ batch matches, not the standing index. A
@@ -1224,7 +954,7 @@ object StructuredStreams {
         // min/max or bucket pruning); output is identical — the bloom
         // passes a superset and the semi-join stays exact.
         val nb = math.max(bOwners.count(), 1L)
-        val standing = graft.pipeline.Joins.bloomReduce(idxDl.get.read,
+        val standing = graft.pipeline.Joins.bloomReduce(idx.read,
           "line_hash",
           graft.pipeline.Joins.keyBloom(bOwners, "line_hash", nb, 0.01))
         val ownersNow = standing
@@ -1232,40 +962,17 @@ object StructuredStreams {
             "left_semi")
           .groupBy(col("line_hash")).agg(min(col("owner_key"))
             .as("owner_key"))
-        val out = D.dedupLinesWithIndex(batch, col(idCol), col(textCol),
-          D.LineIndex(ownersNow), sep)
-        outDl.get.append(out)
+        out.append(D.dedupLinesWithIndex(batch, col(idCol), col(textCol),
+          D.LineIndex(ownersNow), sep))
         if (sys.props.contains("graft.debug.foldstats"))
           foldStats = Some(LineFoldStats(batch.count(), nb,
-            ownersNow.count(), idxDl.get.generationCount))
-      } finally releaseCheckpoint(bOwners)
+            ownersNow.count(), idx.generationCount))
+      } finally Lineage.release(bOwners)
     }
 
     /** Accumulated rewrites — backed by the delta spool, valid until
       * the next fold. None before any batch. */
-    def current: Option[DataFrame] =
-      outDl.filter(!_.isEmpty).map(_.read)
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(idxDl.exists(!_.isEmpty), "StreamingLineDedup")
-      idxDl.get.saveTo(s"$path/index")
-      outDl.get.saveTo(s"$path/outputs")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(idxDl.isEmpty && outDl.isEmpty, "StreamingLineDedup")
-      idxDl = Some(new DeltaFrame(spark, "linededup-idx",
-        spoolDir = spoolDir.map(d => s"$d/index")))
-      outDl = Some(new DeltaFrame(spark, "linededup-out",
-        spoolDir = spoolDir.map(d => s"$d/outputs")))
-      idxDl.get.loadFrom(s"$path/index")
-      outDl.get.loadFrom(s"$path/outputs")
-    }
-
-    def unpersist(): Unit = synchronized {
-      Seq(idxDl, outDl).foreach(_.foreach(_.delete()))
-      idxDl = None; outDl = None
-    }
+    def current: Option[DataFrame] = outputs.contents
   }
 
   /** Standing conversion funnel over an event stream — the streaming
@@ -1307,20 +1014,37 @@ object StructuredStreams {
     * reached step 1 — |keys| × k longs, re-pinned per fold, superseded
     * generations released through Lineage. */
   final class StreamingFunnel(key: String, ts: String,
-      steps: Seq[Column], windowMs: Option[Long] = None) {
+      steps: Seq[Column], windowMs: Option[Long] = None)
+      extends StandingFold {
     require(steps.nonEmpty, "need at least one funnel step")
-    @volatile private var state: Option[DataFrame] = None
-    // global high-water mark of folded event time (ms) — the FAST-PATH
+    private val state = new Pinned("state")
+    // Both fold-boundary watermarks below are slots, so they travel
+    // with the state: a restore that forgot them would accept a
+    // boundary-straddling batch the saved instance would have rejected.
+    //
+    // Global high-water mark of folded event time (ms) — the FAST-PATH
     // fold boundary: a batch starting strictly after it cannot
-    // straddle any key's boundary, so the per-key check is skipped
-    @volatile private var maxSeenMs: Option[Long] = None
+    // straddle any key's boundary, so the per-key check is skipped.
+    private final class Watermark extends Slot("watermark") {
+      @volatile var ms: Option[Long] = None
+      def isEmpty: Boolean = ms.isEmpty
+      override def ready: Boolean = true
+      def save(spark: SparkSession, path: String): Unit = {
+        import spark.implicits._
+        ms.toSeq.toDF("max_ms").write.mode("overwrite").parquet(path)
+      }
+      def load(spark: SparkSession, path: String): Unit =
+        ms = spark.read.parquet(path).collect().headOption.map(_.getLong(0))
+      def release(): Unit = ms = None
+    }
+    private val maxSeen = new Watermark
     // per-key high-water marks (__k, __wm) over ALL folded events —
     // consulted only when a batch overlaps the global mark, to reject
     // exactly the same-key straddles (different-key overlap is fine).
     // O(keys seen) standing rows, the same order as the funnel state.
-    @volatile private var keyWm: Option[DataFrame] = None
+    private val keyWm = new Pinned("wmkeys")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val n = steps.length
       val tsMs =
         floor(graft.pipeline.Temporal.tsUs(batch, ts) / 1000L)
@@ -1341,7 +1065,7 @@ object StructuredStreams {
         .agg(min(col("__ts")).as("__blo"), max(col("__ts")).as("__bhi"))
       if (!mm.isNullAt(0)) {
         val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        if (maxSeenMs.exists(lo <= _)) keyWm.foreach { wm =>
+        if (maxSeen.ms.exists(lo <= _)) keyWm.frame.foreach { wm =>
           // slow path: batch overlaps the global mark — straddle iff
           // some KEY's batch-min is not strictly after that key's
           // standing max (different-key overlap folds exactly)
@@ -1360,21 +1084,19 @@ object StructuredStreams {
               s"batch or replay from storage"
           })
         }
-        maxSeenMs = Some(math.max(hi, maxSeenMs.getOrElse(Long.MinValue)))
+        maxSeen.ms =
+          Some(math.max(hi, maxSeen.ms.getOrElse(Long.MinValue)))
       }
       // merge the batch's per-key maxima into the standing watermark
-      val wm1 = keyWm match {
+      keyWm.replace(keyWm.frame match {
         case Some(wm) => wm.join(perKey.select(col("__k"),
             col("__bhi")), Seq("__k"), "full_outer")
           .select(col("__k"),
             greatest(coalesce(col("__wm"), lit(Long.MinValue)),
               coalesce(col("__bhi"), lit(Long.MinValue))).as("__wm"))
         case None => perKey.select(col("__k"), col("__bhi").as("__wm"))
-      }
-      val wmPinned = wm1.localCheckpoint(true)
-      keyWm.foreach(releaseCheckpoint)
-      keyWm = Some(wmPinned)
-      val s0 = state.getOrElse(
+      })
+      val s0 = state.frame.getOrElse(
         b.select(col("__k") +:
           (1 to n).map(i => lit(null).cast("long").as(s"t_$i")): _*)
           .where(lit(false)))
@@ -1400,19 +1122,17 @@ object StructuredStreams {
             if (j == i) coalesce(col(s"t_$j"), col(s"m_$j")).as(s"t_$j")
             else col(s"t_$j")): _*)
       }
-      val pinned = acc.localCheckpoint(true)
-      state.foreach(releaseCheckpoint)
-      state = Some(pinned)
+      state.replace(acc)
       // a rejected batch (fold-boundary require) or any mid-fold
       // failure must not leave the batch pin alive — release is
       // idempotent, so the success path shares the finally
-      } finally releaseCheckpoint(b)
+      } finally Lineage.release(b)
     }
 
     /** Standing per-key funnel in the one-shot output shape
       * (key, steps_completed, t_1..t_k, elapsed_ms); None before any
       * batch. */
-    def current: Option[DataFrame] = state.map { st =>
+    def current: Option[DataFrame] = state.frame.map { st =>
       val tCols = (1 to steps.length).map(i => col(s"t_$i"))
       val completed = tCols.map(c =>
         when(c.isNotNull, 1L).otherwise(0L)).reduce(_ + _)
@@ -1423,112 +1143,13 @@ object StructuredStreams {
         (lastReached - col("t_1")).as("elapsed_ms"): _*)
     }
 
-    def save(path: String): Unit = synchronized {
-      requireSaved(state.nonEmpty, "StreamingFunnel")
-      saveFrame(state.get, s"$path/state")
-      // the enforced fold-boundary watermarks travel with the state —
-      // a restore that forgot them would accept a boundary-straddling
-      // batch the saved instance would have rejected
-      val spark = state.get.sparkSession
-      import spark.implicits._
-      saveFrame(maxSeenMs.toSeq.toDF("max_ms"), s"$path/watermark")
-      keyWm.foreach(wm => saveFrame(wm, s"$path/wmkeys"))
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(state.isEmpty && maxSeenMs.isEmpty, "StreamingFunnel")
-      val st = loadFrame(spark, s"$path/state")
-      val want = "__k" +: (1 to steps.length).map(i => s"t_$i")
-      require(st.columns.toSeq == want,
-        s"saved funnel state columns ${st.columns.mkString(",")} do " +
+    override protected def restored(): Unit = {
+      val cols = state.frame.get.columns.toSeq
+      require(cols == "__k" +: (1 to steps.length).map(i => s"t_$i"),
+        s"saved funnel state columns ${cols.mkString(",")} do " +
           s"not match this instance's ${steps.length} steps")
-      state = Some(st)
-      maxSeenMs = spark.read.parquet(s"$path/watermark")
-        .collect().headOption.map(_.getLong(0))
-      keyWm = Some(loadFrame(spark, s"$path/wmkeys"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      state.foreach(releaseCheckpoint); state = None; maxSeenMs = None
-      keyWm.foreach(releaseCheckpoint); keyWm = None
     }
   }
-
-  /** Attach funnel maintenance to an event stream. */
-  def maintainFunnel(stream: DataFrame, funnel: StreamingFunnel,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        funnel.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-
-  /** Attach line-dedup maintenance to a document stream. */
-  def maintainLineDedup(stream: DataFrame, dedup: StreamingLineDedup,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        dedup.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-
-  /** Attach novelty maintenance to a document stream. */
-  def maintainNovelty(stream: DataFrame, novelty: StreamingNovelty,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        novelty.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-
-  /** Attach quota-sample maintenance to a streaming DataFrame. */
-  /** Wire a [[StreamingCube]] to a stream via foreachBatch — same
-    * shape as [[maintainSketches]]. */
-  def maintainCube(stream: DataFrame, cube: StreamingCube,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        cube.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-
-  def maintainQuotaSample(stream: DataFrame,
-      sample: StreamingQuotaSample, checkpointDir: String)
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sample.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-
-  /** Attach sketch maintenance to a streaming DataFrame: one
-    * `foreachBatch` folding each micro-batch into `sketches`. The
-    * stream carries the raw rows; the fold is the only aggregation. */
-  def maintainSketches(stream: DataFrame, sketches: StreamingSketches,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sketches.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
 
   /** Standing boilerplate dictionary over a document stream: each
     * micro-batch's (group, line, df) counts fold into the standing
@@ -1546,11 +1167,13 @@ object StructuredStreams {
     * batch counts on the concatenated stream. */
   final class StreamingBoilerplate(idCol: String, textCol: String,
       groupCol: String, lineTokens: Int = 2, compactEvery: Int = 64,
-      spoolDir: Option[String] = None) {
-    @volatile private var cntDl: Option[DeltaFrame] = None
+      spoolDir: Option[String] = None) extends StandingFold {
+    private val dict =
+      new Spool("state", "boiler-cnt", compactEvery, spoolDir, "counts")
 
     /** Live dictionary-spool generation count (spec observability). */
-    def generationCount: Int = cntDl.map(_.generationCount).getOrElse(0)
+    def generationCount: Int =
+      dict.spool.map(_.generationCount).getOrElse(0)
 
     /** Per-fold work attribution (`graft.debug.foldstats` turns the
       * counters on): batch docs and the batch partial's (group, line)
@@ -1562,54 +1185,23 @@ object StructuredStreams {
     @volatile private var foldStats: Option[BoilerFoldStats] = None
     def lastFoldStats: Option[BoilerFoldStats] = foldStats
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val b = graft.pipeline.TextAnalysis.boilerplateCounts(batch,
         col(idCol), col(textCol), col(groupCol), lineTokens)
-      if (cntDl.isEmpty)
-        cntDl = Some(new DeltaFrame(batch.sparkSession, "boiler-cnt",
-          compactEvery, spoolDir.map(d => s"$d/counts")))
-      cntDl.get.append(b)
+      val d = dict(batch.sparkSession)
+      d.append(b)
       if (sys.props.contains("graft.debug.foldstats"))
         foldStats = Some(BoilerFoldStats(batch.count(), b.count(),
-          cntDl.get.generationCount))
+          d.generationCount))
     }
 
     /** The folded standing dictionary (grp, line_text, line_df) —
       * computed lazily over the spool's generations, valid until the
       * next fold. None before any batch. */
     def current: Option[DataFrame] =
-      cntDl.filter(!_.isEmpty).map(_.read
-        .groupBy(col("grp"), col("line_text"))
+      dict.contents.map(_.groupBy(col("grp"), col("line_text"))
         .agg(sum(col("line_df")).as("line_df")))
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(cntDl.exists(!_.isEmpty), "StreamingBoilerplate")
-      cntDl.get.saveTo(s"$path/state")
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(cntDl.isEmpty, "StreamingBoilerplate")
-      cntDl = Some(new DeltaFrame(spark, "boiler-cnt",
-        spoolDir = spoolDir.map(d => s"$d/counts")))
-      cntDl.get.loadFrom(s"$path/state")
-    }
-
-    def unpersist(): Unit = synchronized {
-      cntDl.foreach(_.delete()); cntDl = None
-    }
   }
-
-  /** Attach boilerplate-dictionary maintenance to a document stream. */
-  def maintainBoilerplate(stream: DataFrame,
-      dict: StreamingBoilerplate, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        dict.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
 
   /** Standing CDC chunk index over a document stream: each micro-batch
     * deduplicates against the index folded over EVERYTHING SEEN SO FAR
@@ -1619,68 +1211,33 @@ object StructuredStreams {
     * `cdcDeduplicate` over the concatenated stream
     * (`StreamingChunkDedupSpec`). min-fold is associative, so the
     * index needs no disjointness assumption at all. */
-  final class StreamingChunkDedup(idCol: String, textCol: String) {
-    @volatile private var index
-        : Option[graft.pipeline.TextAnalysis.ChunkIndex] = None
-    @volatile private var outputs: Option[DataFrame] = None
+  final class StreamingChunkDedup(idCol: String, textCol: String)
+      extends StandingFold {
+    private val index = new Pinned("index")
+    // the accumulated outputs are a pin too — unpersist releases its
+    // blocks with the index's, or a standing session leaks them
+    private val outputs = new Pinned("outputs")
 
-    def fold(batch: DataFrame): Unit = synchronized {
+    protected def foldBatch(batch: DataFrame): Unit = {
       val T = graft.pipeline.TextAnalysis
       val b = T.buildChunkIndex(batch, col(idCol), col(textCol))
-      val folded = index match {
-        case None     => b
-        case Some(i0) => T.foldChunkIndex(i0, b)
-      }
-      val pinned = T.ChunkIndex(folded.firsts.localCheckpoint(true))
-      index.foreach(i => releaseCheckpoint(i.firsts))
-      index = Some(pinned)
+      index.replace(index.frame match {
+        case None     => b.firsts
+        case Some(i0) => T.foldChunkIndex(T.ChunkIndex(i0), b).firsts
+      })
       val out = T.cdcDeduplicateWithIndex(batch, col(idCol),
-        col(textCol), pinned)
+        col(textCol), T.ChunkIndex(index.frame.get))
       // re-pin the ACCUMULATED frame each fold (not just the batch):
       // a union of N checkpointed frames still carries N plan leaves,
       // so an always-on stream would grow planning cost linearly
-      val acc = (outputs match {
+      outputs.replace(outputs.frame match {
         case None     => out
         case Some(o0) => o0.unionByName(out)
-      }).localCheckpoint(true)
-      outputs.foreach(releaseCheckpoint)
-      outputs = Some(acc)
+      })
     }
 
-    def current: Option[DataFrame] = outputs
-
-    def save(path: String): Unit = synchronized {
-      requireSaved(index.nonEmpty, "StreamingChunkDedup")
-      saveFrame(index.get.firsts, s"$path/index")
-      outputs.foreach(o => saveFrame(o, s"$path/outputs"))
-    }
-
-    def restore(spark: SparkSession, path: String): Unit = synchronized {
-      requireFresh(index.isEmpty && outputs.isEmpty, "StreamingChunkDedup")
-      index = Some(graft.pipeline.TextAnalysis.ChunkIndex(
-        loadFrame(spark, s"$path/index")))
-      outputs = Some(loadFrame(spark, s"$path/outputs"))
-    }
-
-    def unpersist(): Unit = synchronized {
-      index.foreach(i => releaseCheckpoint(i.firsts)); index = None
-      // the accumulated outputs frame is localCheckpoint'd per fold —
-      // release its blocks too, or a standing session leaks them
-      outputs.foreach(releaseCheckpoint); outputs = None
-    }
+    def current: Option[DataFrame] = outputs.frame
   }
-
-  /** Attach chunk-level dedup to a document stream. */
-  def maintainChunkDedup(stream: DataFrame, dedup: StreamingChunkDedup,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        dedup.fold(batch.toDF())
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
 
   // ---- stateful comparator as flatMapGroupsWithState -----------------
 

@@ -28,7 +28,9 @@ class DriverBoundSpec extends AnyFunSuite {
     * - SparkEntry: gate-entry orchestration — split cuts, t0 offsets,
     *   w2's one-row-per-fire emission tuples; all O(1) or fire-count.
     * - StructuredStreams: per-stratum/bin count maps (rows = strata)
-    *   and restored metadata — bounded driver state of the folds.
+    *   and the restored funnel watermark (one row) — bounded driver
+    *   state of the folds.
+    * - StandingFold: a restored count-map slot (rows = strata).
     * - Tokenizer: vocab/merge tables (rows = vocab size, capped).
     * - Sampling: stratum/bin histograms + two-phase broadcast partials.
     * - Ann: centroids and PQ codebooks (k×d / m×ksub model state).
@@ -46,7 +48,8 @@ class DriverBoundSpec extends AnyFunSuite {
     *   streaming output contract (WS/SSE fan-out drains it). */
   private val audited = Map(
     "SparkEntry.scala" -> 9,
-    "streaming/StructuredStreams.scala" -> 4,
+    "streaming/StructuredStreams.scala" -> 3,
+    "streaming/StandingFold.scala" -> 1,
     "pipeline/Tokenizer.scala" -> 4,
     "pipeline/Sampling.scala" -> 4,
     "pipeline/Ann.scala" -> 3,

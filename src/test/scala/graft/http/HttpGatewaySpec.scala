@@ -144,6 +144,24 @@ class HttpGatewaySpec extends AnyFunSuite {
     }
   }
 
+  test("a keep-alive client makes REST calls in a row through the " +
+      "gateway") {
+    withServers { (_, base) =>
+      // HTTP/1.1 client that pools its connection unless a response
+      // says `Connection: close` — the gateway closes after every
+      // relayed response, so it must say so
+      val c = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build()
+      val health = get(c, s"http://$base/health")
+      assert(health.statusCode() === 200)
+      assert(health.headers().firstValue("connection").orElse("")
+        .equalsIgnoreCase("close"))
+      assert(post(c, s"http://$base/api/queries", registerBody)
+        .statusCode() === 201)
+      assert(get(c, s"http://$base/api/queries/q1").statusCode() === 200)
+    }
+  }
+
   test("chunked request bodies are decoded and relayed re-framed as " +
       "Content-Length") {
     withServers { (c, base) =>

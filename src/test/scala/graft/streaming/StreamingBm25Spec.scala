@@ -31,7 +31,7 @@ class StreamingBm25Spec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val dir = Files.createTempDirectory("bm25-stream")
     val index = new StructuredStreams.StreamingBm25("id", "text")
-    val q = StructuredStreams.maintainBm25(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("id", "text"), index,
       dir.resolve("ckpt").toString)
     try {

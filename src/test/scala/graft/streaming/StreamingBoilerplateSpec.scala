@@ -36,7 +36,7 @@ class StreamingBoilerplateSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("boiler-stream")
     val dict = new StructuredStreams.StreamingBoilerplate(
       "doc_id", "text", "source")
-    val q = StructuredStreams.maintainBoilerplate(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("doc_id", "source", "text")
         .select(col("doc_id"), col("text"), col("source")),
       dict, dir.resolve("ckpt").toString)

@@ -33,7 +33,7 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val dir = Files.createTempDirectory("cdc-stream")
     val dedup = new StructuredStreams.StreamingChunkDedup("doc_id", "text")
-    val q = StructuredStreams.maintainChunkDedup(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("doc_id", "text"), dedup,
       dir.resolve("ckpt").toString)
     try {

@@ -31,7 +31,7 @@ class StreamingCubeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("cube-stream")
     val cube = new StructuredStreams.StreamingCube(
       Seq("src", "lang"), "chars")
-    val q = StructuredStreams.maintainCube(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("src", "lang", "chars"), cube,
       dir.resolve("ckpt").toString)
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size

@@ -30,7 +30,7 @@ class StreamingDsirSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("dsir-stream")
     val model = new StructuredStreams.StreamingDsir(
       "id", "text", "tgt", buckets = 64)
-    val q = StructuredStreams.maintainDsir(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("id", "text", "tgt"), model,
       dir.resolve("ckpt").toString)
     try {

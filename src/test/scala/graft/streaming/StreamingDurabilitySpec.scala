@@ -226,19 +226,51 @@ class StreamingDurabilitySpec extends AnyFunSuite {
 
   test("fail-loud contracts: save before any fold; restore into a " +
       "non-fresh instance") {
-    val empty = new StructuredStreams.StreamingQuotaSample(
-      "lang", "doc_id", 5)
-    val e1 = intercept[IllegalStateException] { empty.save(tmp("x")) }
-    assert(e1.getMessage.contains("nothing to save"))
+    import spark.implicits._
+    val events = Seq((1L, 1L, "view"), (2L, 1L, "click"), (3L, 2L, "view"))
+      .toDF("ms", "user", "kind")
+      .select(col("user"), timestamp_millis(col("ms")).as("ts"), col("kind"))
+    val S = StructuredStreams
+    val d = docs(0, 10)
+    // every standing fold: (name, fresh instance, a batch it folds)
+    val folds: Seq[(String, () => StandingFold, DataFrame)] = Seq(
+      ("Sketches", () => new S.StreamingSketches(Seq("lang"), "doc_id"), d),
+      ("Bm25", () => new S.StreamingBm25("doc_id", "text"), d),
+      ("Dsir", () => new S.StreamingDsir("doc_id", "text", "is_target",
+        buckets = 64), d),
+      ("Cube", () => new S.StreamingCube(Seq("lang"), "doc_id"), d),
+      ("QuotaSample", () => new S.StreamingQuotaSample("lang", "doc_id", 5),
+        d),
+      ("TemperatureSample", () => new S.StreamingTemperatureSample(
+        "lang", "doc_id", 0.5, 40L), d),
+      ("MatchedSample", () => new S.StreamingMatchedSample("lang", "doc_id",
+        Seq("en" -> 2L, "de" -> 1L, "fr" -> 1L), 30L), d),
+      ("ContainmentDedup", () => new S.StreamingContainmentDedup("doc_id",
+        "text", minPpm = 800000L), d),
+      ("Novelty", () => new S.StreamingNovelty("doc_id", "text"), d),
+      ("LineDedup", () => new S.StreamingLineDedup("doc_id", "text", " "), d),
+      ("Funnel", () => new S.StreamingFunnel("user", "ts",
+        Seq(col("kind") === "view", col("kind") === "click")), events),
+      ("Boilerplate", () => new S.StreamingBoilerplate("doc_id", "text",
+        "lang"), d),
+      ("ChunkDedup", () => new S.StreamingChunkDedup("doc_id", "text"), d))
+    assert(folds.size === 13)
+    folds.foreach { case (name, fresh, batch) =>
+      val e1 = intercept[IllegalStateException] { fresh().save(tmp("x")) }
+      assert(e1.getMessage.contains("nothing to save"), name)
 
-    val live = new StructuredStreams.StreamingQuotaSample(
-      "lang", "doc_id", 5)
-    live.fold(docs(0, 10))
-    val dir = tmp("live"); live.save(dir)
-    val e2 = intercept[IllegalArgumentException] {
+      val live = fresh()
+      live.fold(batch)
+      val dir = tmp(name); live.save(dir)
+      val e2 = intercept[IllegalArgumentException] {
+        live.restore(spark, dir)
+      }
+      assert(e2.getMessage.contains("fresh instance"), name)
+      // unpersist releases every slot and leaves the instance fresh
+      live.unpersist()
       live.restore(spark, dir)
+      val again = tmp(name); live.save(again)
+      live.unpersist()
     }
-    assert(e2.getMessage.contains("fresh instance"))
-    live.unpersist()
   }
 }

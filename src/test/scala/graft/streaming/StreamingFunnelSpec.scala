@@ -160,7 +160,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("funnel-stream")
     val f = new StructuredStreams.StreamingFunnel("user", "ts", steps,
       windowMs = Some(600_000L))
-    val q = StructuredStreams.maintainFunnel(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("eid", "user", "ms", "kind")
         .select(col("eid"), col("user"),
           timestamp_millis(col("ms")).as("ts"), col("kind")),

@@ -29,7 +29,7 @@ class StreamingLineDedupSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val dir = Files.createTempDirectory("linededup-stream")
     val sld = new StructuredStreams.StreamingLineDedup("doc_id", "text")
-    val q = StructuredStreams.maintainLineDedup(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("doc_id", "text"), sld,
       dir.resolve("ckpt").toString)
     try {

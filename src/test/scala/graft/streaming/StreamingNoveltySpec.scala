@@ -29,7 +29,7 @@ class StreamingNoveltySpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val dir = Files.createTempDirectory("novelty-stream")
     val nov = new StructuredStreams.StreamingNovelty("doc_id", "text")
-    val q = StructuredStreams.maintainNovelty(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("doc_id", "text"), nov,
       dir.resolve("ckpt").toString)
     try {

@@ -31,7 +31,7 @@ class StreamingSampleSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("quota-stream")
     val sample = new StructuredStreams.StreamingQuotaSample(
       "stratum", "id", n = 5)
-    val q = StructuredStreams.maintainQuotaSample(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("stratum", "id"), sample,
       dir.resolve("ckpt").toString)
     try {

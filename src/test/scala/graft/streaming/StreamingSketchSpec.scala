@@ -35,7 +35,7 @@ class StreamingSketchSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("sketch-stream")
     val sketches = new StructuredStreams.StreamingSketches(
       Seq("g"), "v")
-    val q = StructuredStreams.maintainSketches(
+    val q = StructuredStreams.maintain(
       input.toDS().toDF("g", "v"), sketches,
       dir.resolve("ckpt").toString)
     try {
