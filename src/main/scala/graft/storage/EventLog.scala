@@ -22,10 +22,13 @@ import org.apache.spark.sql.functions._
   *                            `timestamp` (row-group + page pruning)
   *   - segment discovery    → Parquet directory listing (free)
   *
-  * Scale notes: append is distributed (no driver materialization); a
-  * 1000-executor cluster writes each micro-batch in parallel into
-  * bucket directories, and time-range queries touch only overlapping
-  * buckets regardless of total log size.
+  * Scale notes: append never materializes a distributed input on the
+  * driver — a 1000-executor cluster writes each micro-batch in parallel
+  * into bucket directories — while a batch that is ALREADY on the
+  * driver (a local relation) is written in-process without a Spark job
+  * (see [[append]] for the two paths, the rule that picks one, and the
+  * crash and visibility argument). Time-range queries touch only
+  * overlapping buckets regardless of total log size.
   *
   * @param bucketMs partition granularity (default 1 h, mirroring a
   *   "segment per time slice"; coarse enough to avoid small-file
@@ -263,15 +266,6 @@ final class EventLog(
     }
   }
 
-  /** Append a canonical quads DataFrame (timestamp, subject, predicate,
-    * object, graph). Equivalent of `write_rdf` + background flush
-    * (`segmented_storage.rs:478-657`): the write commit IS the flush.
-    *
-    * Tuned for the streaming case: a micro-batch is time-local and
-    * touches 1–2 bucket directories, so the dynamic-partition writer
-    * opens few files. For backfills spanning many buckets use
-    * [[appendBulk]].
-    */
   /** Floor-division bucket id as a SQL expression. SQL `div` truncates
     * toward zero, which would disagree with `query()`'s
     * `math.floorDiv` range arithmetic on NEGATIVE timestamps
@@ -279,7 +273,43 @@ final class EventLog(
   private def bucketExpr =
     expr(s"(timestamp - pmod(timestamp, ${bucketMs}L)) div ${bucketMs}L")
 
-  def append(quads: DataFrame): Unit = {
+  /** Append a canonical quads DataFrame (timestamp, subject, predicate,
+    * object, graph). Equivalent of `write_rdf` + background flush
+    * (`segmented_storage.rs:478-657`): the file commit IS the flush.
+    *
+    * Two write paths, picked by the input's optimized plan alone:
+    *
+    *   - DRIVER-RESIDENT input — a `LocalRelation` holding exactly the
+    *     five canonical columns (every [[graft.core.RdfEvent.toDF]]
+    *     batch: the API's live events, `ReplayBus` flushes) — is
+    *     already on the driver, so a Spark write job (plan, one task,
+    *     commit protocol: ~170 ms for a 200-quad batch) would only move
+    *     it back to the driver's own disk. It is written in-process
+    *     instead, one ts-sorted parquet file per touched bucket, with
+    *     no Spark job ([[appendLocal]], which also gives the crash and
+    *     visibility argument).
+    *   - DISTRIBUTED input (`foreachBatch` frames, streaming sinks,
+    *     anything that is not a local relation) takes the Spark writer,
+    *     the only path that can reach rows on executors.
+    *
+    * Both produce the same layout — `ts_bucket=<b>/` directories of
+    * ts-sorted parquet files with the log's compression and dictionary
+    * encoding off — so readers, the point index and compaction cannot
+    * tell the paths apart. For backfills spanning many buckets use
+    * [[appendBulk]].
+    */
+  def append(quads: DataFrame): Unit = localQuads(quads) match {
+    case Some(batch) => appendLocal(batch)
+    case None =>
+      appendDistributed(quads)
+      invalidate()
+      maybeAutoCompact()
+  }
+
+  /** The Spark-writer append (distributed inputs). Tuned for the
+    * streaming case: a micro-batch is time-local and touches 1–2 bucket
+    * directories, so the dynamic-partition writer opens few files. */
+  private def appendDistributed(quads: DataFrame): Unit = {
     // live micro-batches are small but often arrive spread over many
     // upstream partitions (a foreachBatch slice keeps its parent's 32);
     // each task then opens a writer per bucket dir it touches, and the
@@ -308,6 +338,64 @@ final class EventLog(
       .mode(SaveMode.Append)
       .partitionBy(BucketCol)
       .parquet(path)
+  }
+
+  /** Append a driver-resident batch (see [[append]] and
+    * [[EventLog.localQuads]]) without a Spark job: group by bucket,
+    * sort each group by timestamp, write one parquet file per bucket
+    * with Spark's own parquet output writer — set up by the same
+    * `ParquetUtils.prepareWrite` a Spark write task uses, so schema,
+    * footer and codec are the ones Spark writes.
+    *
+    * Publication is two-phase. Every bucket's file is first written
+    * under a hidden temporary name ([[EventLog.AppendTempPrefix]]) in
+    * its bucket directory; only after ALL writers closed are the files
+    * renamed to their visible `part-` names. A failed write deletes
+    * every temporary file of the batch, so a failed append leaves no
+    * row visible and the caller may retry it. A crash before the
+    * renames leaves hidden files that no reader admits and that the
+    * next [[compact]] sweeps once they are older than the grace period.
+    * The renames themselves are not one atomic step: a batch spanning
+    * several buckets becomes visible bucket by bucket, as a Spark job
+    * commit moves its task files one by one. */
+  private[graft] def appendLocal(batch: LocalQuads): Unit = {
+    val sqlConf = spark.sessionState.conf
+    // the options of every Spark write of the log (see above)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConfWithOptions(
+        Map("parquet.enable.dictionary" -> "false")))
+    val factory = org.apache.spark.sql.execution.datasources.parquet
+      .ParquetUtils.prepareWrite(sqlConf, job, batch.schema,
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetOptions(Map("compression" -> compression), sqlConf))
+    val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID(
+        "graft-append", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(job.getConfiguration)
+    val ext = factory.getFileExtension(task)
+    val staged = scala.collection.mutable.ArrayBuffer
+      .empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
+    try {
+      batch.rows.groupBy(r => math.floorDiv(r.getLong(0), bucketMs))
+        .toSeq.sortBy(_._1).foreach { case (bucket, rows) =>
+          val dir = new org.apache.hadoop.fs.Path(root, s"$BucketCol=$bucket")
+          val name = s"part-00000-${java.util.UUID.randomUUID()}.c000$ext"
+          val tmp = new org.apache.hadoop.fs.Path(dir, AppendTempPrefix + name)
+          staged += tmp -> new org.apache.hadoop.fs.Path(dir, name)
+          val writer = factory.newInstance(tmp.toString, batch.schema, task)
+          try rows.sortBy(_.getLong(0)).foreach(writer.write)
+          finally writer.close()
+        }
+    } catch {
+      case t: Throwable =>
+        staged.foreach { case (tmp, _) => fs.delete(tmp, false) }
+        throw t
+    }
+    staged.foreach { case (tmp, visible) =>
+      require(fs.rename(tmp, visible),
+        s"failed to publish appended file $visible")
+    }
     invalidate()
     maybeAutoCompact()
   }
@@ -481,13 +569,14 @@ final class EventLog(
           .empty[graft.core.RdfEvent]
         try {
           var g = reader.read()
+          // an absent optional value is a null term
+          def str(field: String): String =
+            if (g.getFieldRepetitionCount(field) == 0) null
+            else g.getString(field, 0)
           while (g != null) {
             buf += graft.core.RdfEvent(
               g.getLong("timestamp", 0),
-              g.getString("subject", 0),
-              g.getString("predicate", 0),
-              g.getString("object", 0),
-              g.getString("graph", 0))
+              str("subject"), str("predicate"), str("object"), str("graph"))
             g = reader.read()
           }
         } finally reader.close()
@@ -612,8 +701,7 @@ final class EventLog(
             root, s".compact-stage-${bucketDir.getName}")
           fs.delete(stage, true)
           spark.read
-            .schema(org.apache.spark.sql.types.StructType(
-              LogSchema.fields.filterNot(_.name == BucketCol)))
+            .schema(DataSchema)
             .parquet(live.map(_.getPath.toString): _*)
             .repartition(filesPerBucket)
             .sortWithinPartitions("timestamp")
@@ -670,10 +758,22 @@ final class EventLog(
     * delete the marker too. Deletion order (files, then marker) keeps
     * a crash harmless: a marker whose drops are already gone subtracts
     * nothing. The steady state is one marker + one generation of live
-    * cdata files per compacted bucket. */
+    * cdata files per compacted bucket.
+    *
+    * Also deletes driver-side append temp files (and their checksum
+    * files) older than `olderThanMs`: an append that died between
+    * create and rename left them, hidden and never admitted by a
+    * reader; the grace keeps a concurrent append's file alive. */
   private def vacuumBucket(fs: org.apache.hadoop.fs.FileSystem,
       bucketDir: org.apache.hadoop.fs.Path, olderThanMs: Long): Unit = {
-    val markers = fs.listStatus(bucketDir).filter { e =>
+    val entries = fs.listStatus(bucketDir)
+    entries.foreach { e =>
+      if (e.isFile &&
+          e.getPath.getName.startsWith(EventLog.AppendTempPrefix) &&
+          e.getModificationTime <= olderThanMs)
+        fs.delete(e.getPath, false)
+    }
+    val markers = entries.filter { e =>
       val n = e.getPath.getName
       e.isFile && n.startsWith(EventLog.CompactMarkerPrefix) &&
         n.endsWith(".json")
@@ -737,6 +837,10 @@ object EventLog {
     * committed marker lists them. */
   val CompactDataPrefix = "cdata-"
 
+  /** Temporary-name prefix of a driver-side append's file until its
+    * rename publishes it — `.`-hidden, so no listing admits it. */
+  val AppendTempPrefix = ".append-"
+
   /** How long superseded (tombstoned) files outlive their compaction
     * by default — the window an in-flight reader's captured file
     * snapshot stays fully readable. Vacuumed by the NEXT compact()
@@ -770,6 +874,52 @@ object EventLog {
     * the reference's RAM-resident recent segments. */
   val PointCacheFiles = 8
 
+  /** A driver-resident canonical batch: its rows in canonical column
+    * order (timestamp, subject, predicate, object, graph), and the data
+    * schema the Spark writer would give its file — [[DataSchema]] with
+    * the input's nullability (Spark keeps an input's nullability; a
+    * column holding a null is nullable whatever the plan says). */
+  final case class LocalQuads(
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType) {
+
+    /** Latest timestamp of the batch's rows in `graph`, if any. */
+    def maxTimestamp(graph: String): Option[Long] = {
+      val g = org.apache.spark.unsafe.types.UTF8String.fromString(graph)
+      rows.iterator.filter(r => !r.isNullAt(4) && r.getUTF8String(4) == g)
+        .map(_.getLong(0)).maxOption
+    }
+  }
+
+  /** The rows of a DRIVER-RESIDENT canonical batch, or None. A batch is
+    * driver-resident when its optimized plan is a `LocalRelation` whose
+    * output is exactly the five canonical columns (any order) with no
+    * null timestamp — what [[graft.core.RdfEvent.toDF]] builds. Plan
+    * inspection only: no Spark job, and the rows are the ones the plan
+    * already holds. */
+  def localQuads(df: DataFrame): Option[LocalQuads] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.output.size == graft.core.RdfEvent.schema.size =>
+        // column positions in canonical (RdfEvent.schema) order
+        val fields = graft.core.RdfEvent.schema.fields.toSeq
+        val ord = fields.map(f => l.output.indexWhere(a =>
+          a.name == f.name && a.dataType == f.dataType))
+        if (ord.contains(-1) || l.data.exists(_.isNullAt(ord.head))) None
+        else {
+          val rows = l.data.map(r =>
+            org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+              ord.zip(fields).map { case (i, f) => r.get(i, f.dataType) }))
+          val schema = org.apache.spark.sql.types.StructType(
+            DataSchema.fields.zip(ord).map { case (f, i) =>
+              f.copy(nullable = l.output(i).nullable ||
+                l.data.exists(_.isNullAt(i)))
+            })
+          Some(LocalQuads(rows, schema))
+        }
+      case _ => None
+    }
+
   /** Log schema, partition column last. Passing it to the reader skips
     * per-query schema inference (one footer read + listing job). */
   val LogSchema: org.apache.spark.sql.types.StructType =
@@ -786,4 +936,9 @@ object EventLog {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField(BucketCol,
         org.apache.spark.sql.types.LongType)))
+
+  /** Schema of a data file: [[LogSchema]] without the partition column. */
+  val DataSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      LogSchema.fields.filterNot(_.name == BucketCol))
 }

@@ -119,14 +119,16 @@ final class CompiledLiveStream(
     * distributed log, advances per-stream event time, fires every due
     * window, prunes unreachable buckets.
     *
-    * The per-stream event-time maxima RIDE the append job as observed
-    * metrics (`Dataset.observe` — one global `max(when(graph = s, ts))`
-    * per registered stream, bounded driver metadata) instead of a
-    * separate aggregate-and-collect: at steady fire cadence the
-    * scheduling floor of one extra Spark job per micro-batch is the
-    * dominant live-path cost, so bookkeeping must not buy jobs.
-    * Sentinels are rows like any other — they advance time exactly as
-    * before. */
+    * The per-stream event-time maxima never buy a Spark job of their
+    * own. A driver-resident batch ([[EventLog.localQuads]] — the API's
+    * live events) is appended without any job, so its maxima are read
+    * straight from its local rows. A distributed batch's maxima RIDE
+    * the append job as observed metrics (`Dataset.observe` — one global
+    * `max(when(graph = s, ts))` per registered stream, bounded driver
+    * metadata) instead of a separate aggregate-and-collect: at steady
+    * fire cadence the scheduling floor of one extra Spark job per
+    * micro-batch is the dominant live-path cost. Sentinels are rows
+    * like any other — they advance time exactly as before. */
   def processBatch(batch: DataFrame): Unit = synchronized {
     // apply the prune scheduled at the previous advance HERE — "next
     // micro-batch" must mean every next batch, not the next batch that
@@ -142,21 +144,28 @@ final class CompiledLiveStream(
           if l.data.isEmpty => return
       case _ => ()
     }
-    val obs = new org.apache.spark.sql.Observation()
-    val maxExprs = registeredStreams.zipWithIndex.map { case (s, i) =>
-      max(when(col("graph") === s, col("timestamp"))).as(s"m$i")
+    val batchMax: Seq[Option[Long]] = EventLog.localQuads(batch) match {
+      case Some(local) =>
+        log.appendLocal(local)
+        registeredStreams.map(local.maxTimestamp)
+      case None =>
+        val obs = new org.apache.spark.sql.Observation()
+        val maxExprs = registeredStreams.zipWithIndex.map { case (s, i) =>
+          max(when(col("graph") === s, col("timestamp"))).as(s"m$i")
+        }
+        log.append(batch.observe(obs, maxExprs.head, maxExprs.tail: _*))
+        val metrics = obs.get
+        // null/absent: no rows for this stream in the batch
+        registeredStreams.indices.map(i => metrics.get(s"m$i").collect {
+          case ts: Long => ts })
     }
-    log.append(batch.observe(obs, maxExprs.head, maxExprs.tail: _*))
-    val metrics = obs.get
     var advanced = false
-    registeredStreams.zipWithIndex.foreach { case (uri, i) =>
-      metrics.get(s"m$i") match {
-        case Some(ts: Long) =>
-          streamMaxTs(uri) =
-            math.max(streamMaxTs.getOrElse(uri, Long.MinValue), ts)
-          advanced = true
-        case _ => () // null/absent: no rows for this stream in the batch
-      }
+    registeredStreams.zip(batchMax).foreach {
+      case (uri, Some(ts)) =>
+        streamMaxTs(uri) =
+          math.max(streamMaxTs.getOrElse(uri, Long.MinValue), ts)
+        advanced = true
+      case _ => ()
     }
     if (advanced) advance()
   }
@@ -238,7 +247,7 @@ final class CompiledLiveStream(
   /** All due fires as ONE distributed evaluation: each live window
     * contributes a single time-pruned log scan over the union of its
     * snapshots, rows are assigned to the fires whose `[c-range, c)`
-    * span covers them (broadcast join against the tiny close list),
+    * span covers them (each row paired with the tiny close list),
     * and the compiled plan runs once with the fire id as an
     * orchestration key. The result is pinned with an eager
     * localCheckpoint — the one Spark job — and sliced per fire for the
@@ -255,35 +264,34 @@ final class CompiledLiveStream(
     val closes = due.map(_._2).distinct.sorted
     val minFrom = closes.min - maxRange
     val maxTo = closes.max - 1
-    import spark.implicits._
-    val closesDF = broadcast(closes.toDF(fireCol))
+    // every row paired with every close, as a generator over the
+    // close list held in the plan: the same pairs a nested-loop join
+    // against a broadcast close table gives, without the job that
+    // broadcast costs
+    val everyClose = explode(typedLit(closes))
     val windowParts = parsed.liveWindows.map { lw =>
       log.query(minFrom, maxTo)
         .where(col("graph") === lw.streamName &&
           col("subject") =!= SentinelSubject)
-        .join(closesDF,
-          col("timestamp") >= col(fireCol) - lw.width &&
-            col("timestamp") < col(fireCol))
+        .withColumn(fireCol, everyClose)
+        .where(col("timestamp") >= col(fireCol) - lw.width &&
+          col("timestamp") < col(fireCol))
         .withColumn("graph", lit(lw.windowName))
     }
-    val staticPart = staticDF.map(
-      _.withColumn("graph", lit(DefaultGraph)).crossJoin(closesDF))
+    val staticPart = staticDF.map(_.withColumn("graph", lit(DefaultGraph))
+      .withColumn(fireCol, everyClose))
     val snapshot = (windowParts ++ staticPart).reduce(_ unionByName _)
     // which fires have ANY snapshot row: parity emits nothing at all
     // for an entirely empty snapshot (LiveStreamProcessing.fire's
     // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
-    // closes are skipped, not evaluated to an implicit-group row.
-    // The probe is only paid when it can matter: a query that emits
+    // closes are skipped, not evaluated to an implicit-group row. The
+    // probe is only paid when it can matter: a query that emits
     // nothing on empty input needs no rows-present/no-groups
-    // distinction, and static rows make every close present. When it
-    // IS needed, the probe rides INSIDE the one checkpointed job (a
-    // tagged union with the compiled results) instead of a separate
-    // scan — one scheduling floor per advance, not two
-    // which fires have ANY snapshot row rides the snapshot scan the
-    // compiled plan performs anyway, as an observed collect_set metric
-    // — no second scan, no distinct shuffle, no extra job (collect_set
-    // dedups, so a query whose BGP scans the snapshot several times
-    // still reports each fire once)
+    // distinction, and static rows make every close present. It rides
+    // the snapshot scan the compiled plan performs anyway, as an
+    // observed collect_set metric — no second scan, no distinct
+    // shuffle, no extra job (collect_set dedups, so a query whose BGP
+    // scans the snapshot several times still reports each fire once)
     val needProbe = emitsOnEmptyGroup && !staticHasRows
     val probeObs = new org.apache.spark.sql.Observation()
     val probed =
@@ -295,11 +303,7 @@ final class CompiledLiveStream(
     def snapPresent: Set[Long] =
       if (!emitsOnEmptyGroup) Set.empty[Long]
       else if (staticHasRows) closes.toSet
-      else probeObs.get.values.headOption match {
-        case Some(s: scala.collection.Seq[_]) =>
-          s.iterator.map(_.asInstanceOf[Long]).toSet
-        case _ => Set.empty[Long]
-      }
+      else observedFires(probeObs)
     if (emitsOnEmptyGroup) {
       // single-group aggregates emit AT MOST ONE row per fire — the
       // result set is fire-count-bounded, so it rides the driver like
@@ -335,10 +339,14 @@ final class CompiledLiveStream(
       }
       return
     }
-    val combined = resultPart.localCheckpoint(eager = true)
+    // which fires have solutions rides the checkpoint job the same
+    // way, as an observed collect_set — no distinct, no extra job
+    val resultObs = new org.apache.spark.sql.Observation()
+    val combined = resultPart
+      .observe(resultObs, collect_set(col(fireCol)))
+      .localCheckpoint(eager = true)
     firePins += combined
-    val present = combined.select(col(fireCol)).distinct()
-      .collect().map(_.getLong(0)).toSet
+    val present = observedFires(resultObs)
     due.foreach { case (w, c) =>
       if (present.contains(c))
         resultSink(combined.where(col(fireCol) === c).drop(fireCol),
@@ -348,6 +356,15 @@ final class CompiledLiveStream(
       // whether the snapshot had rows or not
     }
   }
+
+  /** The fire ids an observed `collect_set(__fire_id)` reported. */
+  private def observedFires(obs: org.apache.spark.sql.Observation)
+      : Set[Long] =
+    obs.get.values.headOption match {
+      case Some(s: scala.collection.Seq[_]) =>
+        s.iterator.map(_.asInstanceOf[Long]).toSet
+      case _ => Set.empty[Long]
+    }
 
   /** One distributed evaluation at close `c` — the [[fireBatch]]
     * fallback for a fire whose snapshot has rows but whose keyed

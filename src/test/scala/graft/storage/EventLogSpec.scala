@@ -3,9 +3,15 @@ package graft.storage
 import graft.TestSpark
 import graft.core.RdfEvent
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Storage write/read contract (SURVEY.md §2.1 S5/S8) mirroring the
   * semantics exercised by `/root/reference/tests/stream_bus_test.rs:172,501`
@@ -287,5 +293,228 @@ class EventLogSpec extends AnyFunSuite {
     assert(m.errors === 0)
     assert(log.read().count() === 40)
     assert(seen.sum === 40)
+  }
+
+  // ---- driver-resident appends --------------------------------------
+
+  private def hadoopFs(p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The visible data files of each bucket directory, by bucket name. */
+  private def bucketFiles(log: EventLog): Map[String, Seq[Path]] = {
+    val root = new Path(log.read().inputFiles.head).getParent.getParent
+    hadoopFs(root).listStatus(root).toSeq
+      .filter(_.getPath.getName.startsWith(EventLog.BucketCol + "="))
+      .map(d => d.getPath.getName -> hadoopFs(root).listStatus(d.getPath)
+        .toSeq.map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") &&
+          p.getName.endsWith(".parquet")))
+      .toMap
+  }
+
+  private def footer(p: Path) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p,
+      spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  private def fileTimestamps(p: Path): Seq[Long] = {
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null)
+      .map(_.getLong("timestamp", 0)).toVector
+    finally reader.close()
+  }
+
+  private def rows(log: EventLog) =
+    log.query(Long.MinValue / 4, Long.MaxValue / 4).collect()
+      .map(r => (0 until 5).map(i => Option(r.get(i)).map(_.toString)))
+      .toSeq.sortBy(_.mkString("|"))
+
+  test("an append of RdfEvent.toDF rows launches no Spark job") {
+    val log = freshLog(bucketMs = 1000L)
+    val batches = (0 until 3).map(b => RdfEvent.toDF(spark,
+      (0 until 200).map(i => ev(b * 1000L + i * 7L, i))))
+    batches.foreach(df => assert(EventLog.localQuads(df).isDefined))
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      batches.foreach(log.append)
+      // let the async listener bus drain before reading the counter
+      Thread.sleep(1000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() === 0)
+    assert(log.pointQuery(0L, 10000L).size === 600)
+    assert(log.query(0L, 10000L).count() === 600)
+  }
+
+  test("a driver-side batch spanning two buckets lands as one " +
+      "timestamp-sorted file per bucket") {
+    val log = freshLog(bucketMs = 1000L)
+    val shuffled = new scala.util.Random(3).shuffle(
+      (0 until 40).map(i => ev(500L + i * 31L, i)))
+    log.append(RdfEvent.toDF(spark, shuffled))
+    val files = bucketFiles(log)
+    assert(files.keySet === Set("ts_bucket=0", "ts_bucket=1"))
+    assert(files.values.forall(_.size == 1))
+    files.foreach { case (bucket, Seq(f)) =>
+      val ts = fileTimestamps(f)
+      val b = bucket.stripPrefix("ts_bucket=").toLong
+      assert(ts === ts.sorted)
+      assert(ts.forall(t => math.floorDiv(t, 1000L) == b))
+    }
+    assert(files.values.flatten.toSeq.map(fileTimestamps).map(_.size).sum
+      === 40)
+  }
+
+  test("a driver-side batch whose second bucket fails to write leaves " +
+      "no row of the batch visible, and a retry lands it once") {
+    val dir = Files.createTempDirectory("eventlog-fail").resolve("log")
+    val log = new EventLog(spark, dir.toString, 1000L)
+    log.append(RdfEvent.toDF(spark, (0 until 5).map(i => ev(i * 10L, i))))
+    // a plain file where bucket 1's directory would go: the write into
+    // bucket 1 fails after bucket 0's file was written
+    val blocker = dir.resolve("ts_bucket=1")
+    Files.write(blocker, Array[Byte](1))
+    val batch = RdfEvent.toDF(spark,
+      (5 until 25).map(i => ev(500L + i * 31L, i)))
+    assert(EventLog.localQuads(batch).isDefined)
+    intercept[java.io.IOException](log.append(batch))
+    Files.delete(blocker)
+    assert(log.query(0L, 10000L).count() === 5)
+    assert(log.pointQuery(0L, 10000L).size === 5)
+    // nothing of the failed batch is left on disk, hidden or not
+    val bucket0 = dir.resolve("ts_bucket=0").toFile
+    assert(bucket0.listFiles().map(_.getName)
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet")) === 1)
+    assert(!bucket0.listFiles().exists(
+      _.getName.contains(EventLog.AppendTempPrefix)))
+    log.append(batch)
+    assert(log.query(0L, 10000L).count() === 25)
+  }
+
+  test("a driver-written file carries the parquet schema and footer " +
+      "Spark writes for the same rows, and timestamp min/max") {
+    val events = (0 until 30).map(i => ev(100L + i * 11L, i))
+    // RdfEvent.toDF declares its columns non-nullable, the log's schema
+    // nullable; Spark keeps an input's nullability, so check both
+    val nonNullable = () => RdfEvent.toDF(spark, events)
+    val nullable = () => spark.createDataFrame(
+      events.map(RdfEvent.toRow).asJava, EventLog.DataSchema)
+    for (input <- Seq(nonNullable, nullable)) {
+      val local = freshLog(bucketMs = 100000L)
+      assert(EventLog.localQuads(input()).isDefined)
+      local.append(input())
+      // the same rows through the Spark writer (a non-local plan)
+      val viaSpark = freshLog(bucketMs = 100000L)
+      val distributed = input().repartition(1)
+      assert(EventLog.localQuads(distributed).isEmpty)
+      viaSpark.append(distributed)
+      val Seq(ours) = bucketFiles(local)("ts_bucket=0")
+      val Seq(theirs) = bucketFiles(viaSpark)("ts_bucket=0")
+      val (fo, ft) = (footer(ours), footer(theirs))
+      assert(fo.getFileMetaData.getSchema === ft.getFileMetaData.getSchema)
+      assert(fo.getFileMetaData.getKeyValueMetaData ===
+        ft.getFileMetaData.getKeyValueMetaData)
+      val codecs = Seq(fo, ft).map(_.getBlocks.asScala.flatMap(
+        _.getColumns.asScala.map(_.getCodec)).toSet)
+      assert(codecs.head === codecs.last)
+      val encodings = Seq(fo, ft).map(_.getBlocks.asScala.flatMap(
+        _.getColumns.asScala.flatMap(_.getEncodings.asScala)).toSet)
+      assert(encodings.head === encodings.last)
+      val stats = fo.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == "timestamp").map(_.getStatistics)
+      assert(stats.nonEmpty && stats.forall(!_.isEmpty))
+      assert(stats.map(_.genericGetMin.asInstanceOf[java.lang.Long]
+        .longValue).min === 100L)
+      assert(stats.map(_.genericGetMax.asInstanceOf[java.lang.Long]
+        .longValue).max === 100L + 29 * 11L)
+      // and the point path, which reads those stats, agrees with query
+      for ((lo, hi) <- Seq((0L, 1000L), (155L, 155L), (150L, 300L))) {
+        assert(local.pointQuery(lo, hi).map(e => (e.timestamp, e.subject))
+          === local.query(lo, hi).collect()
+            .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted,
+          s"range [$lo,$hi]")
+      }
+    }
+  }
+
+  test("null graph and object values round-trip through a driver-side " +
+      "append") {
+    val nullable = org.apache.spark.sql.types.StructType(
+      RdfEvent.schema.fields.map(_.copy(nullable = true)))
+    val in = Seq(
+      org.apache.spark.sql.Row(10L, "http://e.org/a", "http://e.org/p",
+        null, "http://g.org/g"),
+      org.apache.spark.sql.Row(20L, "http://e.org/b", "http://e.org/p",
+        "x", null))
+    val df = spark.createDataFrame(in.asJava, nullable)
+    assert(EventLog.localQuads(df).isDefined)
+    val log = freshLog()
+    log.append(df)
+    assert(rows(log) === Seq(
+      Seq(Some("10"), Some("http://e.org/a"), Some("http://e.org/p"), None,
+        Some("http://g.org/g")),
+      Seq(Some("20"), Some("http://e.org/b"), Some("http://e.org/p"),
+        Some("x"), None)))
+    assert(log.pointQuery(0L, 100L).map(e => (e.objectValue, e.graph)) ===
+      Seq((null, "http://g.org/g"), ("x", null)))
+  }
+
+  test("a bucket mixing driver-written and Spark-written files compacts " +
+      "to the same rows") {
+    val log = freshLog(bucketMs = 100000L)
+    log.append(RdfEvent.toDF(spark, (0 until 10).map(i => ev(i * 10L, i))))
+    log.appendBulk(RdfEvent.toDF(spark,
+      (10 until 30).map(i => ev(i * 10L, i))), parallelism = 2,
+      splitsPerBucket = 2)
+    log.append(RdfEvent.toDF(spark,
+      (30 until 40).map(i => ev(i * 10L + 5L, i))))
+    val before = rows(log)
+    assert(before.size === 40)
+    assert(log.query(0L, 100000L).inputFiles.length >= 3)
+    assert(log.compact(maxFilesPerBucket = 1) === 1)
+    assert(log.query(0L, 100000L).inputFiles.length === 1)
+    assert(rows(log) === before)
+    assert(log.pointQuery(0L, 1000L).map(_.timestamp) ===
+      before.map(_.head.get.toLong).sorted)
+  }
+
+  test("a stale driver-append temp file is never read, and compact " +
+      "sweeps it (with its checksum) once past the grace") {
+    val dir = Files.createTempDirectory("eventlog-tmp").resolve("log")
+    val log = new EventLog(spark, dir.toString, 1000L)
+    log.append(RdfEvent.toDF(spark, (0 until 10).map(i => ev(i * 10L, i))))
+    val bucket = new Path(dir.toString, "ts_bucket=0")
+    val Seq(data) = bucketFiles(log)("ts_bucket=0")
+    // what an append that died between create and rename leaves: a
+    // complete parquet file under the hidden temporary name
+    val fs = hadoopFs(bucket)
+    val stale = new Path(bucket,
+      EventLog.AppendTempPrefix + "part-00000-stale.c000.parquet")
+    val in = fs.open(data)
+    val bytes = try in.readAllBytes() finally in.close()
+    val out = fs.create(stale)
+    try out.write(bytes) finally out.close()
+    def onDisk =
+      new java.io.File(bucket.toUri.getPath).listFiles().map(_.getName).toSet
+    assert(onDisk.exists(_.contains(EventLog.AppendTempPrefix + "part")))
+    assert(onDisk.exists(n => n.startsWith(".") && n.endsWith(".crc") &&
+      n.contains("stale")))
+    val reader = new EventLog(spark, dir.toString, 1000L)
+    assert(reader.query(0L, 1000L).count() === 10)
+    assert(reader.pointQuery(0L, 1000L).size === 10)
+    assert(!reader.read().inputFiles.exists(_.contains("stale")))
+    // inside the grace period the file is left alone
+    assert(reader.compact() === 0)
+    assert(onDisk.exists(_.contains("stale")))
+    assert(reader.compact(graceMs = 0) === 0)
+    assert(!onDisk.exists(_.contains("stale")), onDisk)
+    assert(reader.query(0L, 1000L).count() === 10)
   }
 }

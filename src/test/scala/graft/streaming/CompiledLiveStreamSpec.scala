@@ -253,6 +253,56 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     assert(byClose === Seq(300L -> 1.0, 600L -> 0.0, 900L -> 1.0))
   }
 
+  test("a local batch and a distributed batch with the same rows " +
+      "advance event time, and fire, identically") {
+    val aggQuery =
+      """PREFIX ex: <http://example.org/>
+        |REGISTER RStream <output> AS
+        |SELECT (COUNT(?s) AS ?n)
+        |FROM NAMED WINDOW ex:w1 ON STREAM ex:stream1 [RANGE 300 STEP 300]
+        |WHERE {
+        |    WINDOW ex:w1 { ?s <http://example.org/p> ?o }
+        |}""".stripMargin
+    // rows of an unregistered stream must not advance time on either path
+    val other = "http://example.org/other"
+    val batches = Seq(
+      Seq(Stream1 -> RdfEvent(100L, "http://example.org/a",
+        "http://example.org/p", "o1", ""),
+        other -> RdfEvent(5000L, "http://example.org/x",
+          "http://example.org/p", "ox", "")),
+      Seq(Stream1 -> RdfEvent(400L, "http://example.org/b",
+        "http://example.org/OTHER", "o2", "")),
+      Seq(Stream1 -> RdfEvent(700L, "http://example.org/c",
+        "http://example.org/p", "o3", ""),
+        Stream1 -> RdfEvent(1300L, "http://example.org/d",
+          "http://example.org/p", "o4", "")),
+      Seq(Stream1 -> RdfEvent(2000L, LiveStreamProcessing.SentinelSubject,
+        LiveStreamProcessing.SentinelPredicate,
+        LiveStreamProcessing.SentinelObject, "")))
+    /** Every sink call in order: (from, to, sorted rendered rows). */
+    def fires(query: String, distributed: Boolean)
+        : Seq[(Long, Long, Seq[String])] = {
+      val out = mutable.ArrayBuffer.empty[(Long, Long, Seq[String])]
+      val c = new CompiledLiveStream(spark, query, newLog(),
+        (df, from, to) =>
+          out += ((from, to, df.collect().map(_.toString).toSeq.sorted)))
+      batches.foreach { b =>
+        val df = quadsDF(b)
+        assert(EventLog.localQuads(df).isDefined)
+        val in = if (distributed) df.repartition(2) else df
+        assert(EventLog.localQuads(in).isDefined === !distributed)
+        c.processBatch(in)
+      }
+      c.close()
+      out.toSeq
+    }
+    for (q <- Seq(basicQuery, aggQuery)) {
+      val local = fires(q, distributed = false)
+      assert(local.nonEmpty)
+      assert(local === fires(q, distributed = true))
+    }
+  }
+
   test("attach: end-to-end through Structured Streaming foreachBatch") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
