@@ -1,6 +1,6 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The persistent, timestamp-indexed quad log — Spark-native rebuild of
@@ -20,7 +20,10 @@ import org.apache.spark.sql.functions._
   *                            min/max stats; `query` filters on BOTH the
   *                            bucket column (directory pruning) and
   *                            `timestamp` (row-group + page pruning)
-  *   - segment discovery    → Parquet directory listing (free)
+  *   - segment index        → one versioned manifest at the log root
+  *                            (`_manifest-<v>.json`) naming every live
+  *                            file; readers bind to one version, so
+  *                            they see whole commits (see [[commit]])
   *
   * Scale notes: append never materializes a distributed input on the
   * driver — a 1000-executor cluster writes each micro-batch in parallel
@@ -57,26 +60,20 @@ final class EventLog(
   import EventLog._
 
   /** Cached reader DataFrame. A fresh `spark.read.parquet` per query
-    * re-lists the directory tree and re-infers the schema — pure
+    * re-resolves the file set and re-infers the schema — pure
     * overhead on a hot read path (the reference amortizes its segment
-    * index the same way). Invalidated on every append. */
+    * index the same way). Invalidated on every commit. */
   @transient private var cachedTable: Option[DataFrame] = None
 
   private def table: DataFrame = synchronized {
     cachedTable.getOrElse {
       // a log that has never been appended to reads as EMPTY (the
-      // reference's fresh storage dir), not as a PATH_NOT_FOUND error;
-      // the cache is invalidated on append, so the first write upgrades
-      // the reader to the real directory.
-      //
-      // The reader binds to an EXPLICIT marker-resolved file snapshot
-      // (not the directory): visibility of compacted generations flips
-      // atomically with the marker rename, and superseded files outlive
-      // in-flight plans by the compaction grace — so a reader planned
-      // at ANY instant sees exactly the pre- or post-compaction row
-      // set, never a partial one, and never a dead path
-      // (ConcurrentCompactionSpec stress-proves it).
-      val files = visibleDataFiles().map(_.getPath.toString)
+      // reference's fresh storage dir), not as a PATH_NOT_FOUND error.
+      // The reader binds to the EXPLICIT file list of one committed
+      // manifest version (not the directory), so a plan sees exactly
+      // one commit's row set, and superseded files outlive in-flight
+      // plans by the compaction grace (ConcurrentCompactionSpec).
+      val files = liveFiles().map(_.toString)
       val df =
         if (files.isEmpty) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LogSchema)
@@ -87,158 +84,196 @@ final class EventLog(
     }
   }
 
-  // ---- compaction-aware file visibility ---------------------------------
+  // ---- the manifest: which data files are live -------------------------
   //
-  // Compaction never renames or deletes a LIVE file in place. A bucket
-  // rewrite stages its output, moves it to stable HIDDEN names
-  // (`cdata-<gen>-N.parquet`, admitted only via a committed marker),
-  // then commits by atomically renaming ONE tombstone marker
-  // (`_compact-<millis>-<gen>.json`) into the bucket. The marker both
-  // reveals its `add` files and tombstones its `drop` files, so a
-  // single atomic namespace operation flips the whole generation;
-  // dropped files stay on disk until a later compact() vacuums them
-  // past the grace period, keeping every path captured by an in-flight
-  // reader alive. (The same idea as a transaction-log table format,
-  // reduced to one self-contained marker per bucket generation —
-  // single-writer, so no concurrent-commit arbitration is needed.)
+  // One versioned manifest at the log root, `_manifest-<v>.json`, is
+  // the only record of which data files are live: it lists each live
+  // file's path relative to the root (`ts_bucket=<b>/<name>`). A
+  // commit applies an add/drop delta to the latest version under this
+  // instance's lock, writes version v+1 under a hidden temporary name
+  // and renames it into place — one atomic namespace operation per
+  // append, compaction or prune, however many files or buckets it
+  // touches. Readers never list bucket directories: they bind to one
+  // version's file list. Files a version drops stay on disk until a
+  // later compact() vacuums them past the grace period, so every path
+  // an in-flight reader captured stays readable. Single-writer: the
+  // lock orders this instance's commits, and a commit starts from the
+  // latest version on disk, so a log another instance wrote earlier is
+  // extended, not overwritten.
 
-  private def parseMarkerList(json: String, key: String): Seq[String] = {
-    val m = java.util.regex.Pattern
-      .compile("\"" + key + "\"\\s*:\\s*\\[(.*?)\\]",
-        java.util.regex.Pattern.DOTALL)
-      .matcher(json)
-    if (!m.find()) Nil
-    else m.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"")
-      .stripSuffix("\"")).filter(_.nonEmpty)
-  }
+  private def root = new org.apache.hadoop.fs.Path(path)
 
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (Seq[String], Seq[String]) = {
-    val in = fs.open(p)
-    val json =
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    (parseMarkerList(json, "add"), parseMarkerList(json, "drop"))
-  }
+  private def fileSystem =
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Marker-resolved visible data files of ONE directory: plain visible
-    * parquet files, plus marker-gated `cdata-*` files revealed by a marker,
-    * minus every marker-dropped name.
+  /** Last version this instance committed or read (None: not yet). */
+  @transient private var state: Option[Manifest] = None
+
+  /** The highest committed version on disk (an empty manifest of
+    * version -1 when the log does not exist). A log without any
+    * manifest is migrated when this instance first looks at it
+    * ([[migrate]]); writers look before they write, so a migration
+    * never mistakes their files for pre-manifest ones.
     *
-    * The marker rename is atomic, but `listStatus` is NOT an atomic
-    * directory snapshot: a listing that starts before a compaction
-    * commit can pass the namespace position where a `cdata-` file will
-    * land, then enumerate the marker entry after the commit — observing
-    * the marker (which tombstones the old generation) while missing
-    * part of the generation it reveals. [[visibleFilesInOnce]] detects
-    * that tear (every `add` of a recognized marker must be present in
-    * the SAME listing) and throws; this wrapper re-lists, bounded. */
-  private def visibleFilesIn(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    // two transient races surface as FileNotFoundException here: a
-    // marker vacuumed by a concurrent compact between our listStatus
-    // and open, and a torn listing (marker seen, add file unseen —
-    // see visibleFilesInOnce). Both heal on a fresh listing; bounded,
-    // because each retry means another compaction event landed
-    // mid-listing (never sustained in practice)
-    var attempt = 0
-    while (true) {
-      try return visibleFilesInOnce(fs, dir)
-      catch {
-        case _: java.io.FileNotFoundException if attempt < 8 =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Test seam: lets a spec deterministically inject an inconsistent
-    * listing (e.g. one that observes a compaction marker but not all of
-    * its `add` files — the torn-read interleaving a real scan can only
-    * hit in a narrow window). Production code never sets this. */
-  @transient private[storage] var listingSeam
-      : (org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus])
-        => Array[org.apache.hadoop.fs.FileStatus] = null
-
-  /** One listing + marker resolution; throws FileNotFoundException if
-    * (a) a concurrent compact() vacuums a grace-expired marker between
-    * our listStatus and open, or (b) the listing is TORN — it contains
-    * a marker but not every `add` file that marker reveals (listStatus
-    * enumerates the namespace non-atomically, so a scan racing a
-    * compaction commit can see the marker entry while having already
-    * passed the position where a `cdata-` file landed). Serving such a
-    * listing would tombstone the old generation while exposing only
-    * part of the new one — a torn row set. [[visibleFilesIn]] re-lists
-    * on both. */
-  private def visibleFilesInOnce(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val entries = {
-      val raw = fs.listStatus(dir)
-      if (listingSeam eq null) raw else listingSeam(dir, raw)
-    }
-    val adds = scala.collection.mutable.HashSet.empty[String]
-    val drops = scala.collection.mutable.HashSet.empty[String]
-    entries.foreach { e =>
-      val n = e.getPath.getName
-      if (e.isFile && n.startsWith(EventLog.CompactMarkerPrefix) &&
-          n.endsWith(".json")) {
-        val (a, d) = readMarker(fs, e.getPath)
-        adds ++= a; drops ++= d
-      }
-    }
-    // torn-listing guard: every add a marker reveals must appear in
-    // THIS listing. An add absent from the listing is benign only if
-    // the file is genuinely gone from disk (vacuumed by a newer
-    // generation — possibly one whose own marker was vacuumed in the
-    // same pass, so the drops set alone cannot prove it); a marker's
-    // adds are renamed to their stable names BEFORE the marker
-    // commits, and cdata names embed a fresh generation id (never
-    // reused), so add-on-disk + add-not-in-listing can ONLY mean the
-    // listing raced the commit and missed the file — re-list.
-    if (adds.nonEmpty) {
-      val names = entries.iterator.map(_.getPath.getName).toSet
-      adds.iterator
-        .filterNot(names.contains).filterNot(drops.contains)
-        .foreach { a =>
-          if (fs.exists(new org.apache.hadoop.fs.Path(dir, a)))
-            throw new java.io.FileNotFoundException(
-              s"torn listing of $dir: marker reveals add file '$a' " +
-                "that is on disk but absent from the listing — re-list")
+    * This instance's state is the latest while its version is still on
+    * disk and the next one is not (the vacuum deletes versions oldest
+    * first): two probes instead of a listing of a root that holds every
+    * version of the grace window. */
+  private def latest(fs: org.apache.hadoop.fs.FileSystem): Manifest =
+    synchronized {
+      val m = state.filter(s => s.version >= 0 &&
+          fs.exists(manifestPath(s.version)) &&
+          !fs.exists(manifestPath(s.version + 1))).getOrElse {
+        if (!fs.exists(root)) Manifest(-1L, Vector.empty)
+        else fs.listStatus(root).flatMap(st =>
+            manifestVersion(st.getPath.getName)).maxOption match {
+          case Some(v) =>
+            Manifest(v, readList(fs, manifestPath(v), "files").toVector)
+          case None => state.filter(_.version < 0).getOrElse(migrate(fs))
         }
-    }
-    entries.toSeq.filter { e =>
-      val n = e.getPath.getName
-      e.isFile && n.endsWith(".parquet") && !drops.contains(n) && {
-        // compaction data files carry a NON-hidden `cdata-` prefix
-        // (Spark's parquet source refuses '.'/'_'-prefixed files even
-        // as explicit inputs) and are admitted ONLY via a committed
-        // marker — an interrupted compaction's uncommitted output
-        // stays invisible; everything else follows the plain rule
-        if (n.startsWith(EventLog.CompactDataPrefix)) adds.contains(n)
-        else !(n.startsWith(".") || n.startsWith("_"))
       }
+      state = Some(m)
+      m
     }
+
+  /** This instance's last committed or read version; on first use, the
+    * highest version on disk (a log another instance wrote). */
+  private def current(fs: org.apache.hadoop.fs.FileSystem): Manifest =
+    synchronized(state.getOrElse(latest(fs)))
+
+  /** The live data files readers bind to. */
+  private def liveFiles(): Vector[org.apache.hadoop.fs.Path] =
+    current(fileSystem).files.map(new org.apache.hadoop.fs.Path(root, _))
+
+  private def manifestPath(v: Long) =
+    new org.apache.hadoop.fs.Path(root, f"$ManifestPrefix$v%020d.json")
+
+  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
+      m: Manifest): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(root,
+      s"$ManifestTempPrefix${m.version}-${java.util.UUID.randomUUID()}")
+    val bytes = m.files.map("\"" + _ + "\"")
+      .mkString("""{"files":[""", ",", "]}")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    fs match {
+      // the local file system sets a new file's permission by forking
+      // `chmod` (twice, with its checksum file) unless native Hadoop is
+      // loaded, ~12 ms per file: a commit writes its few bytes directly
+      case local: org.apache.hadoop.fs.LocalFileSystem =>
+        java.nio.file.Files.write(local.pathToFile(tmp).toPath, bytes)
+      case _ =>
+        val os = fs.create(tmp, true)
+        try os.write(bytes) finally os.close()
+    }
+    require(fs.rename(tmp, manifestPath(m.version)),
+      s"failed to commit manifest version ${m.version} of $path")
   }
 
-  /** Marker-resolved snapshot of ALL live data files of the log. */
-  private def visibleDataFiles()
-      : Vector[org.apache.hadoop.fs.FileStatus] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Vector.empty
-    val out = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && !(n.startsWith(".") || n.startsWith("_")))
-        out ++= visibleFilesIn(fs, st.getPath)
-      else if (st.isFile && n.endsWith(".parquet") &&
-          !(n.startsWith(".") || n.startsWith("_")))
-        out += st // flat files at the root (non-partitioned writes)
+  /** Commit one version: `adds` (relative paths), minus `drops`. With a
+    * `stage` directory, each add is first moved from the same relative
+    * path under it into the log; the stage is deleted either way.
+    * Returns false, committing nothing, when a drop is no longer live
+    * (a compaction that raced a prune is abandoned). */
+  private def commit(fs: org.apache.hadoop.fs.FileSystem, adds: Seq[String],
+      drops: Set[String] = Set.empty,
+      stage: Option[org.apache.hadoop.fs.Path] = None): Boolean = {
+    val ok = synchronized {
+      val base = latest(fs)
+      val live = base.files.toSet
+      val ok = drops.forall(live.contains)
+      if (ok && (adds.nonEmpty || drops.nonEmpty)) {
+        stage.foreach { s =>
+          adds.foreach { rel =>
+            val to = new org.apache.hadoop.fs.Path(root, rel)
+            fs.mkdirs(to.getParent)
+            require(fs.rename(new org.apache.hadoop.fs.Path(s, rel), to),
+              s"failed to move staged file $rel into $path")
+          }
+        }
+        val next = Manifest(base.version + 1,
+          base.files.filterNot(drops.contains) ++ adds)
+        writeManifest(fs, next)
+        state = Some(next)
+        invalidate()
+      }
+      ok
     }
-    out.result()
+    stage.foreach(fs.delete(_, true))
+    ok
+  }
+
+  /** Write `df` (canonical columns plus [[BucketCol]]) with the Spark
+    * writer into a fresh hidden staging directory, partitioned like the
+    * log, and commit the files it wrote (minus `drops`). */
+  private def writeAndCommit(df: DataFrame,
+      drops: Set[String] = Set.empty): Boolean = {
+    val fs = fileSystem
+    latest(fs) // migrate a pre-manifest log before adding files to it
+    val stage = new org.apache.hadoop.fs.Path(root,
+      StagingPrefix + java.util.UUID.randomUUID())
+    // sort by (bucket, ts): satisfies the file writer's required
+    // partition-column ordering (so it adds no extra sort of its own)
+    // while keeping segments ts-ordered like the reference (:222)
+    df.sortWithinPartitions(BucketCol, "timestamp")
+      .write
+      .option("compression", compression)
+      // dictionary encoding off: subject/object are high-cardinality,
+      // so per-file dicts build to the page cap and fall back — pure
+      // encode-CPU waste (~14% of write wall); low-card columns still
+      // compress via lz4 on the plain-encoded pages
+      .option("parquet.enable.dictionary", "false")
+      .partitionBy(BucketCol)
+      .parquet(stage.toString)
+    val adds = fs.listStatus(stage).toSeq
+      .filter(_.getPath.getName.startsWith(s"$BucketCol="))
+      .flatMap(d => fs.listStatus(d.getPath).toSeq.map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).sorted
+        .map(n => s"${d.getPath.getName}/$n"))
+    commit(fs, adds, drops, Some(stage))
+  }
+
+  /** Version 0 of a log written before the manifest existed, resolved
+    * by the listing rule of that format: per bucket directory, the
+    * plain visible parquet files plus the `cdata-` files a committed
+    * `_compact-` marker adds, minus the files any marker drops; a
+    * bucket left only as `.compact-old-<bucket>` by a crash inside an
+    * older compaction is restored first. The only reader of markers;
+    * what this rule does not admit is swept by [[vacuum]]. */
+  private def migrate(fs: org.apache.hadoop.fs.FileSystem): Manifest = {
+    fs.listStatus(root).foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith(".compact-old-")) {
+        val bucketDir = new org.apache.hadoop.fs.Path(
+          root, name.stripPrefix(".compact-old-"))
+        if (!fs.exists(bucketDir)) fs.rename(st.getPath, bucketDir)
+        else fs.delete(st.getPath, true)
+      } else if (name.startsWith(".compact-tmp-") ||
+          name.startsWith(".compact-stage-")) {
+        fs.delete(st.getPath, true)
+      }
+    }
+    def visible(n: String) = !(n.startsWith(".") || n.startsWith("_"))
+    val files = fs.listStatus(root).toVector.flatMap { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && visible(n)) {
+        val entries = fs.listStatus(st.getPath).toVector
+          .filter(_.isFile).map(_.getPath)
+        val markers = entries.filter(p =>
+          p.getName.startsWith(CompactMarkerPrefix) &&
+            p.getName.endsWith(".json"))
+        val adds = markers.flatMap(readList(fs, _, "add")).toSet
+        val drops = markers.flatMap(readList(fs, _, "drop")).toSet
+        entries.map(_.getName).filter(f => f.endsWith(".parquet") &&
+            visible(f) && !drops.contains(f) &&
+            (!f.startsWith("cdata-") || adds.contains(f)))
+          .sorted.map(f => s"$n/$f")
+      } else if (st.isFile && n.endsWith(".parquet") && visible(n))
+        Vector(n) // flat files at the root (non-partitioned writes)
+      else Vector.empty
+    }
+    val m = Manifest(0L, files)
+    writeManifest(fs, m)
+    m
   }
 
   private def invalidate(): Unit = synchronized {
@@ -251,8 +286,7 @@ final class EventLog(
   /** Amortized auto-compaction hook — runs on the appending thread at
     * the end of `append`/`appendBulk`, every [[autoCompactEvery]]
     * appends. Same single-writer assumption as append itself; readers
-    * see either the pre- or post-compaction file set (identical rows)
-    * thanks to compact's rename-swap. */
+    * see either the pre- or post-compaction version (identical rows). */
   private def maybeAutoCompact(): Unit = {
     if (autoCompactFiles > 0) {
       val due = synchronized {
@@ -275,7 +309,7 @@ final class EventLog(
 
   /** Append a canonical quads DataFrame (timestamp, subject, predicate,
     * object, graph). Equivalent of `write_rdf` + background flush
-    * (`segmented_storage.rs:478-657`): the file commit IS the flush.
+    * (`segmented_storage.rs:478-657`): the manifest commit IS the flush.
     *
     * Two write paths, picked by the input's optimized plan alone:
     *
@@ -286,8 +320,7 @@ final class EventLog(
     *     commit protocol: ~170 ms for a 200-quad batch) would only move
     *     it back to the driver's own disk. It is written in-process
     *     instead, one ts-sorted parquet file per touched bucket, with
-    *     no Spark job ([[appendLocal]], which also gives the crash and
-    *     visibility argument).
+    *     no Spark job ([[appendLocal]]).
     *   - DISTRIBUTED input (`foreachBatch` frames, streaming sinks,
     *     anything that is not a local relation) takes the Spark writer,
     *     the only path that can reach rows on executors.
@@ -295,14 +328,14 @@ final class EventLog(
     * Both produce the same layout — `ts_bucket=<b>/` directories of
     * ts-sorted parquet files with the log's compression and dictionary
     * encoding off — so readers, the point index and compaction cannot
-    * tell the paths apart. For backfills spanning many buckets use
+    * tell the paths apart, and both publish the whole batch in one
+    * manifest commit. For backfills spanning many buckets use
     * [[appendBulk]].
     */
   def append(quads: DataFrame): Unit = localQuads(quads) match {
     case Some(batch) => appendLocal(batch)
     case None =>
       appendDistributed(quads)
-      invalidate()
       maybeAutoCompact()
   }
 
@@ -322,22 +355,8 @@ final class EventLog(
     // take [[appendBulk]], which levels buckets across the cluster.
     val small = quads.queryExecution.optimizedPlan.stats.sizeInBytes <=
       EventLog.AppendCoalesceBytes
-    (if (small) quads.coalesce(EventLog.AppendMaxTasks) else quads)
-      .withColumn(BucketCol, bucketExpr)
-      // sort by (bucket, ts): satisfies the file writer's required
-      // partition-column ordering (so it adds no extra sort of its own)
-      // while keeping segments ts-ordered like the reference (:222)
-      .sortWithinPartitions(BucketCol, "timestamp")
-      .write
-      .option("compression", compression)
-      // dictionary encoding off: subject/object are high-cardinality,
-      // so per-file dicts build to the page cap and fall back — pure
-      // encode-CPU waste (~14% of write wall); low-card columns still
-      // compress via lz4 on the plain-encoded pages
-      .option("parquet.enable.dictionary", "false")
-      .mode(SaveMode.Append)
-      .partitionBy(BucketCol)
-      .parquet(path)
+    writeAndCommit((if (small) quads.coalesce(EventLog.AppendMaxTasks)
+      else quads).withColumn(BucketCol, bucketExpr))
   }
 
   /** Append a driver-resident batch (see [[append]] and
@@ -347,20 +366,16 @@ final class EventLog(
     * `ParquetUtils.prepareWrite` a Spark write task uses, so schema,
     * footer and codec are the ones Spark writes.
     *
-    * Publication is two-phase. Every bucket's file is first written
-    * under a hidden temporary name ([[EventLog.AppendTempPrefix]]) in
-    * its bucket directory; only after ALL writers closed are the files
-    * renamed to their visible `part-` names. A failed write deletes
-    * every temporary file of the batch, so a failed append leaves no
-    * row visible and the caller may retry it. A crash before the
-    * renames leaves hidden files that no reader admits and that the
-    * next [[compact]] sweeps once they are older than the grace period.
-    * The renames themselves are not one atomic step: a batch spanning
-    * several buckets becomes visible bucket by bucket, as a Spark job
-    * commit moves its task files one by one. */
+    * Each file is written straight to its final name; all of them are
+    * published by one manifest commit after every writer closed, so a
+    * reader sees the whole batch or none of it. A failed write deletes
+    * every file of the batch, so a failed append leaves no row visible
+    * and the caller may retry it; a crash before the commit leaves
+    * files no manifest names, which [[compact]] sweeps once they are
+    * older than the grace period. */
   private[graft] def appendLocal(batch: LocalQuads): Unit = {
     val sqlConf = spark.sessionState.conf
-    // the options of every Spark write of the log (see above)
+    // the options of every Spark write of the log (see writeAndCommit)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConfWithOptions(
         Map("parquet.enable.dictionary" -> "false")))
@@ -371,32 +386,29 @@ final class EventLog(
     val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID(
         "graft-append", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
-    val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(job.getConfiguration)
+    latest(fs) // migrate a pre-manifest log before adding files to it
     val ext = factory.getFileExtension(task)
-    val staged = scala.collection.mutable.ArrayBuffer
-      .empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
+    val written = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
       batch.rows.groupBy(r => math.floorDiv(r.getLong(0), bucketMs))
         .toSeq.sortBy(_._1).foreach { case (bucket, rows) =>
-          val dir = new org.apache.hadoop.fs.Path(root, s"$BucketCol=$bucket")
-          val name = s"part-00000-${java.util.UUID.randomUUID()}.c000$ext"
-          val tmp = new org.apache.hadoop.fs.Path(dir, AppendTempPrefix + name)
-          staged += tmp -> new org.apache.hadoop.fs.Path(dir, name)
-          val writer = factory.newInstance(tmp.toString, batch.schema, task)
+          val rel = s"$BucketCol=$bucket/part-00000-" +
+            s"${java.util.UUID.randomUUID()}.c000$ext"
+          written += rel
+          val writer = factory.newInstance(
+            new org.apache.hadoop.fs.Path(root, rel).toString,
+            batch.schema, task)
           try rows.sortBy(_.getLong(0)).foreach(writer.write)
           finally writer.close()
         }
     } catch {
       case t: Throwable =>
-        staged.foreach { case (tmp, _) => fs.delete(tmp, false) }
+        written.foreach(r =>
+          fs.delete(new org.apache.hadoop.fs.Path(root, r), false))
         throw t
     }
-    staged.foreach { case (tmp, visible) =>
-      require(fs.rename(tmp, visible),
-        s"failed to publish appended file $visible")
-    }
-    invalidate()
+    commit(fs, written.toSeq)
     maybeAutoCompact()
   }
 
@@ -444,28 +456,13 @@ final class EventLog(
     // the exchange: routing evaluates map-side only, so the shuffled
     // row payload stays the bare 5-column quad (the bucket long is
     // recomputed post-shuffle by codegen, ~8% less shuffle volume)
-    val keyed =
+    writeAndCommit(
       (if (splits <= 1)
         quads.repartition(parallelism, bucketExpr)
       else
         quads.repartition(parallelism, bucketExpr,
           pmod(xxhash64(col("timestamp")), lit(splits))))
-        .withColumn(BucketCol, bucketExpr)
-    keyed
-      // ts-ordered rows within each file → tight row-group min/max
-      // stats, like the reference's ts-ordered segments
-      .sortWithinPartitions(BucketCol, "timestamp")
-      .write
-      .option("compression", compression)
-      // dictionary encoding off: subject/object are high-cardinality,
-      // so per-file dicts build to the page cap and fall back — pure
-      // encode-CPU waste (~14% of write wall); low-card columns still
-      // compress via lz4 on the plain-encoded pages
-      .option("parquet.enable.dictionary", "false")
-      .mode(SaveMode.Append)
-      .partitionBy(BucketCol)
-      .parquet(path)
-    invalidate()
+        .withColumn(BucketCol, bucketExpr))
     maybeAutoCompact()
   }
 
@@ -507,15 +504,14 @@ final class EventLog(
 
   private def buildFileIndex(): Vector[EventLog.FileSpan] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    // the SAME marker-resolved snapshot the table reader binds to —
-    // pointQuery must never diverge from query() on which files are
-    // live (hidden staging dirs, tombstoned generations)
+    // the SAME manifest version the table reader binds to — pointQuery
+    // must never diverge from query() on which files are live
     val out = Vector.newBuilder[EventLog.FileSpan]
-    visibleDataFiles().foreach { st =>
+    liveFiles().foreach { file =>
       {
         val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
+            .fromPath(file, conf))
         try {
           var lo = Long.MaxValue
           var hi = Long.MinValue
@@ -533,7 +529,7 @@ final class EventLog(
             }
           }
           if (lo <= hi)
-            out += EventLog.FileSpan(st.getPath.toString, lo, hi)
+            out += EventLog.FileSpan(file.toString, lo, hi)
         } finally rdr.close()
       }
     }
@@ -652,200 +648,157 @@ final class EventLog(
     * ts-sorted files. Streaming appends write one file per micro-batch
     * per bucket (the reference's per-flush segments,
     * `segmented_storage.rs:478-657`); left alone, a long-running
-    * stream leaves thousands of small files per bucket — slow
-    * listings, weak row-group stats, tiny scan tasks. Compaction is
+    * stream leaves thousands of small files per bucket — large
+    * manifests, weak row-group stats, tiny scan tasks. Compaction is
     * the log-structured answer: rewrite cold buckets into few large
     * ts-ordered files (tight stats → hard pruning).
     *
-    * SNAPSHOT-ISOLATED for concurrent readers: the rewrite stages its
-    * output, moves it to stable marker-gated `cdata-*` names, and commits
-    * with ONE atomic marker rename that simultaneously reveals the new
-    * generation and tombstones the old (see the visibility-layer doc
-    * above). No live file is ever renamed or deleted in place —
-    * superseded files are vacuumed only by a LATER compact() call once
-    * their marker is older than `graceMs`, so a reader planned at any
-    * instant (or still executing within the grace) sees exactly the
-    * pre- or post-compaction row set. Single-writer assumption (same
-    * as append). Returns the number of buckets compacted. */
+    * SNAPSHOT-ISOLATED for concurrent readers: each bucket's rewrite is
+    * staged and committed as one manifest version that adds the new
+    * files and drops the old ones (see the manifest doc above). No live
+    * file is ever renamed or deleted in place — superseded files are
+    * vacuumed only by a LATER compact() call once the version that
+    * dropped them is older than `graceMs` ([[vacuum]]), so a reader
+    * planned at any instant (or still executing within the grace) sees
+    * exactly the pre- or post-compaction row set. Single-writer
+    * assumption (same as append). Returns the number of buckets
+    * compacted. */
   def compact(maxFilesPerBucket: Int = 8, filesPerBucket: Int = 1,
       graceMs: Long = EventLog.DefaultCompactionGraceMs): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem
     if (!fs.exists(root)) return 0
-    val prefix = s"$BucketCol="
-    var compacted = 0
-    // recover pre-marker-protocol leftovers (a crash between the old
-    // rename-swap's two steps left the only copy in .compact-old-*),
-    // and clear any interrupted staging — hidden, so never visible
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".compact-old-")) {
-        val bucketDir = new org.apache.hadoop.fs.Path(
-          root, name.stripPrefix(".compact-old-"))
-        if (!fs.exists(bucketDir)) fs.rename(st.getPath, bucketDir)
-        else fs.delete(st.getPath, true)
-      } else if (name.startsWith(".compact-tmp-") ||
-          name.startsWith(".compact-stage-")) {
-        fs.delete(st.getPath, true)
+    vacuum(fs, graceMs)
+    val compacted = latest(fs).files.groupBy(_.takeWhile(_ != '/'))
+      .toSeq.sortBy(_._1).count { case (_, live) =>
+        live.size > maxFilesPerBucket && writeAndCommit(
+          spark.read.schema(LogSchema).option("basePath", path)
+            .parquet(live.map(new org.apache.hadoop.fs.Path(root, _)
+              .toString): _*)
+            .repartition(filesPerBucket),
+          drops = live.toSet)
       }
-    }
-    val now = System.currentTimeMillis()
-    fs.listStatus(root).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(prefix)) {
-        val bucketDir = st.getPath
-        vacuumBucket(fs, bucketDir, now - graceMs)
-        val live = visibleFilesIn(fs, bucketDir)
-        if (live.size > maxFilesPerBucket) {
-          val gen = java.util.UUID.randomUUID().toString.take(12)
-          val stage = new org.apache.hadoop.fs.Path(
-            root, s".compact-stage-${bucketDir.getName}")
-          fs.delete(stage, true)
-          spark.read
-            .schema(DataSchema)
-            .parquet(live.map(_.getPath.toString): _*)
-            .repartition(filesPerBucket)
-            .sortWithinPartitions("timestamp")
-            .write
-            .option("compression", compression)
-      // dictionary encoding off: subject/object are high-cardinality,
-      // so per-file dicts build to the page cap and fall back — pure
-      // encode-CPU waste (~14% of write wall); low-card columns still
-      // compress via lz4 on the plain-encoded pages
-      .option("parquet.enable.dictionary", "false")
-            .parquet(stage.toString)
-          // move staged output to stable marker-gated names inside
-          // the bucket — invisible until the marker admits them
-          val staged = fs.listStatus(stage)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-          val adds = staged.zipWithIndex.map { case (f, i) =>
-            val n = s"${EventLog.CompactDataPrefix}$gen-$i.parquet"
-            require(fs.rename(f.getPath,
-              new org.apache.hadoop.fs.Path(bucketDir, n)),
-              s"failed to place compacted file $n in $bucketDir")
-            n
-          }.toSeq
-          fs.delete(stage, true)
-          // ATOMIC COMMIT: one marker rename flips old → new
-          val marker =
-            s"""{"add":[${adds.map("\"" + _ + "\"").mkString(",")}],""" +
-              s""""drop":[${live.map(f => "\"" + f.getPath.getName + "\"")
-                .mkString(",")}]}"""
-          val tmpM = new org.apache.hadoop.fs.Path(
-            bucketDir, s".marker-tmp-$gen")
-          val os = fs.create(tmpM, true)
-          try os.write(marker.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally os.close()
-          require(fs.rename(tmpM, new org.apache.hadoop.fs.Path(
-            bucketDir, s"${EventLog.CompactMarkerPrefix}$now-$gen.json")),
-            s"failed to commit compaction marker for $bucketDir")
-          compacted += 1
-        }
-      }
-    }
-    if (compacted > 0) {
-      invalidate()
-      synchronized(rowCache.clear())
-    }
+    if (compacted > 0) synchronized(rowCache.clear())
     compacted
   }
 
-  /** Vacuum one bucket: for every tombstone marker older than
-    * `olderThanMs`, delete its dropped files (any in-flight reader
-    * bound to them is past the grace); once a marker's OWN add files
-    * have themselves been dropped and deleted by a newer generation,
-    * delete the marker too. Deletion order (files, then marker) keeps
-    * a crash harmless: a marker whose drops are already gone subtracts
-    * nothing. The steady state is one marker + one generation of live
-    * cdata files per compacted bucket.
-    *
-    * Also deletes driver-side append temp files (and their checksum
-    * files) older than `olderThanMs`: an append that died between
-    * create and rename left them, hidden and never admitted by a
-    * reader; the grace keeps a concurrent append's file alive. */
-  private def vacuumBucket(fs: org.apache.hadoop.fs.FileSystem,
-      bucketDir: org.apache.hadoop.fs.Path, olderThanMs: Long): Unit = {
-    val entries = fs.listStatus(bucketDir)
-    entries.foreach { e =>
-      if (e.isFile &&
-          e.getPath.getName.startsWith(EventLog.AppendTempPrefix) &&
-          e.getModificationTime <= olderThanMs)
-        fs.delete(e.getPath, false)
+  /** Delete what no reader can still need, by the grace rule that
+    * protects in-flight readers: a manifest version once the version
+    * that superseded it is older than `graceMs`; a data file, or a
+    * leftover manifest temp or staging directory, once no remaining
+    * version names it and it is itself older than `graceMs`. Versions
+    * go first, then files, so a crash anywhere deletes nothing a
+    * remaining version names. */
+  private def vacuum(fs: org.apache.hadoop.fs.FileSystem,
+      graceMs: Long): Unit = synchronized {
+    val cutoff = System.currentTimeMillis() - graceMs
+    val live = latest(fs).files.toSet
+    val entries = fs.listStatus(root).toSeq
+    val versions = entries.flatMap(st =>
+      manifestVersion(st.getPath.getName).map(_ -> st)).sortBy(_._1)
+    val (expired, kept) = versions.zip(versions.drop(1)).span {
+      case (_, (_, next)) => next.getModificationTime <= cutoff
     }
-    val markers = entries.filter { e =>
-      val n = e.getPath.getName
-      e.isFile && n.startsWith(EventLog.CompactMarkerPrefix) &&
-        n.endsWith(".json")
+    expired.foreach { case ((_, st), _) => fs.delete(st.getPath, false) }
+    entries.foreach { st =>
+      val n = st.getPath.getName
+      if ((n.startsWith(ManifestTempPrefix) || n.startsWith(StagingPrefix))
+          && st.getModificationTime <= cutoff)
+        fs.delete(st.getPath, true)
     }
-    markers.foreach { m =>
-      if (m.getModificationTime <= olderThanMs) {
-        val (adds, drops) = readMarker(fs, m.getPath)
-        drops.foreach { d =>
-          val p = new org.apache.hadoop.fs.Path(bucketDir, d)
-          if (fs.exists(p)) fs.delete(p, false)
-        }
-        val addsGone = adds.forall(a =>
-          !fs.exists(new org.apache.hadoop.fs.Path(bucketDir, a)))
-        if (addsGone) fs.delete(m.getPath, false)
+    val unnamed = entries.filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$BucketCol="))
+      .flatMap(d => fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
+        f.getModificationTime <= cutoff).map(f =>
+          s"${d.getPath.getName}/${f.getPath.getName}" -> f.getPath))
+      .filterNot(f => live.contains(f._1))
+    if (unnamed.nonEmpty) {
+      // the older versions still inside the grace (the latest is `live`)
+      val named = kept.flatMap { case ((v, _), _) =>
+        readList(fs, manifestPath(v), "files") }.toSet
+      unnamed.foreach { case (rel, p) =>
+        if (!named.contains(rel)) fs.delete(p, false)
       }
     }
   }
 
   /** Drop whole bucket directories that end at or before `ts` —
     * retention for live windows (nothing below the fire horizon can
-    * enter any future snapshot). Directory-granular and Hadoop-FS
-    * based, so it is one cheap namespace operation per expired bucket
-    * regardless of row volume. Returns the number of buckets dropped. */
+    * enter any future snapshot). The removal is committed first, then
+    * the directories are deleted: one manifest commit plus one cheap
+    * namespace operation per expired bucket regardless of row volume.
+    * Returns the number of buckets dropped. */
   def pruneBefore(ts: Long): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem
     if (!fs.exists(root)) return 0
     val prefix = s"$BucketCol="
-    var dropped = 0
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(prefix)) {
-        val bucket = name.stripPrefix(prefix).toLong
-        if ((bucket + 1L) * bucketMs <= ts) {
-          fs.delete(st.getPath, true)
-          dropped += 1
-        }
-      }
+    val expired = fs.listStatus(root).toSeq.map(_.getPath).filter { p =>
+      p.getName.startsWith(prefix) &&
+        (p.getName.stripPrefix(prefix).toLong + 1L) * bucketMs <= ts
     }
-    if (dropped > 0) {
-      invalidate()
+    if (expired.nonEmpty) {
+      val names = expired.map(_.getName + "/").toSet
+      commit(fs, Nil, drops = latest(fs).files
+        .filter(f => names.contains(f.take(f.indexOf('/') + 1))).toSet)
+      expired.foreach(fs.delete(_, true))
       // deleted files can never be looked up again (the rebuilt index
       // excludes them) — release their decoded rows eagerly
       synchronized(rowCache.clear())
     }
-    dropped
+    expired.size
   }
 }
 
 object EventLog {
   val BucketCol = "ts_bucket"
 
-  /** Tombstone-marker filename prefix — `_`-prefixed so the marker is
-    * invisible to plain directory reads; only the visibility layer
-    * interprets it. */
+  /** Filename prefix of the pre-manifest format's per-bucket
+    * compaction markers (`_compact-<ms>-<gen>.json`, an `add` and a
+    * `drop` file list); read only when such a log is migrated. */
   val CompactMarkerPrefix = "_compact-"
 
-  /** Compaction data-file prefix. Deliberately NOT `.`/`_`-hidden —
-    * Spark's parquet source refuses hidden files even as explicit
-    * inputs — the visibility layer admits `cdata-` files only when a
-    * committed marker lists them. */
-  val CompactDataPrefix = "cdata-"
+  /** Filename prefix of a committed manifest version at the log root
+    * (`_manifest-<zero-padded version>.json`) — `_`-hidden, so no
+    * directory read of the log admits it. */
+  val ManifestPrefix = "_manifest-"
 
-  /** Temporary-name prefix of a driver-side append's file until its
-    * rename publishes it — `.`-hidden, so no listing admits it. */
-  val AppendTempPrefix = ".append-"
+  /** Prefix of a manifest version's hidden temporary name until the
+    * rename commits it. */
+  private val ManifestTempPrefix = ".manifest-"
 
-  /** How long superseded (tombstoned) files outlive their compaction
-    * by default — the window an in-flight reader's captured file
-    * snapshot stays fully readable. Vacuumed by the NEXT compact()
-    * call after expiry, so disk amplification is bounded by one
-    * superseded generation per bucket per grace window. */
+  /** Prefix of the hidden root-level directory a Spark write fills
+    * before its files are moved into their buckets and committed. */
+  private val StagingPrefix = ".staging-"
+
+  /** One committed version: the live data files, relative to the root. */
+  private final case class Manifest(version: Long, files: Vector[String])
+
+  private def manifestVersion(name: String): Option[Long] =
+    if (name.startsWith(ManifestPrefix) && name.endsWith(".json"))
+      name.slice(ManifestPrefix.length, name.length - 5).toLongOption
+    else None
+
+  /** The string list under `key` in a manifest or marker file. */
+  private def readList(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, key: String): Seq[String] = {
+    val in = fs.open(p)
+    val json =
+      try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    val m = java.util.regex.Pattern
+      .compile("\"" + key + "\"\\s*:\\s*\\[(.*?)\\]",
+        java.util.regex.Pattern.DOTALL)
+      .matcher(json)
+    if (!m.find()) Nil
+    else m.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"")
+      .stripSuffix("\"")).filter(_.nonEmpty)
+  }
+
+  /** How long superseded files and manifest versions outlive the
+    * commit that superseded them by default — the window an in-flight
+    * reader's captured file list stays fully readable. Vacuumed by the
+    * NEXT compact() call after expiry, so disk amplification is bounded
+    * by what one grace window of commits superseded. */
   val DefaultCompactionGraceMs: Long = 15L * 60L * 1000L
 
   /** Inputs whose plan-stats size is at or under this skip the

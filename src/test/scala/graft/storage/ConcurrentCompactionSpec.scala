@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** Snapshot isolation of compaction for CONCURRENT readers (VERDICT r10
-  * §7): the tombstone-marker protocol never renames or deletes a live
-  * file in place, so
+/** Snapshot isolation for CONCURRENT readers (VERDICT r10 §7): every
+  * write is one manifest commit, and no live file is ever renamed or
+  * deleted in place, so
   *
   *   (a) a plan captured BEFORE a compaction executes correctly AFTER
   *       it (superseded files outlive the swap by the grace period) —
@@ -17,7 +17,8 @@ import java.nio.file.Files
   *       FILE_NOT_EXIST;
   *   (b) a reader planning at ANY instant during an append+compact
   *       storm sees exactly a batch-boundary row set — never a partial
-  *       bucket, never a torn generation, never an error.
+  *       bucket, never a torn generation, never an error;
+  *   (c) a batch spanning two buckets becomes visible as a whole.
   */
 class ConcurrentCompactionSpec extends AnyFunSuite {
 
@@ -114,137 +115,56 @@ class ConcurrentCompactionSpec extends AnyFunSuite {
       batches.toLong * batchRows)
   }
 
-  test("interrupted compaction: uncommitted cdata output stays " +
-      "invisible until its marker commits") {
-    val dir = Files.createTempDirectory("cc-crash").resolve("log")
-    val log = new EventLog(spark, dir.toString, bucketMs = 10000L,
+  test("readers racing two-bucket driver-side appends never see part " +
+      "of a batch") {
+    val dir = Files.createTempDirectory("cc-straddle").resolve("log")
+    val log = new EventLog(spark, dir.toString, bucketMs = 1000L,
       autoCompactFiles = 0)
-    (1 to 4).foreach { i =>
-      log.append(RdfEvent.toDF(spark, Seq(ev(i * 100L, i))))
+    val batchRows = 10
+    val batches = 30
+    // batch i spans [i*1000 + 500, i*1000 + 1400]: half of its rows in
+    // bucket i, half in bucket i+1 — one driver-side file per bucket
+    def batch(i: Int) = RdfEvent.toDF(spark,
+      (0 until batchRows).map(j => ev(i * 1000L + 500L + j * 100L,
+        i * 100 + j)))
+    assert(EventLog.localQuads(batch(0)).isDefined)
+    log.append(batch(0))
+
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val writerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    val writer = new Thread(() => {
+      try (1 until batches).foreach(i => log.append(batch(i)))
+      catch { case t: Throwable => failures.add(s"writer: $t") }
+      finally writerDone.set(true)
+    })
+    val readers = (0 until 3).map { r =>
+      new Thread(() => {
+        try {
+          while (!writerDone.get()) {
+            val counts = Seq(log.query(0, Long.MaxValue / 2).count(),
+              log.pointQuery(0, Long.MaxValue / 2).size.toLong)
+            counts.foreach { n =>
+              if (n % batchRows != 0 || n < batchRows ||
+                  n > batches.toLong * batchRows)
+                failures.add(s"reader$r: partial count $n")
+            }
+            reads.incrementAndGet()
+            ()
+          }
+        } catch {
+          case t: Throwable => failures.add(s"reader$r: $t")
+        }
+      })
     }
-    assert(log.compact(maxFilesPerBucket = 2, graceMs = HourMs) === 1)
-    // simulate a crash mid-compaction: duplicate the live cdata file
-    // under a NEW generation name with no committing marker
-    val fs = new org.apache.hadoop.fs.Path(dir.toString)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucket = fs.listStatus(new org.apache.hadoop.fs.Path(dir.toString))
-      .filter(_.getPath.getName.startsWith(EventLog.BucketCol + "="))
-      .head.getPath
-    val cdata = fs.listStatus(bucket).map(_.getPath)
-      .filter(_.getName.startsWith(EventLog.CompactDataPrefix)).head
-    val orphan = new org.apache.hadoop.fs.Path(bucket,
-      s"${EventLog.CompactDataPrefix}deadbeef-0.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(fs, cdata, fs, orphan, false,
-      spark.sparkContext.hadoopConfiguration)
-    // uncommitted generation must NOT double the data
-    val log2 = new EventLog(spark, dir.toString, bucketMs = 10000L)
-    assert(log2.query(0, Long.MaxValue / 2).count() === 4L)
+
+    writer.start(); readers.foreach(_.start())
+    writer.join(300000); readers.foreach(_.join(300000))
+    assert(!writer.isAlive && readers.forall(!_.isAlive), "threads hung")
+    assert(failures.isEmpty,
+      s"concurrency violations: ${failures.toArray.mkString("; ")}")
+    assert(reads.get() >= 10, s"only ${reads.get()} reads — no contention")
+    assert(log.query(0, Long.MaxValue / 2).count() ===
+      batches.toLong * batchRows)
   }
-
-  test("a marker vacuumed between a reader's listStatus and open " +
-      "(FileNotFoundException) is survived by re-listing, not a " +
-      "failed query") {
-    // deterministic fault injection: a FileSystem whose FIRST open of
-    // each compaction marker throws FileNotFoundException — exactly
-    // what a concurrent compact()'s grace-expired vacuum produces
-    // between a reader's listing and its marker read
-    spark.sparkContext.hadoopConfiguration.set("fs.flaky.impl",
-      classOf[FlakyMarkerFileSystem].getName)
-    val dir = Files.createTempDirectory("cc-flaky").resolve("log")
-    val log = new EventLog(spark, s"flaky://$dir", bucketMs = 10000L,
-      autoCompactFiles = 0)
-    (1 to 6).foreach { i =>
-      log.append(RdfEvent.toDF(spark, Seq(ev(i * 100L, i))))
-    }
-    assert(log.compact(maxFilesPerBucket = 2, graceMs = HourMs) === 1)
-    FlakyMarkerFileSystem.arm()
-    try {
-      // snapshot resolution opens the marker; the injected first-open
-      // FNF must be absorbed by a fresh listing
-      assert(log.query(0, Long.MaxValue / 2).count() === 6L)
-      assert(FlakyMarkerFileSystem.injected.get() >= 1,
-        "fault never fired — the test exercised nothing")
-    } finally FlakyMarkerFileSystem.disarm()
-  }
-
-  test("DETERMINISTIC torn listing (marker seen, one add unseen) is " +
-      "detected and re-listed — a partial generation is never served") {
-    // The interleaving the r16 storm hit probabilistically (readers
-    // counting 23 of 5-row batches): listStatus is not an atomic
-    // namespace snapshot, so a scan racing a compaction commit can
-    // enumerate the marker entry while having already passed the
-    // position where one of its cdata files landed. Injected here
-    // through the listing seam so it fires on EVERY run.
-    val dir = Files.createTempDirectory("cc-torn").resolve("log")
-    val log = new EventLog(spark, dir.toString, bucketMs = 1000000L,
-      autoCompactFiles = 0)
-    (0 until 5).foreach { i =>
-      log.append(RdfEvent.toDF(spark,
-        (0 until 5).map(j => ev(i * 100L + j + 1L, i * 100 + j)))
-        .coalesce(1))
-    }
-    // commit a generation with TWO cdata files; long grace keeps the
-    // dropped originals on disk, exactly as in the live race window
-    assert(log.compact(maxFilesPerBucket = 2, filesPerBucket = 2,
-      graceMs = HourMs) === 1)
-
-    // arm the seam: the NEXT listing of the bucket observes the marker
-    // and the dropped originals but is missing one cdata add
-    val seamFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    log.listingSeam = (_, raw) => {
-      val cdatas = raw.filter(
-        _.getPath.getName.startsWith(EventLog.CompactDataPrefix))
-      if (cdatas.length >= 2 && seamFired.compareAndSet(0, 1))
-        raw.filterNot(_.getPath.getName ==
-          cdatas.head.getPath.getName)
-      else raw
-    }
-    try {
-      // UNFIXED: the torn listing is served — the marker tombstones
-      // all 5 originals while only half the new generation is visible,
-      // so the count lands partial (a non-multiple of 5). FIXED: the
-      // tear is detected (an add absent from its own listing), the
-      // listing is retried, and the full 25 rows are read.
-      val n = log.query(0, Long.MaxValue / 2).count()
-      assert(seamFired.get() === 1, "seam never exercised — vacuous")
-      assert(n === 25L, s"torn generation served: counted $n of 25")
-
-      // the pointQuery driver-side index binds the same snapshot —
-      // re-arm and prove the guard covers it too
-      log.append(RdfEvent.toDF(spark, Seq(ev(9999L, 999))).coalesce(1))
-      seamFired.set(0)
-      val hits = log.pointQuery(0, Long.MaxValue / 2)
-      assert(seamFired.get() === 1, "seam never re-fired for pointQuery")
-      assert(hits.length === 26, s"torn index: ${hits.length} of 26")
-    } finally log.listingSeam = null
-  }
-}
-
-/** Local filesystem whose first `open` of each `_compact-*` marker
-  * (while armed) throws FileNotFoundException — simulating a
-  * concurrent vacuum between listStatus and open. */
-class FlakyMarkerFileSystem
-    extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("flaky:///")
-
-  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
-      : org.apache.hadoop.fs.FSDataInputStream = {
-    if (FlakyMarkerFileSystem.armed.get() &&
-        f.getName.startsWith(EventLog.CompactMarkerPrefix) &&
-        FlakyMarkerFileSystem.seen.add(f.toString)) {
-      FlakyMarkerFileSystem.injected.incrementAndGet()
-      throw new java.io.FileNotFoundException(
-        s"injected vacuum race: $f")
-    }
-    super.open(f, bufferSize)
-  }
-}
-
-object FlakyMarkerFileSystem {
-  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
-  val injected = new java.util.concurrent.atomic.AtomicInteger(0)
-  val seen: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  def arm(): Unit = { seen.clear(); injected.set(0); armed.set(true) }
-  def disarm(): Unit = armed.set(false)
 }

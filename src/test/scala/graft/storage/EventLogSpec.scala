@@ -242,6 +242,11 @@ class EventLogSpec extends AnyFunSuite {
     val old = new org.apache.hadoop.fs.Path(root,
       s".compact-old-${bucket.getName}")
     assert(fs.rename(bucket, old))
+    // that crash window belongs to the pre-manifest format: drop the
+    // manifest, so opening the log migrates it
+    fs.listStatus(root).map(_.getPath)
+      .filter(_.getName.startsWith(EventLog.ManifestPrefix))
+      .foreach(fs.delete(_, false))
     val log2 = new EventLog(spark, root.toString, bucketMs = 1000L)
     log2.compact() // must RESTORE, not delete, the orphaned copy
     assert(log2.read().count() === 20)
@@ -392,8 +397,6 @@ class EventLogSpec extends AnyFunSuite {
     val bucket0 = dir.resolve("ts_bucket=0").toFile
     assert(bucket0.listFiles().map(_.getName)
       .count(n => n.startsWith("part-") && n.endsWith(".parquet")) === 1)
-    assert(!bucket0.listFiles().exists(
-      _.getName.contains(EventLog.AppendTempPrefix)))
     log.append(batch)
     assert(log.query(0L, 10000L).count() === 25)
   }
@@ -485,36 +488,83 @@ class EventLogSpec extends AnyFunSuite {
       before.map(_.head.get.toLong).sorted)
   }
 
-  test("a stale driver-append temp file is never read, and compact " +
-      "sweeps it (with its checksum) once past the grace") {
-    val dir = Files.createTempDirectory("eventlog-tmp").resolve("log")
+  test("a data file that no manifest names is never read, and compact " +
+      "sweeps it once it is past the grace") {
+    // what a write that died before its commit leaves: a complete
+    // parquet file (and its checksum) that no manifest version names
+    val leftovers = Seq(
+      "a driver append or a compaction's moved output" ->
+        "ts_bucket=0/part-00000-orphan.c000.lz4.parquet",
+      "a Spark write's staging directory" ->
+        ".staging-orphan/ts_bucket=0/part-00000-orphan.c000.lz4.parquet")
+    for ((what, rel) <- leftovers) {
+      val dir = Files.createTempDirectory("eventlog-unnamed").resolve("log")
+      val log = new EventLog(spark, dir.toString, 1000L)
+      log.append(RdfEvent.toDF(spark, (0 until 10).map(i => ev(i * 10L, i))))
+      val Seq(data) = bucketFiles(log)("ts_bucket=0")
+      val fs = hadoopFs(data)
+      val orphan = new Path(dir.toString, rel)
+      val in = fs.open(data)
+      val bytes = try in.readAllBytes() finally in.close()
+      val out = fs.create(orphan)
+      try out.write(bytes) finally out.close()
+      def onDisk = Files.walk(dir).iterator().asScala
+        .map(_.getFileName.toString).filter(_.contains("orphan")).toSet
+      assert(onDisk.exists(_.endsWith(".crc")), what)
+      val reader = new EventLog(spark, dir.toString, 1000L)
+      assert(reader.query(0L, 1000L).count() === 10, what)
+      assert(reader.pointQuery(0L, 1000L).size === 10, what)
+      assert(!reader.read().inputFiles.exists(_.contains("orphan")), what)
+      // inside the grace period the file is left alone
+      assert(reader.compact() === 0)
+      assert(onDisk.nonEmpty, what)
+      assert(reader.compact(graceMs = 0) === 0)
+      assert(onDisk.isEmpty, s"$what: $onDisk")
+      assert(reader.query(0L, 1000L).count() === 10, what)
+    }
+  }
+
+  test("a pre-manifest log opens with the marker-resolved rows") {
+    val dir = Files.createTempDirectory("eventlog-legacy").resolve("log")
+    val fs = hadoopFs(new Path(dir.toString))
+    /** Write `events` as one parquet file at `rel` under the log. */
+    def plant(rel: String, events: Seq[RdfEvent]): Unit = {
+      val tmp = Files.createTempDirectory("eventlog-plant").resolve("out")
+      RdfEvent.toDF(spark, events).coalesce(1).write
+        .option("compression", "lz4").parquet(tmp.toString)
+      val Seq(part) = fs.listStatus(new Path(tmp.toString)).toSeq
+        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      val to = new Path(dir.toString, rel)
+      fs.mkdirs(to.getParent)
+      assert(fs.rename(part, to))
+    }
+    def evs(ts: Seq[Long]) = ts.map(t => ev(t, t.toInt))
+    plant("ts_bucket=0/part-a.parquet", evs(1L to 5L))
+    // compacted by the old format into cdata-g1-0, which its marker adds
+    plant("ts_bucket=0/part-b.parquet", evs(6L to 10L))
+    plant("ts_bucket=0/cdata-g1-0.parquet", evs(6L to 10L))
+    Files.writeString(dir.resolve("ts_bucket=0/_compact-100-g1.json"),
+      """{"add":["cdata-g1-0.parquet"],"drop":["part-b.parquet"]}""")
+    // an interrupted compaction (no marker) and a dead driver append
+    plant("ts_bucket=0/cdata-dead-0.parquet", evs(11L to 15L))
+    plant("ts_bucket=0/.append-part-c.parquet", evs(16L to 20L))
+    plant("ts_bucket=1/part-d.parquet", evs(1001L to 1005L))
+    val expected = ((1L to 10L) ++ (1001L to 1005L)).toSeq
+    def manifests = fs.listStatus(new Path(dir.toString)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith(EventLog.ManifestPrefix))
+
+    assert(manifests.isEmpty)
     val log = new EventLog(spark, dir.toString, 1000L)
-    log.append(RdfEvent.toDF(spark, (0 until 10).map(i => ev(i * 10L, i))))
-    val bucket = new Path(dir.toString, "ts_bucket=0")
-    val Seq(data) = bucketFiles(log)("ts_bucket=0")
-    // what an append that died between create and rename leaves: a
-    // complete parquet file under the hidden temporary name
-    val fs = hadoopFs(bucket)
-    val stale = new Path(bucket,
-      EventLog.AppendTempPrefix + "part-00000-stale.c000.parquet")
-    val in = fs.open(data)
-    val bytes = try in.readAllBytes() finally in.close()
-    val out = fs.create(stale)
-    try out.write(bytes) finally out.close()
-    def onDisk =
-      new java.io.File(bucket.toUri.getPath).listFiles().map(_.getName).toSet
-    assert(onDisk.exists(_.contains(EventLog.AppendTempPrefix + "part")))
-    assert(onDisk.exists(n => n.startsWith(".") && n.endsWith(".crc") &&
-      n.contains("stale")))
-    val reader = new EventLog(spark, dir.toString, 1000L)
-    assert(reader.query(0L, 1000L).count() === 10)
-    assert(reader.pointQuery(0L, 1000L).size === 10)
-    assert(!reader.read().inputFiles.exists(_.contains("stale")))
-    // inside the grace period the file is left alone
-    assert(reader.compact() === 0)
-    assert(onDisk.exists(_.contains("stale")))
-    assert(reader.compact(graceMs = 0) === 0)
-    assert(!onDisk.exists(_.contains("stale")), onDisk)
-    assert(reader.query(0L, 1000L).count() === 10)
+    assert(log.query(0L, 10000L).collect().map(_.getLong(0)).sorted.toSeq
+      === expected)
+    assert(log.pointQuery(0L, 10000L).map(_.timestamp) === expected)
+    val Seq(migrated) = manifests
+    // a second open reads that manifest and does not migrate again: a
+    // plain file planted since stays unread
+    plant("ts_bucket=1/part-e.parquet", evs(1006L to 1010L))
+    val reopened = new EventLog(spark, dir.toString, 1000L)
+    assert(reopened.query(0L, 10000L).collect().map(_.getLong(0)).sorted
+      .toSeq === expected)
+    assert(manifests === Seq(migrated))
   }
 }
