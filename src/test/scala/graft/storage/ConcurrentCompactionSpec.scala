@@ -115,6 +115,33 @@ class ConcurrentCompactionSpec extends AnyFunSuite {
       batches.toLong * batchRows)
   }
 
+  // A compaction commits its output by the manifest version it writes;
+  // output moved into a bucket before that commit is not visible.
+  test("interrupted compaction: uncommitted cdata output stays " +
+      "invisible until its marker commits") {
+    val dir = Files.createTempDirectory("cc-crash").resolve("log")
+    val log = new EventLog(spark, dir.toString, bucketMs = 10000L,
+      autoCompactFiles = 0)
+    (1 to 4).foreach { i =>
+      log.append(RdfEvent.toDF(spark, Seq(ev(i * 100L, i))))
+    }
+    assert(log.compact(maxFilesPerBucket = 2, graceMs = HourMs) === 1)
+    // simulate a crash mid-compaction: duplicate the live compacted
+    // file under a new name that no manifest version names
+    val Seq(compacted) = log.read().inputFiles.toSeq
+      .map(new org.apache.hadoop.fs.Path(_))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = compacted.getFileSystem(conf)
+    val orphan = new org.apache.hadoop.fs.Path(compacted.getParent,
+      "cdata-deadbeef-0.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, compacted, fs, orphan, false,
+      conf)
+    // uncommitted output must NOT double the data
+    val log2 = new EventLog(spark, dir.toString, bucketMs = 10000L)
+    assert(log2.query(0, Long.MaxValue / 2).count() === 4L)
+    assert(log2.pointQuery(0, Long.MaxValue / 2).size === 4)
+  }
+
   test("readers racing two-bucket driver-side appends never see part " +
       "of a batch") {
     val dir = Files.createTempDirectory("cc-straddle").resolve("log")

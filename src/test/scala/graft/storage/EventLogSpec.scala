@@ -488,40 +488,50 @@ class EventLogSpec extends AnyFunSuite {
       before.map(_.head.get.toLong).sorted)
   }
 
+  /** What a write that died before its commit leaves: a complete
+    * parquet file (and its checksum) at `rel` under the log that no
+    * manifest version names. It is never read, and compact sweeps it
+    * once it is past the grace. */
+  private def assertUnnamedFileIgnoredThenSwept(what: String,
+      rel: String): Unit = {
+    val dir = Files.createTempDirectory("eventlog-unnamed").resolve("log")
+    val log = new EventLog(spark, dir.toString, 1000L)
+    log.append(RdfEvent.toDF(spark, (0 until 10).map(i => ev(i * 10L, i))))
+    val Seq(data) = bucketFiles(log)("ts_bucket=0")
+    val fs = hadoopFs(data)
+    val orphan = new Path(dir.toString, rel)
+    val in = fs.open(data)
+    val bytes = try in.readAllBytes() finally in.close()
+    val out = fs.create(orphan)
+    try out.write(bytes) finally out.close()
+    def onDisk = Files.walk(dir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.contains("orphan")).toSet
+    assert(onDisk.exists(_.endsWith(".crc")), what)
+    val reader = new EventLog(spark, dir.toString, 1000L)
+    assert(reader.query(0L, 1000L).count() === 10, what)
+    assert(reader.pointQuery(0L, 1000L).size === 10, what)
+    assert(!reader.read().inputFiles.exists(_.contains("orphan")), what)
+    // inside the grace period the file is left alone
+    assert(reader.compact() === 0)
+    assert(onDisk.nonEmpty, what)
+    assert(reader.compact(graceMs = 0) === 0)
+    assert(onDisk.isEmpty, s"$what: $onDisk")
+    assert(reader.query(0L, 1000L).count() === 10, what)
+  }
+
+  test("a stale driver-append temp file is never read, and compact " +
+      "sweeps it (with its checksum) once past the grace") {
+    assertUnnamedFileIgnoredThenSwept("an uncommitted driver append",
+      "ts_bucket=0/part-00000-orphan.c000.lz4.parquet")
+    assertUnnamedFileIgnoredThenSwept(
+      "a driver append's temporary name from before the manifest",
+      "ts_bucket=0/.append-part-00000-orphan.c000.parquet")
+  }
+
   test("a data file that no manifest names is never read, and compact " +
       "sweeps it once it is past the grace") {
-    // what a write that died before its commit leaves: a complete
-    // parquet file (and its checksum) that no manifest version names
-    val leftovers = Seq(
-      "a driver append or a compaction's moved output" ->
-        "ts_bucket=0/part-00000-orphan.c000.lz4.parquet",
-      "a Spark write's staging directory" ->
-        ".staging-orphan/ts_bucket=0/part-00000-orphan.c000.lz4.parquet")
-    for ((what, rel) <- leftovers) {
-      val dir = Files.createTempDirectory("eventlog-unnamed").resolve("log")
-      val log = new EventLog(spark, dir.toString, 1000L)
-      log.append(RdfEvent.toDF(spark, (0 until 10).map(i => ev(i * 10L, i))))
-      val Seq(data) = bucketFiles(log)("ts_bucket=0")
-      val fs = hadoopFs(data)
-      val orphan = new Path(dir.toString, rel)
-      val in = fs.open(data)
-      val bytes = try in.readAllBytes() finally in.close()
-      val out = fs.create(orphan)
-      try out.write(bytes) finally out.close()
-      def onDisk = Files.walk(dir).iterator().asScala
-        .map(_.getFileName.toString).filter(_.contains("orphan")).toSet
-      assert(onDisk.exists(_.endsWith(".crc")), what)
-      val reader = new EventLog(spark, dir.toString, 1000L)
-      assert(reader.query(0L, 1000L).count() === 10, what)
-      assert(reader.pointQuery(0L, 1000L).size === 10, what)
-      assert(!reader.read().inputFiles.exists(_.contains("orphan")), what)
-      // inside the grace period the file is left alone
-      assert(reader.compact() === 0)
-      assert(onDisk.nonEmpty, what)
-      assert(reader.compact(graceMs = 0) === 0)
-      assert(onDisk.isEmpty, s"$what: $onDisk")
-      assert(reader.query(0L, 1000L).count() === 10, what)
-    }
+    assertUnnamedFileIgnoredThenSwept("a Spark write's staging directory",
+      ".staging-orphan/ts_bucket=0/part-00000-orphan.c000.lz4.parquet")
   }
 
   test("a pre-manifest log opens with the marker-resolved rows") {
