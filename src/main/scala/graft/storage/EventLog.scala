@@ -94,12 +94,15 @@ final class EventLog(
   // and renames it into place — one atomic namespace operation per
   // append, compaction or prune, however many files or buckets it
   // touches. Readers never list bucket directories: they bind to one
-  // version's file list. Files a version drops stay on disk until a
-  // later compact() vacuums them past the grace period, so every path
-  // an in-flight reader captured stays readable. Single-writer: the
-  // lock orders this instance's commits, and a commit starts from the
-  // latest version on disk, so a log another instance wrote earlier is
-  // extended, not overwritten.
+  // version's file list. Only the latest version stays on disk (a
+  // commit deletes the one it superseded); it also lists, with its drop
+  // time, every file a compaction dropped within the grace period,
+  // which stays on disk until a later compact() vacuums it, so every
+  // path an in-flight reader captured stays readable. Single-writer:
+  // the lock orders this instance's commits, and a commit starts from
+  // the latest version on disk, so a log another instance wrote
+  // earlier is extended, not overwritten (an instance opening the log
+  // while another process commits may find its listed version gone).
 
   private def root = new org.apache.hadoop.fs.Path(path)
 
@@ -116,19 +119,17 @@ final class EventLog(
     * never mistakes their files for pre-manifest ones.
     *
     * This instance's state is the latest while its version is still on
-    * disk and the next one is not (the vacuum deletes versions oldest
-    * first): two probes instead of a listing of a root that holds every
-    * version of the grace window. */
+    * disk and the next one is not: two probes instead of a listing of a
+    * root that holds every bucket directory. */
   private def latest(fs: org.apache.hadoop.fs.FileSystem): Manifest =
     synchronized {
       val m = state.filter(s => s.version >= 0 &&
           fs.exists(manifestPath(s.version)) &&
           !fs.exists(manifestPath(s.version + 1))).getOrElse {
-        if (!fs.exists(root)) Manifest(-1L, Vector.empty)
+        if (!fs.exists(root)) Manifest(-1L, Vector.empty, Vector.empty)
         else fs.listStatus(root).flatMap(st =>
             manifestVersion(st.getPath.getName)).maxOption match {
-          case Some(v) =>
-            Manifest(v, readList(fs, manifestPath(v), "files").toVector)
+          case Some(v) => readManifest(fs, v)
           case None => state.filter(_.version < 0).getOrElse(migrate(fs))
         }
       }
@@ -148,32 +149,46 @@ final class EventLog(
   private def manifestPath(v: Long) =
     new org.apache.hadoop.fs.Path(root, f"$ManifestPrefix$v%020d.json")
 
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+      v: Long): Manifest = {
+    val json = readText(fs, manifestPath(v))
+    Manifest(v, listIn(json, "files").toVector,
+      "\"([^\"]*)\":(\\d+)".r
+        .findAllMatchIn(valueOf(json, "dropped", '{', '}'))
+        .map(d => d.group(1) -> d.group(2).toLong).toVector)
+  }
+
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
       m: Manifest): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(root,
       s"$ManifestTempPrefix${m.version}-${java.util.UUID.randomUUID()}")
-    val bytes = m.files.map("\"" + _ + "\"")
-      .mkString("""{"files":[""", ",", "]}")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    fs match {
-      // the local file system sets a new file's permission by forking
-      // `chmod` (twice, with its checksum file) unless native Hadoop is
-      // loaded, ~12 ms per file: a commit writes its few bytes directly
-      case local: org.apache.hadoop.fs.LocalFileSystem =>
-        java.nio.file.Files.write(local.pathToFile(tmp).toPath, bytes)
-      case _ =>
-        val os = fs.create(tmp, true)
-        try os.write(bytes) finally os.close()
-    }
+    val json = m.files.map("\"" + _ + "\"").mkString("""{"files":[""", ",",
+      "],") + m.dropped.map { case (f, ms) => s""""$f":$ms""" }
+      .mkString(""""dropped":{""", ",", "}}")
+    val os = fs.create(tmp, true)
+    try os.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally os.close()
     require(fs.rename(tmp, manifestPath(m.version)),
       s"failed to commit manifest version ${m.version} of $path")
   }
 
-  /** Commit one version: `adds` (relative paths), minus `drops`. With a
-    * `stage` directory, each add is first moved from the same relative
-    * path under it into the log; the stage is deleted either way.
-    * Returns false, committing nothing, when a drop is no longer live
-    * (a compaction that raced a prune is abandoned). */
+  /** Make `next` the latest version and delete the one it superseded
+    * (a crash in between leaves an older version that [[vacuum]]
+    * deletes). Under the lock. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+      next: Manifest): Manifest = {
+    writeManifest(fs, next)
+    fs.delete(manifestPath(next.version - 1), false)
+    state = Some(next)
+    next
+  }
+
+  /** Commit one version: `adds` (relative paths), minus `drops`, which
+    * are kept on disk as dropped until [[vacuum]] finds them past the
+    * grace. With a `stage` directory, each add is first moved from the
+    * same relative path under it into the log; the stage is deleted
+    * either way. Returns false, committing nothing, when a drop is no
+    * longer live (a compaction that raced a prune is abandoned). */
   private def commit(fs: org.apache.hadoop.fs.FileSystem, adds: Seq[String],
       drops: Set[String] = Set.empty,
       stage: Option[org.apache.hadoop.fs.Path] = None): Boolean = {
@@ -190,10 +205,10 @@ final class EventLog(
               s"failed to move staged file $rel into $path")
           }
         }
-        val next = Manifest(base.version + 1,
-          base.files.filterNot(drops.contains) ++ adds)
-        writeManifest(fs, next)
-        state = Some(next)
+        val now = System.currentTimeMillis()
+        publish(fs, Manifest(base.version + 1,
+          base.files.filterNot(drops.contains) ++ adds,
+          base.dropped ++ drops.toSeq.sorted.map(_ -> now)))
         invalidate()
       }
       ok
@@ -208,7 +223,7 @@ final class EventLog(
   private def writeAndCommit(df: DataFrame,
       drops: Set[String] = Set.empty): Boolean = {
     val fs = fileSystem
-    latest(fs) // migrate a pre-manifest log before adding files to it
+    current(fs) // migrate a pre-manifest log before adding files to it
     val stage = new org.apache.hadoop.fs.Path(root,
       StagingPrefix + java.util.UUID.randomUUID())
     // sort by (bucket, ts): satisfies the file writer's required
@@ -261,8 +276,9 @@ final class EventLog(
         val markers = entries.filter(p =>
           p.getName.startsWith(CompactMarkerPrefix) &&
             p.getName.endsWith(".json"))
-        val adds = markers.flatMap(readList(fs, _, "add")).toSet
-        val drops = markers.flatMap(readList(fs, _, "drop")).toSet
+        val json = markers.map(readText(fs, _))
+        val adds = json.flatMap(listIn(_, "add")).toSet
+        val drops = json.flatMap(listIn(_, "drop")).toSet
         entries.map(_.getName).filter(f => f.endsWith(".parquet") &&
             visible(f) && !drops.contains(f) &&
             (!f.startsWith("cdata-") || adds.contains(f)))
@@ -271,7 +287,7 @@ final class EventLog(
         Vector(n) // flat files at the root (non-partitioned writes)
       else Vector.empty
     }
-    val m = Manifest(0L, files)
+    val m = Manifest(0L, files, Vector.empty)
     writeManifest(fs, m)
     m
   }
@@ -387,7 +403,7 @@ final class EventLog(
       job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID(
         "graft-append", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
     val fs = root.getFileSystem(job.getConfiguration)
-    latest(fs) // migrate a pre-manifest log before adding files to it
+    current(fs) // migrate a pre-manifest log before adding files to it
     val ext = factory.getFileExtension(task)
     val written = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
@@ -657,8 +673,8 @@ final class EventLog(
     * staged and committed as one manifest version that adds the new
     * files and drops the old ones (see the manifest doc above). No live
     * file is ever renamed or deleted in place — superseded files are
-    * vacuumed only by a LATER compact() call once the version that
-    * dropped them is older than `graceMs` ([[vacuum]]), so a reader
+    * vacuumed only by a LATER compact() call once they were dropped
+    * more than `graceMs` ago ([[vacuum]]), so a reader
     * planned at any instant (or still executing within the grace) sees
     * exactly the pre- or post-compaction row set. Single-writer
     * assumption (same as append). Returns the number of buckets
@@ -682,42 +698,33 @@ final class EventLog(
   }
 
   /** Delete what no reader can still need, by the grace rule that
-    * protects in-flight readers: a manifest version once the version
-    * that superseded it is older than `graceMs`; a data file, or a
-    * leftover manifest temp or staging directory, once no remaining
-    * version names it and it is itself older than `graceMs`. Versions
-    * go first, then files, so a crash anywhere deletes nothing a
-    * remaining version names. */
+    * protects in-flight readers: a dropped file once it was dropped
+    * more than `graceMs` ago (the latest version stops listing it, then
+    * the file goes), and a data file, manifest temporary or staging
+    * directory that the latest version does not name, once it is itself
+    * older than `graceMs` (a write that died before its commit). */
   private def vacuum(fs: org.apache.hadoop.fs.FileSystem,
       graceMs: Long): Unit = synchronized {
     val cutoff = System.currentTimeMillis() - graceMs
-    val live = latest(fs).files.toSet
-    val entries = fs.listStatus(root).toSeq
-    val versions = entries.flatMap(st =>
-      manifestVersion(st.getPath.getName).map(_ -> st)).sortBy(_._1)
-    val (expired, kept) = versions.zip(versions.drop(1)).span {
-      case (_, (_, next)) => next.getModificationTime <= cutoff
-    }
-    expired.foreach { case ((_, st), _) => fs.delete(st.getPath, false) }
-    entries.foreach { st =>
+    val base = latest(fs)
+    val kept = base.dropped.filter(_._2 > cutoff)
+    val m =
+      if (kept.size == base.dropped.size) base
+      else publish(fs, base.copy(version = base.version + 1, dropped = kept))
+    val named = m.files.toSet ++ m.dropped.map(_._1)
+    fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
-      if ((n.startsWith(ManifestTempPrefix) || n.startsWith(StagingPrefix))
-          && st.getModificationTime <= cutoff)
+      if (manifestVersion(n).exists(_ < m.version))
+        fs.delete(st.getPath, false)
+      else if ((n.startsWith(ManifestTempPrefix) ||
+          n.startsWith(StagingPrefix)) && st.getModificationTime <= cutoff)
         fs.delete(st.getPath, true)
-    }
-    val unnamed = entries.filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$BucketCol="))
-      .flatMap(d => fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
-        f.getModificationTime <= cutoff).map(f =>
-          s"${d.getPath.getName}/${f.getPath.getName}" -> f.getPath))
-      .filterNot(f => live.contains(f._1))
-    if (unnamed.nonEmpty) {
-      // the older versions still inside the grace (the latest is `live`)
-      val named = kept.flatMap { case ((v, _), _) =>
-        readList(fs, manifestPath(v), "files") }.toSet
-      unnamed.foreach { case (rel, p) =>
-        if (!named.contains(rel)) fs.delete(p, false)
-      }
+      else if (st.isDirectory && n.startsWith(s"$BucketCol="))
+        fs.listStatus(st.getPath).foreach { f =>
+          if (f.isFile && f.getModificationTime <= cutoff &&
+              !named.contains(s"$n/${f.getPath.getName}"))
+            fs.delete(f.getPath, false)
+        }
     }
   }
 
@@ -737,8 +744,16 @@ final class EventLog(
     }
     if (expired.nonEmpty) {
       val names = expired.map(_.getName + "/").toSet
-      commit(fs, Nil, drops = latest(fs).files
-        .filter(f => names.contains(f.take(f.indexOf('/') + 1))).toSet)
+      def gone(f: String) = names.contains(f.take(f.indexOf('/') + 1))
+      // read and commit under one lock: a compaction of an expired
+      // bucket that committed first has its output dropped here, and
+      // one that commits later finds its drops gone and is abandoned
+      synchronized {
+        val base = latest(fs)
+        publish(fs, Manifest(base.version + 1, base.files.filterNot(gone),
+          base.dropped.filterNot(d => gone(d._1))))
+        invalidate()
+      }
       expired.foreach(fs.delete(_, true))
       // deleted files can never be looked up again (the rebuilt index
       // excludes them) — release their decoded rows eagerly
@@ -769,36 +784,44 @@ object EventLog {
     * before its files are moved into their buckets and committed. */
   private val StagingPrefix = ".staging-"
 
-  /** One committed version: the live data files, relative to the root. */
-  private final case class Manifest(version: Long, files: Vector[String])
+  /** One committed version: the live data files, and the files a
+    * compaction dropped with their drop time (epoch ms) until the grace
+    * has passed, all relative to the root. */
+  private final case class Manifest(version: Long, files: Vector[String],
+      dropped: Vector[(String, Long)])
 
   private def manifestVersion(name: String): Option[Long] =
     if (name.startsWith(ManifestPrefix) && name.endsWith(".json"))
       name.slice(ManifestPrefix.length, name.length - 5).toLongOption
     else None
 
-  /** The string list under `key` in a manifest or marker file. */
-  private def readList(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, key: String): Seq[String] = {
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
     val in = fs.open(p)
-    val json =
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val m = java.util.regex.Pattern
-      .compile("\"" + key + "\"\\s*:\\s*\\[(.*?)\\]",
-        java.util.regex.Pattern.DOTALL)
-      .matcher(json)
-    if (!m.find()) Nil
-    else m.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"")
-      .stripSuffix("\"")).filter(_.nonEmpty)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
 
-  /** How long superseded files and manifest versions outlive the
-    * commit that superseded them by default — the window an in-flight
-    * reader's captured file list stays fully readable. Vacuumed by the
-    * NEXT compact() call after expiry, so disk amplification is bounded
-    * by what one grace window of commits superseded. */
+  /** The body between `open` and `close` of the JSON value under `key`. */
+  private def valueOf(json: String, key: String, open: Char,
+      close: Char): String = {
+    val m = java.util.regex.Pattern.compile(
+      s""""$key"\\s*:\\s*\\$open(.*?)\\$close""",
+      java.util.regex.Pattern.DOTALL).matcher(json)
+    if (m.find()) m.group(1) else ""
+  }
+
+  /** The string list under `key` in a manifest or marker file. */
+  private def listIn(json: String, key: String): Seq[String] =
+    valueOf(json, key, '[', ']').split(",").toSeq
+      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+
+  /** How long a file a compaction dropped stays on disk after the drop
+    * by default — the window an in-flight reader's captured file list
+    * stays fully readable. Vacuumed by the NEXT compact() call after
+    * expiry, so disk amplification is bounded by the data files that
+    * compactions dropped in one grace window; the log root holds one
+    * manifest version. */
   val DefaultCompactionGraceMs: Long = 15L * 60L * 1000L
 
   /** Inputs whose plan-stats size is at or under this skip the

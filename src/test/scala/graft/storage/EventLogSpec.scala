@@ -577,4 +577,32 @@ class EventLogSpec extends AnyFunSuite {
       .toSeq === expected)
     assert(manifests === Seq(migrated))
   }
+
+  test("the log root holds one manifest version, and a compaction's " +
+      "dropped files stay on disk until the drop is past the grace") {
+    val dir = Files.createTempDirectory("eventlog-versions").resolve("log")
+    val log = new EventLog(spark, dir.toString, 1000L, autoCompactFiles = 0)
+    (0 until 4).foreach(i =>
+      log.append(RdfEvent.toDF(spark, Seq(ev(i * 10L, i)))))
+    val fs = hadoopFs(new Path(dir.toString))
+    def manifests = fs.listStatus(new Path(dir.toString)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith(EventLog.ManifestPrefix))
+    def dataFiles = Files.walk(dir).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    def count(l: EventLog) = l.query(0L, 1000L).count()
+    assert(manifests.size === 1)
+    assert(dataFiles === 4)
+    assert(log.compact(maxFilesPerBucket = 1) === 1)
+    assert(manifests.size === 1)
+    // the four dropped files stay for readers inside the grace
+    assert(dataFiles === 5)
+    assert(log.compact() === 0)
+    assert(dataFiles === 5)
+    assert(count(new EventLog(spark, dir.toString, 1000L)) === 4)
+    assert(log.compact(graceMs = 0) === 0)
+    assert(manifests.size === 1)
+    assert(dataFiles === 1)
+    assert(count(log) === 4)
+    assert(count(new EventLog(spark, dir.toString, 1000L)) === 4)
+  }
 }
