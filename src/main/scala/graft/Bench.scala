@@ -36,6 +36,11 @@ object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Core count of the official per-query table (`BENCH_FULL.json`),
+    * the `SPARK_GRAFT_CPUS` of the benchmark host's official run. A run
+    * at any other count writes a cpu-suffixed artifact instead. */
+  val OfficialCpus = 32
+
   /** Everything the bench produced; `ok` is false iff any section or
     * registered query failed to produce a timing — main turns that into
     * a NONZERO exit so a broken run can never be mistaken for a green
@@ -78,9 +83,9 @@ object Bench {
     val report = run(spark, sfDir, SparkEntry.queries, cpus.toInt)
     // Persist the full artifact to a file in the working directory
     // (committed with the round). The filename is cpu-suffixed for any
-    // non-official core count so the driver's low-core scaling rerun
-    // can never clobber the 32-core per-query table (it did in r18:
-    // the c8 run overwrote BENCH_FULL.json).
+    // core count but OfficialCpus, so the driver's low-core scaling
+    // rerun can never clobber the official per-query table (it did in
+    // r18: the c8 run overwrote BENCH_FULL.json).
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(report.fullArtifact),
@@ -581,7 +586,8 @@ object Bench {
     val failedCompact = failed.take(8).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     val fullArtifact =
-      if (nCpus == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$nCpus.json"
+      if (nCpus == OfficialCpus) "BENCH_FULL.json"
+      else s"BENCH_FULL_c$nCpus.json"
     val compact = s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","ok":$ok,"n_queries":${results.size},"resampled_n":${resampled.size},"contended_n":${contended.size},"sf":"$sfDir","headline":${jm(collection.mutable.LinkedHashMap(headline: _*))},"slowest":${jm(collection.mutable.LinkedHashMap(slowest: _*))},"extras":${jm(extras)},"failed_n":${failed.size},"failed":$failedCompact,"full":"$fullArtifact"}"""
     Report(json, ok, results.toMap, failed.toSeq, compact, fullArtifact)
   }

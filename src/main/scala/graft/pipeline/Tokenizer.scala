@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.DatasetBridge
 
 /** Byte-pair-encoding tokenizer training + encoding — the canonical
   * pre-training-corpus job (learn a subword vocabulary from the data,
@@ -77,44 +78,45 @@ object Tokenizer {
     // table the per-job scheduling floor, not compute, was the wall).
     // The superseded generation's blocks are released only AFTER the
     // collect that materializes its successor.
-    var words = wordCounts(docs, text)
+    //
+    // The loop's queries are all over the SAME vocabulary-sized table;
+    // AQE's per-query stage orchestration (a separate job per shuffle
+    // stage plus runtime re-optimization) is pure driver overhead here
+    // — the driver round-trip floor, not data volume, is the wall of a
+    // numMerges-round greedy loop at any scale. AQE goes off in a
+    // session of the loop's own (same SparkContext and cached data, its
+    // own SQL conf), so queries running beside it on the caller's
+    // session keep theirs.
+    val loop = docs.sparkSession.newSession()
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    var words = wordCounts(
+        DatasetBridge.ofRows(loop, docs.queryExecution.analyzed), text)
       .select(split(col("word"), "").as("syms"), col("f"))
       .localCheckpoint(false)
     var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
-    // the loop's queries are all over the SAME vocabulary-sized table;
-    // AQE's per-query stage orchestration (a separate job per shuffle
-    // stage plus runtime re-optimization) is pure driver overhead here
-    // — the driver round-trip floor, not data volume, is the wall of a
-    // numMerges-round greedy loop at any scale. Scoped to the loop and
-    // restored after.
-    val spark = docs.sparkSession
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      while (merges.length < numMerges && !exhausted) {
-        val top = pairCounts(words)
-          .orderBy(desc("pf"), col("l"), col("r")).limit(1).collect()
-        // `words` is now checkpointed (the collect computed every
-        // partition via the groupBy); its predecessor can be dropped
-        prev.foreach(graft.util.Lineage.release)
-        prev = None
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((a, b))
-          val next = words
-            .withColumn("syms", mergeOnce(col("syms"), lit(a), lit(b)))
-            .localCheckpoint(false)
-          // checkpoint blocks release through the RDD (Lineage), not
-          // Dataset.unpersist (a no-op for checkpoints) — and only
-          // after the next round's collect materialized the successor
-          prev = Some(words)
-          words = next
-        }
+    while (merges.length < numMerges && !exhausted) {
+      val top = pairCounts(words)
+        .orderBy(desc("pf"), col("l"), col("r")).limit(1).collect()
+      // `words` is now checkpointed (the collect computed every
+      // partition via the groupBy); its predecessor can be dropped
+      prev.foreach(graft.util.Lineage.release)
+      prev = None
+      if (top.isEmpty) exhausted = true
+      else {
+        val (a, b) = (top(0).getString(0), top(0).getString(1))
+        merges += ((a, b))
+        val next = words
+          .withColumn("syms", mergeOnce(col("syms"), lit(a), lit(b)))
+          .localCheckpoint(false)
+        // checkpoint blocks release through the RDD (Lineage), not
+        // Dataset.unpersist (a no-op for checkpoints) — and only
+        // after the next round's collect materialized the successor
+        prev = Some(words)
+        words = next
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     prev.foreach(graft.util.Lineage.release)
     graft.util.Lineage.release(words)
     merges.toSeq

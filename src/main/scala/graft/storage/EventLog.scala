@@ -369,9 +369,17 @@ final class EventLog(
     // batch at its full width: 8 tasks encoding a 36 M-row backlog
     // would trade commit overhead for a 4× encode stall. Bulk loads
     // take [[appendBulk]], which levels buckets across the cluster.
+    // An input planned at most that wide is left alone: Catalyst would
+    // merge a coalesce with the input's own narrower one into the WIDER
+    // count (a caller's coalesce(1) became coalesce(8), one batch up to
+    // one file per core). 0 means the plan does not fix a count (a file
+    // scan): the cap applies.
+    val planned = quads.queryExecution.sparkPlan.outputPartitioning
+      .numPartitions
     val small = quads.queryExecution.optimizedPlan.stats.sizeInBytes <=
       EventLog.AppendCoalesceBytes
-    writeAndCommit((if (small) quads.coalesce(EventLog.AppendMaxTasks)
+    val cap = small && (planned == 0 || planned > EventLog.AppendMaxTasks)
+    writeAndCommit((if (cap) quads.coalesce(EventLog.AppendMaxTasks)
       else quads).withColumn(BucketCol, bucketExpr))
   }
 
@@ -503,54 +511,87 @@ final class EventLog(
 
   // ---- point-lookup fast path -----------------------------------------
 
-  /** Driver-side sparse time index: one (path, minTs, maxTs) entry per
-    * data file, built from parquet footers once per log generation and
-    * invalidated on append — the direct analogue of the reference's
-    * in-memory two-level index (`segmented_storage.rs:117-163`; a few
-    * bytes per segment there, a few bytes per file here). */
-  @transient private var cachedIndex: Option[Vector[EventLog.FileSpan]] = None
+  /** Driver-side sparse time index: one entry per live data file — its
+    * status and (minTs, maxTs) span — in minTs order, for the manifest
+    * version the table reader binds to; the direct analogue of the
+    * reference's in-memory two-level index
+    * (`segmented_storage.rs:117-163`; a few bytes per segment there, a
+    * few bytes per file here). Data files are immutable, so a file's
+    * footer is read once: after a commit, only the files it added are
+    * read ([[footers]] keeps every live file's entry across commits). */
+  @transient private var cachedIndex: Option[Vector[EventLog.IndexedFile]] =
+    None
 
-  private def fileIndex: Vector[EventLog.FileSpan] = synchronized {
+  /** Every live file's index entry by path (None: a file without rows). */
+  @transient private var footers =
+    Map.empty[String, Option[EventLog.IndexedFile]]
+
+  private def fileIndex: Vector[EventLog.IndexedFile] = synchronized {
     cachedIndex.getOrElse {
-      val idx = buildFileIndex()
+      val fs = fileSystem
+      // the SAME manifest version the table reader binds to — pointQuery
+      // and the live fire scan must never diverge from query() on which
+      // files are live
+      val live = liveFiles().map(f =>
+        f.toString -> footers.getOrElse(f.toString, readFooter(fs, f)))
+      footers = live.toMap
+      val idx = live.flatMap(_._2).sortBy(_.span.minTs)
       cachedIndex = Some(idx)
       idx
     }
   }
 
-  private def buildFileIndex(): Vector[EventLog.FileSpan] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // the SAME manifest version the table reader binds to — pointQuery
-    // must never diverge from query() on which files are live
-    val out = Vector.newBuilder[EventLog.FileSpan]
-    liveFiles().foreach { file =>
-      {
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(file, conf))
-        try {
-          var lo = Long.MaxValue
-          var hi = Long.MinValue
-          rdr.getFooter.getBlocks.forEach { block =>
-            block.getColumns.forEach { c =>
-              if (c.getPath.toDotString == "timestamp") {
-                val stats = c.getStatistics
-                if (stats != null && !stats.isEmpty) {
-                  lo = math.min(lo,
-                    stats.genericGetMin.asInstanceOf[java.lang.Long])
-                  hi = math.max(hi,
-                    stats.genericGetMax.asInstanceOf[java.lang.Long])
-                }
-              }
+  private def readFooter(fs: org.apache.hadoop.fs.FileSystem,
+      file: org.apache.hadoop.fs.Path): Option[EventLog.IndexedFile] = {
+    val status = fs.getFileStatus(file)
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status,
+        spark.sparkContext.hadoopConfiguration))
+    try {
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
+      rdr.getFooter.getBlocks.forEach { block =>
+        block.getColumns.forEach { c =>
+          if (c.getPath.toDotString == "timestamp") {
+            val stats = c.getStatistics
+            if (stats != null && !stats.isEmpty) {
+              lo = math.min(lo,
+                stats.genericGetMin.asInstanceOf[java.lang.Long])
+              hi = math.max(hi,
+                stats.genericGetMax.asInstanceOf[java.lang.Long])
             }
           }
-          if (lo <= hi)
-            out += EventLog.FileSpan(file.toString, lo, hi)
-        } finally rdr.close()
+        }
       }
-    }
-    out.result().sortBy(_.minTs)
+      if (lo <= hi) Some(EventLog.IndexedFile(status,
+        EventLog.FileSpan(file.toString, lo, hi)))
+      else None
+    } finally rdr.close()
   }
+
+  /** The live data files whose rows can fall in `[start, end]`
+    * (inclusive), picked on the driver from the per-file ts index: no
+    * listing, no job, and no time bound in the plan that scans them. */
+  private[graft] def filesBetween(start: Long, end: Long)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fileIndex.collect {
+      case f if f.span.minTs <= end && f.span.maxTs >= start => f.status
+    }
+
+  /** A scan relation over exactly `files`, in the five canonical
+    * columns (no partition column). Its file list is the relation's
+    * only input, so a plan built over it can be pointed at another
+    * file list by swapping the relation — which the live engine does at
+    * every fire (see [[graft.streaming.CompiledLiveStream]]). */
+  private[graft] def scanOf(files: Seq[org.apache.hadoop.fs.FileStatus])
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation =
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      new EventLog.FileList(files),
+      partitionSchema = org.apache.spark.sql.types.StructType(Nil),
+      dataSchema = DataSchema, bucketSpec = None,
+      fileFormat = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat,
+      options = Map.empty)(spark)
 
   /** Bounded LRU of fully-decoded data files for the point-lookup path —
     * the analogue of the reference's in-memory segments (its 0.235 ms
@@ -623,9 +664,8 @@ final class EventLog(
     // limit stops after a handful of decodes instead of buffering the
     // whole range (the reference's segment scan merges ts-sorted;
     // `segmented_storage.rs:308-463`).
-    val files = fileIndex
+    val files = fileIndex.map(_.span)
       .filter(f => f.minTs <= end && f.maxTs >= start)
-      .sortBy(_.minTs)
     var cutoff = Long.MaxValue
     var i = 0
     while (i < files.length &&
@@ -843,6 +883,32 @@ object EventLog {
 
   /** One data file's ts span in the driver-side sparse index. */
   final case class FileSpan(path: String, minTs: Long, maxTs: Long)
+
+  /** A sparse-index entry: the file's status (for scans) and ts span. */
+  private final case class IndexedFile(
+      status: org.apache.hadoop.fs.FileStatus, span: FileSpan)
+
+  /** A fixed file list as a Spark file index: what [[EventLog.scanOf]]
+    * reads. Listing is the list itself; no partition values. */
+  private final class FileList(files: Seq[org.apache.hadoop.fs.FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    def rootPaths: Seq[org.apache.hadoop.fs.Path] = files.map(_.getPath)
+    def listFiles(
+        partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions
+          .Expression],
+        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions
+          .Expression])
+        : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
+      Seq(org.apache.spark.sql.execution.datasources.PartitionDirectory(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        files.map(org.apache.spark.sql.execution.datasources
+          .FileStatusWithMetadata(_))))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType(Nil)
+  }
 
   /** Max decoded files held by the point-lookup row cache. Bounds driver
     * memory to ~(files × rows-per-file × record size); at 100 TB the

@@ -4,9 +4,14 @@ import graft.janusql.{JanusQLParser, ParsedJanusQuery, WindowDefinition}
 import graft.sparql.{AggItem, Items, Query, SelectQuery, SparqlCompiler}
 import graft.storage.EventLog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import scala.collection.mutable
 
@@ -22,16 +27,22 @@ import scala.collection.mutable
   * snapshot store:
   *
   *   - micro-batches land in an [[EventLog]] (`foreachBatch` append —
-  *     partitioned parquet, so window reads prune to the buckets the
-  *     RANGE covers);
+  *     immutable parquet files, so a fire reads only the files whose ts
+  *     span meets its RANGE, picked on the driver from the log's
+  *     per-file index);
   *   - the driver keeps only WINDOW BOOKKEEPING (per-stream event-time
   *     maxima and each window's next close boundary — a few longs, not
   *     events);
-  *   - at each close `c`, the snapshot `[c-range, c)` of every window
-  *     (W2 merge) plus the static/baseline DataFrame is assembled
-  *     lazily and the COMPILED query plan — any shape
-  *     [[SparqlCompiler]] supports: BGP joins, GRAPH scopes, FILTER,
-  *     aggregates, baseline joins — executes as one distributed job;
+  *   - the query is compiled and optimized ONCE per static side
+  *     ([[FireTemplate]]) over a placeholder log scan and close list —
+  *     any shape [[SparqlCompiler]] supports: BGP joins, GRAPH scopes,
+  *     FILTER, aggregates, baseline joins. At each close `c` the
+  *     snapshot `[c-range, c)` of every window (W2 merge) plus the
+  *     static/baseline DataFrame is that plan with the fire's file list
+  *     and close list bound in: no compile, a re-optimization of an
+  *     already optimized plan instead of a fresh one, and no
+  *     fire-varying literal in generated code, so Spark's code
+  *     generation cache serves every fire after the first;
   *   - results go to `resultSink` as a DataFrame: the consumer decides
   *     whether to write, stream on, or collect. The engine never
   *     materializes results on the driver, and every sink frame is
@@ -64,6 +75,7 @@ final class CompiledLiveStream(
     log: EventLog,
     resultSink: (DataFrame, Long, Long) => Unit) {
 
+  import CompiledLiveStream._
   import LiveStreamProcessing.{DefaultGraph, SentinelSubject}
 
   val parsed: ParsedJanusQuery = JanusQLParser.parse(queryText)
@@ -72,21 +84,6 @@ final class CompiledLiveStream(
 
   private val compiledQuery: Query =
     LiveStreamProcessing.buildCombinedQuery(parsed)
-
-  /** Static/baseline quads (default-graph side of stream-static joins).
-    * A DataFrame — at cluster scale this is the materialized baseline
-    * table, not driver memory. */
-  @volatile private var staticDF: Option[DataFrame] = None
-  // row-level presence, probed ONCE at registration: the fire-time
-  // empty-snapshot shortcut must see a zero-row static frame as
-  // "no static data" (parity checks staticQuads.isEmpty row-wise),
-  // and a non-empty one lets fires skip their emptiness probe
-  @volatile private var staticHasRows: Boolean = false
-
-  def setStaticData(quads: DataFrame): Unit = {
-    staticDF = Some(quads)
-    staticHasRows = !quads.isEmpty
-  }
 
   /** Does an EMPTY solution sequence still emit a row? True exactly
     * for aggregate SELECTs with no GROUP BY — the implicit single
@@ -112,6 +109,23 @@ final class CompiledLiveStream(
     * drive window closes. */
   private val registeredStreams: Seq[String] =
     parsed.liveWindows.map(_.streamName).distinct
+
+  /** The fire plans for the current static side: built here, and again
+    * by [[setStaticData]] — so a hybrid query pays for its template
+    * during baseline warm-up, not in its first fire. Read once per
+    * advance, so a concurrent swap never splits one. */
+  @volatile private var template: FireTemplate =
+    new FireTemplate(None, staticHasRows = false)
+
+  /** Static/baseline quads (default-graph side of stream-static joins).
+    * A DataFrame — at cluster scale this is the materialized baseline
+    * table, not driver memory. Row-level presence is probed ONCE here:
+    * the fire-time empty-snapshot shortcut must see a zero-row static
+    * frame as "no static data" (parity checks staticQuads.isEmpty
+    * row-wise), and a non-empty one lets fires skip their emptiness
+    * probe. Rebuilds the fire template over the new static side. */
+  def setStaticData(quads: DataFrame): Unit =
+    template = new FireTemplate(Some(quads), staticHasRows = !quads.isEmpty)
 
   /** Process one micro-batch of canonical quads whose `graph` column
     * holds the source STREAM uri. Called from `foreachBatch` (or
@@ -210,19 +224,23 @@ final class CompiledLiveStream(
     * fixed for the whole advance, so enumerating it up front is
     * equivalent), then schedule the log prune.
     *
-    * Every advance evaluates its due fires as ONE distributed job
-    * ([[fireBatch]]) — a fire per Spark job would pay ~0.3 s of
-    * scheduling floor each, the dominant cost at high fire rates —
+    * Every advance evaluates its due fires together ([[fireBatch]]),
     * keyed per fire through the compiler's `extraKeys` channel (the
-    * same machinery that makes N historical windows one plan). Because
-    * that one job lands in an EAGER localCheckpoint, every frame
-    * handed to `resultSink` is FILE-INDEPENDENT: it stays valid after
-    * the log prunes the segments behind it, so a sink may hold frames
-    * across arrival chunks and evaluate late (the out-of-order gate
-    * entry unions all 29 fire frames at the very end) without
-    * re-pinning each one. The pins live until [[close]] — result-sized
-    * (aggregate rows per fire) but cumulative over fires, so a
-    * long-running stream releases them once its sink has consumed. */
+    * same machinery that makes N historical windows one plan), from the
+    * template compiled once per static side. Per advance, Spark runs
+    * the baseline broadcast stage (hybrid queries), the eager
+    * localCheckpoint that evaluates the fires, and, later, the sink's
+    * read of the checkpoint; the driver binds the fire's file list and
+    * close list into the template and re-plans it, with no compile and
+    * no new generated code. Because the evaluation lands in an EAGER
+    * localCheckpoint, every frame handed to `resultSink` is
+    * FILE-INDEPENDENT: it stays valid after the log prunes the segments
+    * behind it, so a sink may hold frames across arrival chunks and
+    * evaluate late (the out-of-order gate entry unions all 29 fire
+    * frames at the very end) without re-pinning each one. The pins live
+    * until [[close]] — result-sized (aggregate rows per fire) but
+    * cumulative over fires, so a long-running stream releases them once
+    * its sink has consumed. */
   private def advance(): Unit = {
     // every due (window, close) pair, closes enumerated per window
     val due = parsed.liveWindows.flatMap { w =>
@@ -244,66 +262,25 @@ final class CompiledLiveStream(
       pendingPruneCutoff = Some(nextClose.values.min - maxRange)
   }
 
-  /** All due fires as ONE distributed evaluation: each live window
-    * contributes a single time-pruned log scan over the union of its
-    * snapshots, rows are assigned to the fires whose `[c-range, c)`
-    * span covers them (each row paired with the tiny close list),
-    * and the compiled plan runs once with the fire id as an
-    * orchestration key. The result is pinned with an eager
-    * localCheckpoint — the one Spark job — and sliced per fire for the
-    * sink, in close-time order.
+  /** All due fires as ONE distributed evaluation of the keyed template:
+    * the log scan reads the live files whose ts span meets the union of
+    * the snapshots, rows are assigned to the fires whose `[c-range, c)`
+    * span covers them (each row paired with the tiny close list), and
+    * the compiled plan runs once with the fire id as an orchestration
+    * key. The result is pinned with an eager localCheckpoint and handed
+    * to the sink per fire, in close-time order — whole when the advance
+    * has a single close, sliced by fire id otherwise.
     *
     * A fire whose every window is EMPTY has no rows under its fire id
     * (a keyed aggregation cannot conjure its group), but the per-fire
     * semantics emit e.g. `COUNT = 0` — those fires re-run through the
-    * single-fire path, whose empty-snapshot evaluation preserves the
-    * implicit-single-group shape and costs almost nothing (every scan
-    * prunes to zero files). */
+    * single-fire path ([[fire]]), whose unkeyed evaluation preserves
+    * the implicit-single-group shape. */
   private def fireBatch(due: Seq[(WindowDefinition, Long)]): Unit = {
-    val fireCol = "__fire_id"
+    val t = template
     val closes = due.map(_._2).distinct.sorted
-    val minFrom = closes.min - maxRange
-    val maxTo = closes.max - 1
-    // every row paired with every close, as a generator over the
-    // close list held in the plan: the same pairs a nested-loop join
-    // against a broadcast close table gives, without the job that
-    // broadcast costs
-    val everyClose = explode(typedLit(closes))
-    val windowParts = parsed.liveWindows.map { lw =>
-      log.query(minFrom, maxTo)
-        .where(col("graph") === lw.streamName &&
-          col("subject") =!= SentinelSubject)
-        .withColumn(fireCol, everyClose)
-        .where(col("timestamp") >= col(fireCol) - lw.width &&
-          col("timestamp") < col(fireCol))
-        .withColumn("graph", lit(lw.windowName))
-    }
-    val staticPart = staticDF.map(_.withColumn("graph", lit(DefaultGraph))
-      .withColumn(fireCol, everyClose))
-    val snapshot = (windowParts ++ staticPart).reduce(_ unionByName _)
-    // which fires have ANY snapshot row: parity emits nothing at all
-    // for an entirely empty snapshot (LiveStreamProcessing.fire's
-    // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
-    // closes are skipped, not evaluated to an implicit-group row. The
-    // probe is only paid when it can matter: a query that emits
-    // nothing on empty input needs no rows-present/no-groups
-    // distinction, and static rows make every close present. It rides
-    // the snapshot scan the compiled plan performs anyway, as an
-    // observed collect_set metric — no second scan, no distinct
-    // shuffle, no extra job (collect_set dedups, so a query whose BGP
-    // scans the snapshot several times still reports each fire once)
-    val needProbe = emitsOnEmptyGroup && !staticHasRows
-    val probeObs = new org.apache.spark.sql.Observation()
-    val probed =
-      if (needProbe) snapshot.observe(probeObs, collect_set(col(fireCol)))
-      else snapshot
-    val resultPart = SparqlCompiler
-      .compile(probed, compiledQuery, Seq(fireCol))
-    val fireIdx = resultPart.schema.fieldIndex(fireCol)
-    def snapPresent: Set[Long] =
-      if (!emitsOnEmptyGroup) Set.empty[Long]
-      else if (staticHasRows) closes.toSet
-      else observedFires(probeObs)
+    val (resultPart, probe) = t.bind(t.keyed, closes)
+    val fireIdx = resultPart.schema.fieldIndex(FireCol)
     if (emitsOnEmptyGroup) {
       // single-group aggregates emit AT MOST ONE row per fire — the
       // result set is fire-count-bounded, so it rides the driver like
@@ -319,7 +296,13 @@ final class CompiledLiveStream(
       val keepIdx = resultPart.schema.fields.indices.filter(_ != fireIdx)
       val outSchema = org.apache.spark.sql.types.StructType(
         keepIdx.map(resultPart.schema.fields))
-      val snapHas = snapPresent
+      // which fires have ANY snapshot row: parity emits nothing at all
+      // for an entirely empty snapshot (LiveStreamProcessing.fire's
+      // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
+      // closes are skipped, not evaluated to an implicit-group row.
+      // Static rows make every close present; otherwise the template's
+      // probe reported them (see FireTemplate.probes)
+      val snapHas = probe.fold(closes.toSet)(observedFires)
       due.foreach { case (w, c) =>
         present.get(c) match {
           case Some(r) =>
@@ -333,7 +316,7 @@ final class CompiledLiveStream(
             // DOES evaluate and emits e.g. COUNT = 0 — re-run through
             // the single-fire path, whose implicit single group
             // preserves that shape
-            fire(w, c, knownNonEmpty = true)
+            fire(t, w, c)
           case None => () // empty snapshot — parity emits nothing
         }
       }
@@ -341,15 +324,19 @@ final class CompiledLiveStream(
     }
     // which fires have solutions rides the checkpoint job the same
     // way, as an observed collect_set — no distinct, no extra job
-    val resultObs = new org.apache.spark.sql.Observation()
+    val resultObs = new Observation()
     val combined = resultPart
-      .observe(resultObs, collect_set(col(fireCol)))
+      .observe(resultObs, collect_set(col(FireCol)))
       .localCheckpoint(eager = true)
     firePins += combined
     val present = observedFires(resultObs)
     due.foreach { case (w, c) =>
+      // one close: the checkpoint IS the fire's frame — a slice would
+      // put the close into generated code as a literal, a new class per
+      // fire for the sink's read
       if (present.contains(c))
-        resultSink(combined.where(col(fireCol) === c).drop(fireCol),
+        resultSink((if (closes.size == 1) combined
+          else combined.where(col(FireCol) === c)).drop(FireCol),
           c - w.width, c)
       // else: no solutions for this fire — a non-aggregate (or
       // grouped) query emits nothing on an empty solution sequence,
@@ -358,43 +345,150 @@ final class CompiledLiveStream(
   }
 
   /** The fire ids an observed `collect_set(__fire_id)` reported. */
-  private def observedFires(obs: org.apache.spark.sql.Observation)
-      : Set[Long] =
+  private def observedFires(obs: Observation): Set[Long] =
     obs.get.values.headOption match {
       case Some(s: scala.collection.Seq[_]) =>
         s.iterator.map(_.asInstanceOf[Long]).toSet
       case _ => Set.empty[Long]
     }
 
-  /** One distributed evaluation at close `c` — the [[fireBatch]]
-    * fallback for a fire whose snapshot has rows but whose keyed
-    * aggregation produced no group (the implicit single group must
-    * emit e.g. `COUNT = 0`): window graphs from the log (time-pruned
-    * scans), static data in the default graph, the full compiled plan.
-    * An entirely empty snapshot emits NOTHING — the parity path's
-    * shortcut — rather than an implicit-group aggregate row; the probe
-    * is a limit-1 job over bucket-pruned scans, skipped when static
-    * data guarantees the snapshot is non-empty (or the caller already
-    * knows it is). The result is pinned eagerly before the sink sees
-    * it — the file-independence guarantee of [[advance]] holds on
-    * every sink handoff, this path included. */
-  private def fire(w: WindowDefinition, c: Long,
-      knownNonEmpty: Boolean = false): Unit = {
-    val windowParts = parsed.liveWindows.map { lw =>
-      log.query(c - lw.width, c - 1) // inclusive [from, c-1] = [from, c)
-        .where(col("graph") === lw.streamName &&
-          col("subject") =!= SentinelSubject)
-        .withColumn("graph", lit(lw.windowName))
-    }
-    val staticPart = staticDF.map(
-      _.withColumn("graph", lit(DefaultGraph)))
-    val snapshot = (windowParts ++ staticPart).reduce(_ unionByName _)
-    // staticHasRows (row-level, probed at registration) — an empty
-    // static frame must NOT defeat the parity shortcut
-    if (!knownNonEmpty && !staticHasRows && snapshot.isEmpty) return
-    val out = SparqlCompiler.compile(snapshot, compiledQuery)
-      .localCheckpoint(eager = true)
+  /** One unkeyed evaluation at close `c` — the [[fireBatch]] fallback
+    * for a fire whose snapshot has rows but whose keyed aggregation
+    * produced no group (the implicit single group must emit e.g.
+    * `COUNT = 0`), from the template's single-fire plan. The result is
+    * pinned eagerly before the sink sees it — the file-independence
+    * guarantee of [[advance]] holds on every sink handoff, this path
+    * included. */
+  private def fire(t: FireTemplate, w: WindowDefinition, c: Long): Unit = {
+    val out = t.bind(t.single, Seq(c))._1.localCheckpoint(eager = true)
     firePins += out
     resultSink(out, c - w.width, c)
   }
+
+  /** The query's fire plans over one static side, compiled and
+    * optimized ONCE ([[SparqlCompiler]]'s only caller here) against a
+    * zero-file log scan ([[EventLog.scanOf]]) and a placeholder close
+    * list, and kept as optimized logical plans. A fire [[bind]]s its
+    * own file list and close list into one of them: re-optimizing the
+    * bound plan is a fraction of a fresh compile, and nothing that
+    * varies per fire reaches generated code — the file list is a scan
+    * input, the close list a referenced literal, and the time pruning
+    * the old per-fire `timestamp BETWEEN` bounds did is the choice of
+    * files ([[EventLog.filesBetween]]). */
+  private final class FireTemplate(static: Option[DataFrame],
+      val staticHasRows: Boolean) {
+
+    private val scan = log.scanOf(Nil)
+    private val closeHolder = closeList(TemplateCloses)
+
+    /** Whether a fire must learn which closes have ANY snapshot row —
+      * only when it can matter: a query that emits nothing on empty
+      * input needs no rows-present/no-groups distinction, and static
+      * rows make every close present. The probe rides the snapshot
+      * scan the compiled plan performs anyway, as an observed
+      * collect_set metric — no second scan, no distinct shuffle, no
+      * extra job (collect_set dedups, so a query whose BGP scans the
+      * snapshot several times still reports each fire once). */
+    private val probes = emitsOnEmptyGroup && !staticHasRows
+
+    /** Every window's rows paired with the closes whose span covers
+      * them, plus the static side paired with every close. */
+    private def snapshot: DataFrame = {
+      val rows = spark.baseRelationToDataFrame(scan)
+      // every row paired with every close, as a generator over the
+      // close list held in the plan: the same pairs a nested-loop join
+      // against a broadcast close table gives, without the job that
+      // broadcast costs
+      val everyClose = explode(ColumnBridge.column(closeHolder))
+      val windowParts = parsed.liveWindows.map { lw =>
+        rows.where(col("graph") === lw.streamName &&
+            col("subject") =!= SentinelSubject)
+          .withColumn(FireCol, everyClose)
+          .where(col("timestamp") >= col(FireCol) - lw.width &&
+            col("timestamp") < col(FireCol))
+          .withColumn("graph", lit(lw.windowName))
+      }
+      val staticPart = static.map(_.withColumn("graph", lit(DefaultGraph))
+        .withColumn(FireCol, everyClose))
+      (windowParts ++ staticPart).reduce(_ unionByName _)
+    }
+
+    /** All due fires of an advance, keyed by fire id. */
+    val keyed: Plan = freeze(SparqlCompiler.compile(
+      if (probes) snapshot.observe(ProbeName, collect_set(col(FireCol)))
+      else snapshot,
+      compiledQuery, Seq(FireCol)))
+
+    /** One fire, unkeyed (see [[fire]]); only aggregate queries reach
+      * it, so it is built on first use. */
+    lazy val single: Plan =
+      freeze(SparqlCompiler.compile(snapshot, compiledQuery))
+
+    private def freeze(df: DataFrame): Plan = {
+      val p = df.queryExecution.optimizedPlan
+      val closeLists = p.collectWithSubqueries { case n =>
+        n.expressions.map(_.collect { case l: Literal
+          if l == closeHolder => l }.size).sum
+      }.sum
+      // fire ids come only from the close list, so a plan without one
+      // must be one the optimizer proved empty (a default-graph pattern
+      // before any static data arrived)
+      require(closeLists > 0 || p.maxRows.contains(0L),
+        "the optimized fire plan lost its close list")
+      Plan(p, p.collectWithSubqueries {
+        case l: LogicalRelation if l.relation eq scan => l }.size,
+        closeLists)
+    }
+
+    /** `plan` over the live files that can hold rows of `closes`'
+      * snapshots and over `closes` (ascending), as a DataFrame; with
+      * the Observation the probe reports to when the plan has one. */
+    def bind(plan: Plan, closes: Seq[Long])
+        : (DataFrame, Option[Observation]) = {
+      val files = log.scanOf(
+        log.filesBetween(closes.head - maxRange, closes.last - 1))
+      val fireCloses = closeList(closes)
+      var scans, closeLists = 0
+      var probe = Option.empty[(Observation, Long)]
+      val bound = plan.optimized.transformUpWithSubqueries {
+        case l: LogicalRelation if l.relation eq scan =>
+          scans += 1
+          l.copy(relation = files)
+        case m: CollectMetrics if m.name == ProbeName =>
+          // an Observation reports once: a fresh name per fire
+          val obs = new Observation()
+          probe = Some(obs -> m.dataframeId)
+          m.copy(name = obs.name)
+      }.transformAllExpressionsWithSubqueries {
+        case l: Literal if l == closeHolder =>
+          closeLists += 1
+          fireCloses
+      }
+      require(scans == plan.scans && closeLists == plan.closeLists,
+        s"fire plan rebind found $scans log scans and $closeLists close " +
+          s"lists; the template holds ${plan.scans} and ${plan.closeLists}")
+      probe.foreach { case (obs, id) => DatasetBridge.register(spark, obs, id) }
+      (DatasetBridge.ofRows(spark, bound), probe.map(_._1))
+    }
+  }
+}
+
+object CompiledLiveStream {
+  /** The fire id column: a fire's close time. */
+  private val FireCol = "__fire_id"
+
+  /** The probe metric's name in a template; each fire renames it. */
+  private val ProbeName = "__fire_probe"
+
+  /** The close list a template is built with. Real closes are positive
+    * multiples of a slide, so no fire's list equals it. */
+  private val TemplateCloses = Seq(-1L)
+
+  private def closeList(closes: Seq[Long]): Literal =
+    Literal.create(closes, ArrayType(LongType, containsNull = false))
+
+  /** An optimized fire plan, with how many log scans and close lists
+    * it holds — a rebind must find exactly these. */
+  private final case class Plan(optimized: LogicalPlan, scans: Int,
+      closeLists: Int)
 }

@@ -28,6 +28,25 @@ class TokenizerSpec extends AnyFunSuite {
     assert(merges === Seq(("a", "a"), ("a", "b")))
   }
 
+  test("trainBpe leaves the shared session's AQE setting alone while " +
+      "it runs") {
+    val docs = Seq((0L, "aa ab"), (1L, "aa aa")).toDF("doc_id", "text")
+    val aqe = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(aqe) === "true")
+    val run = scala.concurrent.Future(
+      Tokenizer.trainBpe(docs, col("text"), numMerges = 5))(
+      scala.concurrent.ExecutionContext.global)
+    val seen = scala.collection.mutable.Set.empty[String]
+    while (!run.isCompleted) {
+      seen += spark.conf.get(aqe)
+      Thread.sleep(1)
+    }
+    val merges = scala.concurrent.Await.result(run,
+      scala.concurrent.duration.Duration.Zero)
+    assert(seen === Set("true"))
+    assert(merges === Seq(("a", "a"), ("a", "b")))
+  }
+
   test("pair-frequency ties break lexicographically") {
     val docs = Seq((0L, "xy xy cd cd")).toDF("doc_id", "text")
     val merges = Tokenizer.trainBpe(docs, col("text"), numMerges = 1)

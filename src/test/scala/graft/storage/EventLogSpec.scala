@@ -605,4 +605,18 @@ class EventLogSpec extends AnyFunSuite {
     assert(count(log) === 4)
     assert(count(new EventLog(spark, dir.toString, 1000L)) === 4)
   }
+
+  test("a Spark-path append of a batch already coalesced to one " +
+      "partition lands as one data file") {
+    val dir = Files.createTempDirectory("eventlog-narrow").resolve("log")
+    val log = new EventLog(spark, dir.toString, 1000L, autoCompactFiles = 0)
+    val batch = RdfEvent.toDF(spark, (0 until 5).map(i => ev(i * 10L, i)))
+      .coalesce(1)
+    assert(EventLog.localQuads(batch).isEmpty) // the Spark writer path
+    log.append(batch)
+    val files = Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.size === 1, s"expected one data file, found $files")
+    assert(log.query(0L, 1000L).count() === 5)
+  }
 }

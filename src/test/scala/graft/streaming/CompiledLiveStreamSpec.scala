@@ -4,12 +4,21 @@ import graft.TestSpark
 import graft.core.RdfEvent
 import graft.storage.EventLog
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The cluster-scale live path must produce EXACTLY the results of the
   * driver-buffered parity path ([[LiveStreamProcessing]], itself ported
@@ -142,6 +151,196 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     assert(compiled.exists { case (b, _, _) =>
       b.get("s").contains("http://example.org/a") &&
         b.get("base").contains("10") })
+  }
+
+  private val hybridQuery =
+    """PREFIX ex: <http://example.org/>
+      |PREFIX janus: <https://janus.rs/fn#>
+      |REGISTER RStream <output> AS
+      |SELECT ?s ?v ?base
+      |FROM NAMED WINDOW ex:w1 ON STREAM ex:stream1 [RANGE 1000 STEP 100]
+      |WHERE {
+      |    ?s ex:baseline ?base .
+      |    WINDOW ex:w1 {
+      |        ?s ex:value ?v .
+      |        FILTER(janus:absolute_threshold_exceeded(?v, ?base, "5"))
+      |    }
+      |}""".stripMargin
+
+  private def baseline(subject: String, v: Int): RdfEvent =
+    RdfEvent(0L, s"http://example.org/$subject",
+      "http://example.org/baseline", v.toString, "")
+
+  /** Event `i` of a feed that makes exactly one close due per batch:
+    * ts `100 i + 50`, alternating subjects a and b. */
+  private def reading(i: Int): (String, RdfEvent) =
+    Stream1 -> RdfEvent(i * 100L + 50L,
+      s"http://example.org/${if (i % 2 == 0) "a" else "b"}",
+      "http://example.org/value", (50 + i).toString, "")
+
+  private def sentinel(ts: Long): (String, RdfEvent) =
+    Stream1 -> RdfEvent(ts, LiveStreamProcessing.SentinelSubject,
+      LiveStreamProcessing.SentinelPredicate,
+      LiveStreamProcessing.SentinelObject, "")
+
+  /** Spark jobs one steady single fire of [[hybridQuery]] ran when each
+    * fire compiled its plan afresh (measured with this spec's listener
+    * on that engine): the baseline broadcast, the checkpoint and the
+    * sink's collect. */
+  private val JobsPerFireBeforeTemplate = 3
+
+  test("steady single fires generate no new code and run no more jobs " +
+      "than per-fire compilation did") {
+    val fired = mutable.ArrayBuffer.empty[Long]
+    val c = new CompiledLiveStream(spark, hybridQuery, newLog(),
+      (df, _, to) => { df.collect(); fired += to })
+    c.setStaticData(RdfEvent.toDF(spark,
+      Seq(baseline("a", 10), baseline("b", 100))))
+    // warm-up: the first fires generate the code, and by batch 12 the
+    // window holds a full RANGE of readings
+    (0 until 12).foreach(i => c.processBatch(quadsDF(Seq(reading(i)))))
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val firedBefore = fired.size
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (12 until 22).foreach(i => c.processBatch(quadsDF(Seq(reading(i)))))
+      Thread.sleep(2000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    c.close()
+    // every batch closed one window, and every fire had solutions
+    assert(fired.size - firedBefore === 10)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles === 0,
+      "a steady fire generated new code")
+    assert(jobs.get() <= 10 * JobsPerFireBeforeTemplate,
+      s"10 fires ran ${jobs.get()} jobs")
+  }
+
+  test("a second setStaticData rebuilds the template: later fires join " +
+      "the new baseline (parity)") {
+    val first = Seq(baseline("a", 10))
+    val second = Seq(baseline("b", 100))
+    val before = (0 until 6).map(reading)
+    val after = (6 until 14).map(reading) :+ sentinel(3000L)
+
+    val p = new LiveStreamProcessing(spark, hybridQuery)
+    p.registerStream(Stream1)
+    p.addStaticData(first)
+    p.startProcessing()
+    before.foreach { case (st, e) => p.addEvent(st, e) }
+    p.addStaticData(second) // the parity engine's static side accumulates
+    after.foreach { case (st, e) => p.addEvent(st, e) }
+    val parity = p.collectResults()
+      .map(r => (r.bindings, r.timestampFrom, r.timestampTo)).toSet
+
+    val buf = new SinkBuffer
+    val c = new CompiledLiveStream(spark, hybridQuery, newLog(), buf.sink)
+    c.setStaticData(RdfEvent.toDF(spark, first))
+    before.foreach(e => c.processBatch(quadsDF(Seq(e))))
+    c.setStaticData(RdfEvent.toDF(spark, first ++ second))
+    after.foreach(e => c.processBatch(quadsDF(Seq(e))))
+    c.close()
+
+    assert(buf.rows.toSet === parity)
+    // b joins only the second baseline, so it shows up only after it
+    val bFires = buf.rows.collect {
+      case (b, _, to) if b.get("base").contains("100") => to }
+    assert(bFires.nonEmpty && bFires.min >= 600L)
+  }
+
+  test("parity on every fire of a two-window query with different " +
+      "RANGEs, fed batch by batch") {
+    val query =
+      """PREFIX ex: <http://example.org/>
+        |REGISTER RStream <output> AS
+        |SELECT ?s ?v ?f
+        |FROM NAMED WINDOW ex:wl ON STREAM ex:stream1 [RANGE 1000 STEP 200]
+        |FROM NAMED WINDOW ex:ws ON STREAM ex:stream1 [RANGE 400 STEP 100]
+        |WHERE {
+        |    WINDOW ex:wl { ?s ex:value ?v }
+        |    WINDOW ex:ws { ?s ex:flag ?f }
+        |}""".stripMargin
+    // subject k reports a value, then a flag 100 ms later
+    val events = (0 until 24).map { i =>
+      Stream1 -> RdfEvent(i * 100L + 70L, s"http://example.org/s${i / 2}",
+        if (i % 2 == 0) "http://example.org/value"
+        else "http://example.org/flag", s"o$i", "")
+    } :+ sentinel(4000L)
+    val (parity, compiled) = runBoth(query, events.map(Seq(_)))
+    def byFire(rows: Set[(Map[String, String], Long, Long)]) =
+      rows.groupBy(r => (r._2, r._3)).map { case (k, v) => k -> v.map(_._1) }
+    assert(parity.nonEmpty)
+    assert(byFire(compiled) === byFire(parity))
+    // both windows fired, each with its own span
+    assert(compiled.map(r => r._3 - r._2) === Set(1000L, 400L))
+  }
+
+  test("with 1 h buckets, a 5 s window's fire reads only the files that " +
+      "overlap the window") {
+    val query =
+      """PREFIX ex: <http://example.org/>
+        |REGISTER RStream <output> AS
+        |SELECT ?s ?p ?o
+        |FROM NAMED WINDOW ex:w1 ON STREAM ex:stream1 [RANGE 5000 STEP 1000]
+        |WHERE {
+        |    WINDOW ex:w1 { ?s ?p ?o }
+        |}""".stripMargin
+    val dir = Files.createTempDirectory("clslog1h").resolve("log")
+    val log = new EventLog(spark, dir.toString, bucketMs = 3600L * 1000L)
+    // a LAZY sink: the only reads of the log are the fires' own scans
+    val fired = mutable.ArrayBuffer.empty[Long]
+    val c = new CompiledLiveStream(spark, query, log,
+      (_, _, to) => fired += to)
+    // one single-quad file per batch, at ts 1000 i + 500: batch i makes
+    // close 1000 i due, whose window [1000 i - 5000, 1000 i) holds the
+    // five previous batches' files
+    def batch(i: Int): Unit = c.processBatch(quadsDF(Seq(
+      Stream1 -> RdfEvent(i * 1000L + 500L, s"http://example.org/s$i",
+        "http://example.org/p", s"o$i", ""))))
+    (0 until 20).foreach(batch)
+    // rows read (task input metrics) and the file list each fire's
+    // scan was given (its optimized plan's log relation)
+    val records = new AtomicLong
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          records.addAndGet(m.inputMetrics.recordsRead))
+    }
+    val scans = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case l: LogicalRelation => l.relation match {
+            case r: HadoopFsRelation => scanned.add(r.inputFiles.length)
+            case _ => ()
+          }
+          case _ => ()
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(scans)
+    try {
+      (20 until 30).foreach(batch)
+      Thread.sleep(2000)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(scans)
+    }
+    c.close()
+    assert(fired.size === 29)
+    val files = Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    // every file sits in the one bucket the whole feed fell into
+    assert(files.size === 30)
+    assert(files.map(_.getParent).distinct.size === 1)
+    assert(scanned.asScala.toSeq === Seq.fill(10)(5),
+      "files each fire's scan read")
+    assert(records.get() === 10 * 5, "rows read by 10 fires")
   }
 
   test("parity on Oxigraph-parity forms in a live window: OPTIONAL + " +
