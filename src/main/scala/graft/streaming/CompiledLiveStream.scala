@@ -301,8 +301,11 @@ final class CompiledLiveStream(
       // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
       // closes are skipped, not evaluated to an implicit-group row.
       // Static rows make every close present; otherwise the template's
-      // probe reported them (see FireTemplate.probes)
-      val snapHas = probe.fold(closes.toSet)(observedFires)
+      // probe reported them (see FireTemplate.probes), and a plan the
+      // optimizer proved empty has no probe and no present close
+      val snapHas =
+        if (t.staticHasRows) closes.toSet
+        else probe.fold(Set.empty[Long])(observedFires)
       due.foreach { case (w, c) =>
         present.get(c) match {
           case Some(r) =>
@@ -372,9 +375,9 @@ final class CompiledLiveStream(
     * own file list and close list into one of them: re-optimizing the
     * bound plan is a fraction of a fresh compile, and nothing that
     * varies per fire reaches generated code — the file list is a scan
-    * input, the close list a referenced literal, and the time pruning
-    * the old per-fire `timestamp BETWEEN` bounds did is the choice of
-    * files ([[EventLog.filesBetween]]). */
+    * input, the close list a referenced literal, and time pruning is
+    * the choice of files ([[EventLog.filesBetween]]), not a bound in
+    * the plan. */
   private final class FireTemplate(static: Option[DataFrame],
       val staticHasRows: Boolean) {
 
@@ -445,7 +448,7 @@ final class CompiledLiveStream(
       * the Observation the probe reports to when the plan has one. */
     def bind(plan: Plan, closes: Seq[Long])
         : (DataFrame, Option[Observation]) = {
-      val files = log.scanOf(
+      val fireScan = log.scanOf(
         log.filesBetween(closes.head - maxRange, closes.last - 1))
       val fireCloses = closeList(closes)
       var scans, closeLists = 0
@@ -453,7 +456,7 @@ final class CompiledLiveStream(
       val bound = plan.optimized.transformUpWithSubqueries {
         case l: LogicalRelation if l.relation eq scan =>
           scans += 1
-          l.copy(relation = files)
+          l.copy(relation = fireScan)
         case m: CollectMetrics if m.name == ProbeName =>
           // an Observation reports once: a fresh name per fire
           val obs = new Observation()
