@@ -778,9 +778,9 @@ object SparkEntry {
       val log = new graft.storage.EventLog(s,
         tmp.resolve("log").toString, bucketMs = 86400000L)
       val fires = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // sink frames are FILE-INDEPENDENT (each advance's fires land in
-      // one eager checkpoint inside the engine), so the lazily-held
-      // slices stay valid after the log prunes superseded segments —
+      // sink frames are driver-local (each advance's fires are
+      // collected by one action inside the engine), so the lazily-held
+      // frames stay valid after the log prunes superseded segments —
       // no per-fire re-pin, no per-fire Spark job
       val cls = new graft.streaming.CompiledLiveStream(s, query, log,
         (df, from, to) => fires += df

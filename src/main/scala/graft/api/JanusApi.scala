@@ -144,10 +144,6 @@ final class JanusApi(
     private[api] def shutdown(): Unit = {
       threads.foreach(_.join(100))
       threads.foreach(_.interrupt())
-      // the scale-mode sink collects bindings inside the callback, so
-      // every handed-off frame is already consumed — release the
-      // accumulated fire checkpoints with the stream
-      compiledLive.foreach(_.close())
       statusRef.set(ExecutionStatus.Stopped)
     }
   }
@@ -231,7 +227,8 @@ final class JanusApi(
     val warmupDone = new CountDownLatch(if (isHybrid) 1 else 0)
 
     // scale mode: the compiled plan per fire over distributed windows;
-    // one QueryResult per solution, like the parity poller emits
+    // one QueryResult per solution, like the parity poller emits. Each
+    // fire's frame is driver-local, so collecting it runs no Spark job
     val compiledLive =
       if (parsed.liveWindows.nonEmpty && scaleLiveLogFactory.isDefined) {
         val log = scaleLiveLogFactory.get(queryId)

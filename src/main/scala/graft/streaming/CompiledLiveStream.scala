@@ -4,16 +4,18 @@ import graft.janusql.{JanusQLParser, ParsedJanusQuery, WindowDefinition}
 import graft.sparql.{AggItem, Items, Query, SelectQuery, SparqlCompiler}
 import graft.storage.EventLog
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
+import java.util.concurrent.atomic.AtomicReference
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Cluster-scale live RSP path: ARBITRARY compiled queries per window
   * fire, with NO driver-side event buffering (SURVEY.md §7.3.3;
@@ -43,19 +45,17 @@ import scala.collection.mutable
   *     already optimized plan instead of a fresh one, and no
   *     fire-varying literal in generated code, so Spark's code
   *     generation cache serves every fire after the first;
-  *   - results go to `resultSink` as a DataFrame: the consumer decides
-  *     whether to write, stream on, or collect. The engine never
-  *     materializes results on the driver, and every sink frame is
-  *     FILE-INDEPENDENT (backed by the advance's eager checkpoint, see
-  *     [[advance]]) — a sink may hold frames across micro-batches and
-  *     evaluate them long after the log pruned the segments behind
-  *     them;
+  *   - each advance evaluates its due fires with ONE Spark action and
+  *     hands every fire's rows to `resultSink` as a driver-local frame
+  *     (a `LocalRelation`, see [[fireBatch]]): reading it schedules no
+  *     Spark job, and no file backs it, so a sink may hold frames for as
+  *     long as it likes. The cost is that results reach the driver
+  *     inside the engine — what a consumer that collects anyway (the
+  *     API's sink does, per solution) pays itself;
   *   - buckets no future fire can reach are PRUNED from the log
-  *     (`EventLog.pruneBefore`) — storage stays bounded by
-  *     `max(RANGE) + slide`, the distributed analogue of
-  *     [[LiveStreamProcessing]]'s buffer eviction. Pruning is deferred
-  *     one advance cycle so the files behind a just-fired snapshot
-  *     outlive the fire that produced it.
+  *     (`EventLog.pruneBefore`) after each advance — storage stays
+  *     bounded by `max(RANGE) + slide`, the distributed analogue of
+  *     [[LiveStreamProcessing]]'s buffer eviction.
   *
   * Failure note: `foreachBatch` is at-least-once on restart — a
   * replayed batch re-appends its quads. The reference's in-process bus
@@ -110,12 +110,27 @@ final class CompiledLiveStream(
   private val registeredStreams: Seq[String] =
     parsed.liveWindows.map(_.streamName).distinct
 
-  /** The fire plans for the current static side: built here, and again
-    * by [[setStaticData]] — so a hybrid query pays for its template
-    * during baseline warm-up, not in its first fire. Read once per
-    * advance, so a concurrent swap never splits one. */
-  @volatile private var template: FireTemplate =
-    new FireTemplate(None, staticHasRows = false)
+  /** The fire plans for the current static side, rebuilt by each
+    * [[setStaticData]]. A query without historical windows has no
+    * static side to wait for, so it builds its plans here and its first
+    * fire does not pay for them. A hybrid query's static side is still
+    * to come (the baseline warm-up hands it over), so nothing is built
+    * here: its first build is the one over the baseline, during
+    * warm-up, or — when a fire comes first — the static-less one on
+    * demand ([[fireTemplate]]). Read once per advance, so a concurrent
+    * swap never splits one. */
+  private val template = new AtomicReference[Option[FireTemplate]](
+    if (parsed.historicalWindows.nonEmpty) None
+    else Some(new FireTemplate(None, staticHasRows = false)))
+
+  /** The current fire plans; the static-less ones when no static side
+    * has arrived yet. A [[setStaticData]] racing the first fire wins:
+    * the on-demand build is only installed over no template at all. */
+  private def fireTemplate: FireTemplate = template.get.getOrElse {
+    template.compareAndSet(None,
+      Some(new FireTemplate(None, staticHasRows = false)))
+    template.get.get
+  }
 
   /** Static/baseline quads (default-graph side of stream-static joins).
     * A DataFrame — at cluster scale this is the materialized baseline
@@ -125,7 +140,8 @@ final class CompiledLiveStream(
     * row-wise), and a non-empty one lets fires skip their emptiness
     * probe. Rebuilds the fire template over the new static side. */
   def setStaticData(quads: DataFrame): Unit =
-    template = new FireTemplate(Some(quads), staticHasRows = !quads.isEmpty)
+    template.set(Some(
+      new FireTemplate(Some(quads), staticHasRows = !quads.isEmpty)))
 
   /** Process one micro-batch of canonical quads whose `graph` column
     * holds the source STREAM uri. Called from `foreachBatch` (or
@@ -144,12 +160,6 @@ final class CompiledLiveStream(
     * micro-batch is the dominant live-path cost. Sentinels are rows
     * like any other — they advance time exactly as before. */
   def processBatch(batch: DataFrame): Unit = synchronized {
-    // apply the prune scheduled at the previous advance HERE — "next
-    // micro-batch" must mean every next batch, not the next batch that
-    // happens to advance a registered stream (rows confined to
-    // unregistered graphs used to defer the prune indefinitely)
-    pendingPruneCutoff.foreach(log.pruneBefore)
-    pendingPruneCutoff = None
     // provably-empty batch (empty LocalRelation — the API's
     // empty-events path, an idle foreachBatch tick): nothing to
     // append, no event time to advance. Plan-level check, no job.
@@ -194,53 +204,21 @@ final class CompiledLiveStream(
       .trigger(Trigger.ProcessingTime(0))
       .start()
 
-  /** Prune cutoff computed at the previous advance, applied at the
-    * next: the snapshot DataFrames handed to `resultSink` stay backed
-    * by their parquet files until the NEXT micro-batch — pruning
-    * immediately after a fire would delete files under a sink that
-    * evaluates lazily (async write, downstream stream). */
-  private var pendingPruneCutoff: Option[Long] = None
-
-  /** Every fire's eager localCheckpoint, retained so sink-held frames
-    * stay file-independent across prunes. Result-sized per fire, but
-    * cumulative over the stream's life — [[close]] is the release
-    * path for long-running streams. */
-  private val firePins = mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Release every retained fire checkpoint. Call once the sink has
-    * fully consumed (collected / written out) all frames it was handed
-    * — a frame read AFTER close can no longer be recomputed. A stream
-    * whose sink consumes eagerly (the API sink collects bindings
-    * inside the callback) can close at shutdown; a sink that holds
-    * frames across arrivals must consume them first. Idempotent. */
-  def close(): Unit = synchronized {
-    firePins.foreach(graft.util.Lineage.release)
-    firePins.clear()
-  }
-
-
   /** Fire every due window in close-time order (same order as
     * [[LiveStreamProcessing]]'s one-at-a-time loop — the due set is
     * fixed for the whole advance, so enumerating it up front is
-    * equivalent), then schedule the log prune.
+    * equivalent), then prune the log.
     *
     * Every advance evaluates its due fires together ([[fireBatch]]),
     * keyed per fire through the compiler's `extraKeys` channel (the
     * same machinery that makes N historical windows one plan), from the
     * template compiled once per static side. Per advance, Spark runs
-    * the baseline broadcast stage (hybrid queries), the eager
-    * localCheckpoint that evaluates the fires, and, later, the sink's
-    * read of the checkpoint; the driver binds the fire's file list and
-    * close list into the template and re-plans it, with no compile and
-    * no new generated code. Because the evaluation lands in an EAGER
-    * localCheckpoint, every frame handed to `resultSink` is
-    * FILE-INDEPENDENT: it stays valid after the log prunes the segments
-    * behind it, so a sink may hold frames across arrival chunks and
-    * evaluate late (the out-of-order gate entry unions all 29 fire
-    * frames at the very end) without re-pinning each one. The pins live
-    * until [[close]] — result-sized (aggregate rows per fire) but
-    * cumulative over fires, so a long-running stream releases them once
-    * its sink has consumed. */
+    * the baseline broadcast stage (hybrid queries) and the one action
+    * that evaluates the fires; the driver binds the fire's file list
+    * and close list into the template and re-plans it, with no compile
+    * and no new generated code. The fires' rows are on the driver once
+    * that action returns, so nothing the sink holds reads the log, and
+    * the buckets no future snapshot can reach are dropped at once. */
   private def advance(): Unit = {
     // every due (window, close) pair, closes enumerated per window
     val due = parsed.liveWindows.flatMap { w =>
@@ -256,10 +234,8 @@ final class CompiledLiveStream(
       }
     }
     // nothing below (earliest pending close - max range) can enter any
-    // future snapshot — those buckets are dropped at the NEXT advance
-    // (deferred one cycle so just-fired lazy snapshots stay readable)
-    if (nextClose.nonEmpty)
-      pendingPruneCutoff = Some(nextClose.values.min - maxRange)
+    // future snapshot
+    if (nextClose.nonEmpty) log.pruneBefore(nextClose.values.min - maxRange)
   }
 
   /** All due fires as ONE distributed evaluation of the keyed template:
@@ -267,83 +243,54 @@ final class CompiledLiveStream(
     * the snapshots, rows are assigned to the fires whose `[c-range, c)`
     * span covers them (each row paired with the tiny close list), and
     * the compiled plan runs once with the fire id as an orchestration
-    * key. The result is pinned with an eager localCheckpoint and handed
-    * to the sink per fire, in close-time order — whole when the advance
-    * has a single close, sliced by fire id otherwise.
+    * key. That one action ([[collectRows]]) brings the result to the
+    * driver, and each fire's rows go to the sink as a local frame, in
+    * close-time order.
     *
-    * A fire whose every window is EMPTY has no rows under its fire id
-    * (a keyed aggregation cannot conjure its group), but the per-fire
-    * semantics emit e.g. `COUNT = 0` — those fires re-run through the
+    * The driver bound is the advance's result: at most one row per fire
+    * for a single-group aggregate (the reference's one-message-per-fire
+    * channel, live_stream_processing.rs result bus), one row per match
+    * otherwise. A consumer that collects its frames (the API's sink
+    * does) holds those rows on the driver in any case; a sink that
+    * writes its frames out receives them through the driver.
+    *
+    * A fire with no result rows emits nothing, except for a
+    * single-group aggregate whose snapshot has rows: per-fire semantics
+    * emit e.g. `COUNT = 0` there, which a keyed aggregation cannot (it
+    * has no group to conjure), so that fire re-runs through the
     * single-fire path ([[fire]]), whose unkeyed evaluation preserves
     * the implicit-single-group shape. */
   private def fireBatch(due: Seq[(WindowDefinition, Long)]): Unit = {
-    val t = template
+    val t = fireTemplate
     val closes = due.map(_._2).distinct.sorted
     val (resultPart, probe) = t.bind(t.keyed, closes)
     val fireIdx = resultPart.schema.fieldIndex(FireCol)
-    if (emitsOnEmptyGroup) {
-      // single-group aggregates emit AT MOST ONE row per fire — the
-      // result set is fire-count-bounded, so it rides the driver like
-      // the reference's one-message-per-fire channel
-      // (live_stream_processing.rs result bus): ONE collect, then each
-      // fire's row becomes a LOCAL frame (LocalTableScan — no Spark
-      // job to hand off, none to read downstream, trivially
-      // file-independent). The distributed checkpoint path below stays
-      // for every shape whose result can be row-per-match.
-      val rows = resultPart.collect()
-      val present = rows.iterator
-        .map(r => r.getLong(fireIdx) -> r).toMap
-      val keepIdx = resultPart.schema.fields.indices.filter(_ != fireIdx)
-      val outSchema = org.apache.spark.sql.types.StructType(
-        keepIdx.map(resultPart.schema.fields))
-      // which fires have ANY snapshot row: parity emits nothing at all
-      // for an entirely empty snapshot (LiveStreamProcessing.fire's
-      // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
-      // closes are skipped, not evaluated to an implicit-group row.
-      // Static rows make every close present; otherwise the template's
-      // probe reported them (see FireTemplate.probes), and a plan the
-      // optimizer proved empty has no probe and no present close
-      val snapHas =
-        if (t.staticHasRows) closes.toSet
-        else probe.fold(Set.empty[Long])(observedFires)
-      due.foreach { case (w, c) =>
-        present.get(c) match {
-          case Some(r) =>
-            val slim = org.apache.spark.sql.Row
-              .fromSeq(keepIdx.map(r.get))
-            resultSink(spark.createDataFrame(
-              java.util.Collections.singletonList(slim), outSchema),
-              c - w.width, c)
-          case None if snapHas.contains(c) =>
-            // snapshot rows exist but zero pattern matches: parity
-            // DOES evaluate and emits e.g. COUNT = 0 — re-run through
-            // the single-fire path, whose implicit single group
-            // preserves that shape
-            fire(t, w, c)
-          case None => () // empty snapshot — parity emits nothing
-        }
-      }
-      return
+    val keepIdx = resultPart.schema.fields.indices.filter(_ != fireIdx)
+    val outSchema = StructType(keepIdx.map(resultPart.schema.fields))
+    // each fire's rows without the fire id, in result order
+    val byFire = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Row]]
+    collectRows(resultPart).foreach { r =>
+      byFire.getOrElseUpdate(r.getLong(fireIdx), mutable.ArrayBuffer.empty) +=
+        Row.fromSeq(keepIdx.map(r.get))
     }
-    // which fires have solutions rides the checkpoint job the same
-    // way, as an observed collect_set — no distinct, no extra job
-    val resultObs = new Observation()
-    val combined = resultPart
-      .observe(resultObs, collect_set(col(FireCol)))
-      .localCheckpoint(eager = true)
-    firePins += combined
-    val present = observedFires(resultObs)
+    // which fires have ANY snapshot row: parity emits nothing at all
+    // for an entirely empty snapshot (LiveStreamProcessing.fire's
+    // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
+    // closes are skipped, not evaluated to an implicit-group row.
+    // Static rows make every close present; otherwise the template's
+    // probe reported them (see FireTemplate.probes), and a plan the
+    // optimizer proved empty has no probe and no present close
+    lazy val snapHas =
+      if (t.staticHasRows) closes.toSet
+      else probe.fold(Set.empty[Long])(observedFires)
     due.foreach { case (w, c) =>
-      // one close: the checkpoint IS the fire's frame — a slice would
-      // put the close into generated code as a literal, a new class per
-      // fire for the sink's read
-      if (present.contains(c))
-        resultSink((if (closes.size == 1) combined
-          else combined.where(col(FireCol) === c)).drop(FireCol),
+      byFire.get(c) match {
+        case Some(rows) => resultSink(localFrame(rows.toSeq, outSchema),
           c - w.width, c)
-      // else: no solutions for this fire — a non-aggregate (or
-      // grouped) query emits nothing on an empty solution sequence,
-      // whether the snapshot had rows or not
+        case None if emitsOnEmptyGroup && snapHas.contains(c) =>
+          fire(t, w, c)
+        case None => () // no solutions for this fire
+      }
     }
   }
 
@@ -358,15 +305,21 @@ final class CompiledLiveStream(
   /** One unkeyed evaluation at close `c` — the [[fireBatch]] fallback
     * for a fire whose snapshot has rows but whose keyed aggregation
     * produced no group (the implicit single group must emit e.g.
-    * `COUNT = 0`), from the template's single-fire plan. The result is
-    * pinned eagerly before the sink sees it — the file-independence
-    * guarantee of [[advance]] holds on every sink handoff, this path
-    * included. */
+    * `COUNT = 0`), from the template's single-fire plan. Its one row
+    * reaches the sink as a local frame, like every other fire's. */
   private def fire(t: FireTemplate, w: WindowDefinition, c: Long): Unit = {
-    val out = t.bind(t.single, Seq(c))._1.localCheckpoint(eager = true)
-    firePins += out
-    resultSink(out, c - w.width, c)
+    val out = t.bind(t.single, Seq(c))._1
+    resultSink(localFrame(collectRows(out).toSeq, out.schema), c - w.width, c)
   }
+
+  /** `df`'s rows on the driver, from one Spark action: the engine's only
+    * result pull (see [[fireBatch]] for what bounds it). */
+  private def collectRows(df: DataFrame): Array[Row] = df.collect()
+
+  /** `rows` as a driver-local frame: a `LocalRelation`, so reading it
+    * runs no Spark job and it stays readable whatever the log prunes. */
+  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** The query's fire plans over one static side, compiled and
     * optimized ONCE ([[SparqlCompiler]]'s only caller here) against a

@@ -34,9 +34,12 @@ class DriverBoundSpec extends AnyFunSuite {
     * - Tokenizer: vocab/merge tables (rows = vocab size, capped).
     * - Sampling: stratum/bin histograms + two-phase broadcast partials.
     * - Ann: centroids and PQ codebooks (k×d / m×ksub model state).
-    * - CompiledLiveStream: ≤1-row-per-fire results (the reference's
-    *   per-fire message channel); maxima and fire presence are
-    *   observed metrics, not collects.
+    * - CompiledLiveStream: one collect site shared by every fire shape,
+    *   bounded by an advance's result: ≤1 row per fire for
+    *   single-group aggregates (the reference's per-fire message
+    *   channel), one row per match otherwise, which the API's sink
+    *   collects in any case; maxima and the aggregate path's snapshot
+    *   presence are observed metrics, not collects.
     * - Clustering: k×d centroid tables per iteration.
     * - Bench: benchmark harness (drains results to time them).
     * - ScaleProbe: probe instrument (pilot-sized by design).

@@ -161,7 +161,12 @@ class ConcurrentCompactionSpec extends AnyFunSuite {
     val writerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val reads = new java.util.concurrent.atomic.AtomicLong(0)
     val writer = new Thread(() => {
-      try (1 until batches).foreach(i => log.append(batch(i)))
+      try (1 until batches).foreach { i =>
+        // an append never runs ahead of the readers: append i waits for
+        // i finished reads, so the race holds however fast appends are
+        while (reads.get() < i && failures.isEmpty) Thread.sleep(1)
+        log.append(batch(i))
+      }
       catch { case t: Throwable => failures.add(s"writer: $t") }
       finally writerDone.set(true)
     })

@@ -4,12 +4,14 @@ import graft.TestSpark
 import graft.core.RdfEvent
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
@@ -618,5 +620,61 @@ class EventLogSpec extends AnyFunSuite {
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     assert(files.size === 1, s"expected one data file, found $files")
     assert(log.query(0L, 1000L).count() === 5)
+  }
+
+  test("a local append and a compaction write files, checksums, bucket " +
+      "directories and manifests with Hadoop's default permissions, " +
+      "without forking a process; the footer index spans are unchanged") {
+    val dir = Files.createTempDirectory("eventlog-perms").resolve("log")
+    val log = new EventLog(spark, dir.toString, 1000L, autoCompactFiles = 0)
+    // every process the JVM starts, from a JFR recording
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try {
+      (0 until 3).foreach(b => log.append(RdfEvent.toDF(spark,
+        (0 until 5).map(i => ev(b * 1000L + i * 100L, i)))))
+      log.append(RdfEvent.toDF(spark, Seq(ev(2700L, 7), ev(2800L, 8))))
+      assert(log.compact(maxFilesPerBucket = 1) === 1) // bucket 2
+    } finally recording.stop()
+    val jfr = Files.createTempFile("eventlog-perms", ".jfr")
+    recording.dump(jfr)
+    recording.close()
+    val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command")).filter(_.contains(dir.toString))
+    assert(forks.size === 0,
+      s"processes started on the log, first: ${forks.headOption}")
+
+    val umask = FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    def bits(p: FsPermission) = p.applyUMask(umask).toString
+    val written = Files.walk(dir).iterator().asScala.toSeq.filter(_ != dir)
+    def named(pred: String => Boolean) =
+      written.filter(p => pred(p.getFileName.toString))
+    val kinds = Seq(
+      "data file" -> named(_.endsWith(".parquet")),
+      "checksum" -> named(_.endsWith(".crc")),
+      "manifest" -> named(_.startsWith(EventLog.ManifestPrefix)),
+      "bucket directory" -> written.filter(Files.isDirectory(_)))
+    kinds.foreach { case (kind, paths) => assert(paths.nonEmpty, kind) }
+    kinds.foreach { case (kind, paths) =>
+      val want = bits(if (kind == "bucket directory")
+        FsPermission.getDirDefault else FsPermission.getFileDefault)
+      paths.foreach(p => assert(PosixFilePermissions.toString(
+        Files.getPosixFilePermissions(p)) === want, s"$kind $p"))
+    }
+
+    // each live file's index span is the (min, max) of its timestamps
+    val live = log.read().inputFiles.toSeq.map(new Path(_))
+    assert(live.size === 3)
+    val spans = live.map { f =>
+      val ts = fileTimestamps(f)
+      f.toUri.getPath -> (ts.min, ts.max)
+    }.toMap
+    for ((lo, hi) <- Seq((0L, 400L), (400L, 1000L), (1300L, 2650L),
+        (2750L, 2750L), (2850L, 5000L), (0L, 5000L))) {
+      val want = spans.collect { case (f, (a, b)) if a <= hi && b >= lo => f }
+      assert(log.filesBetween(lo, hi).map(_.getPath.toUri.getPath).toSet ===
+        want.toSet, s"files between $lo and $hi")
+    }
   }
 }
