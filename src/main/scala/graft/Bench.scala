@@ -321,22 +321,27 @@ object Bench {
 
     // ---- live injection latency-to-first-result --------------------
     try {
-      val live = new graft.streaming.LiveStreamProcessing(spark,
+      val api = new graft.api.JanusApi(spark, new graft.api.QueryRegistry(),
+        _ => spark.emptyDataFrame)
+      api.registerQuery("live",
         """PREFIX ex: <http://example.org/>
           |REGISTER RStream <out> AS
           |SELECT ?s ?o
           |FROM NAMED WINDOW ex:w ON STREAM ex:s [RANGE 10000 STEP 1000]
           |WHERE { WINDOW ex:w { ?s ex:v ?o } }""".stripMargin)
-      live.registerStream("http://example.org/s")
-      live.startProcessing()
-      val tLive = timeSec {
-        (0 until 50).foreach(i => live.addEvent("http://example.org/s",
-          RdfEvent(i * 25L, s"http://example.org/e$i",
-            "http://example.org/v", i.toString, "")))
-        live.closeStream("http://example.org/s", 2000)
-        require(live.collectResults().nonEmpty)
-      }
-      results += "live_injection_50ev" -> tLive
+      val live = api.startQuery("live")
+      try {
+        val tLive = timeSec {
+          (0 until 50).foreach(i => live.addLiveEvents("http://example.org/s",
+            Seq(RdfEvent(i * 25L, s"http://example.org/e$i",
+              "http://example.org/v", i.toString, ""))))
+          live.addLiveEvents("http://example.org/s",
+            Seq(graft.streaming.CompiledLiveStream.sentinel(2000)))
+          // every fire delivers before addLiveEvents returns
+          require(live.tryReceive().nonEmpty)
+        }
+        results += "live_injection_50ev" -> tLive
+      } finally api.stopQuery("live")
     } catch {
       case e: Throwable => failed += s"live:${e.getClass.getSimpleName}"
     }

@@ -1365,29 +1365,18 @@ object SparkEntry {
         require(handle.awaitWarmup(180000), "baseline warmup timed out")
         require(handle.status == graft.api.JanusApi.ExecutionStatus.Running,
           s"unexpected status ${handle.status}")
-        val lp = handle.live.get
-        users.foreach(u => lp.addEvent("http://graft.dev/feed",
-          graft.core.RdfEvent(100L, s"${EventsAsQuads.Base}u/$u",
-            EventsAsQuads.PValue, "100", "")))
-        lp.closeStream("http://graft.dev/feed", 1000L)
-        // drain the unified queue: closeStream fires windows
-        // SYNCHRONOUSLY (advance() runs on this thread), so when it
-        // returns every live result is already in the processor deque
-        // and no further one can ever be emitted — the quiet threshold
-        // only needs to cover the 10 ms poller's transfer into the
-        // unified queue, not guess at fire propagation. The historical
-        // batch is filtered out of the output either way, so the rows
-        // collected are identical to the old 3 s-of-silence drain.
-        val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var quiet = false
-        while (!quiet) handle.receive(500) match {
-          case Some(r) if r.source == graft.api.JanusApi.ResultSource.Live =>
-            r.bindings.foreach(b => rows += ((b("sensor"), b("mean"))))
-          case Some(_) => () // historical batch
-          case None    => quiet = lp.pendingResultCount == 0
-        }
+        // the sentinel closes the window [0, 1000): its fire delivers
+        // every live result into the queue before addLiveEvents returns
+        handle.addLiveEvents("http://graft.dev/feed",
+          users.toSeq.map(u => graft.core.RdfEvent(100L,
+            s"${EventsAsQuads.Base}u/$u", EventsAsQuads.PValue, "100", "")) :+
+            graft.streaming.CompiledLiveStream.sentinel(1000L))
+        val rows = Iterator.continually(handle.tryReceive())
+          .takeWhile(_.isDefined).flatten
+          .filter(_.source == graft.api.JanusApi.ResultSource.Live)
+          .flatMap(_.bindings.map(b => (b("sensor"), b("mean")))).toSeq
         require(rows.nonEmpty, "no live anomalies fired")
-        rows.toSeq.toDF("sensor", "mean")
+        rows.toDF("sensor", "mean")
           .select(col("sensor"), lit("100").as("live"),
             round(col("mean").try_cast("double"), 6).as("mean_num"))
       } finally api.stopQuery("b5e2e")

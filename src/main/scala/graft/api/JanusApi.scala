@@ -1,14 +1,15 @@
 package graft.api
 
 import graft.baseline.BaselineBootstrap
-
+import graft.core.RdfEvent
 import graft.historical.HistoricalExecutor
 import graft.janusql._
-
-import graft.streaming.LiveStreamProcessing
+import graft.storage.EventLog
+import graft.streaming.CompiledLiveStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -56,6 +57,16 @@ object JanusApi {
       registeredAt: Long)
 
   final case class ApiException(msg: String) extends RuntimeException(msg)
+
+  /** A read-only snapshot of a query's live side: results its queue
+    * evicted unread, and rows committed to its live log. */
+  final case class LiveCounters(droppedResults: Long, bufferedEventCount: Long)
+
+  /** Capacity of a query's one result queue. A producer that finds it
+    * full evicts the OLDEST result and counts the drop, like the
+    * reference's broadcast channel, which drops with a `Lagged(n)`
+    * signal instead of growing without limit (`server.rs:34`). */
+  private[api] val QueueCapacity = 65536
 }
 
 /** O1: the query registry — register (dup check, optional max), get,
@@ -98,44 +109,51 @@ final class QueryRegistry(maxQueries: Option[Int] = None) {
 }
 
 /** Top-level API coordinating registry, historical quad sources, and
-  * live processing. `logProvider` maps a window's source IRI to its
-  * quads DataFrame (e.g. an [[graft.storage.EventLog]] read). */
+  * the live engine ([[CompiledLiveStream]]). `logProvider` maps a
+  * window's source IRI to its quads DataFrame (e.g. an [[EventLog]]
+  * read). `scaleLiveLogFactory` says where each query's live log lives
+  * (query id → log, owned by the caller); without it, a query with a
+  * live window gets an [[EventLog]] in a temporary directory of its
+  * own, bucketed by its smallest live STEP and deleted at
+  * [[stopQuery]]. */
 final class JanusApi(
     spark: SparkSession,
     registry: QueryRegistry,
     logProvider: String => DataFrame,
     clock: () => Long = () => System.currentTimeMillis(),
-    scaleLiveLogFactory: Option[String => graft.storage.EventLog] = None) {
+    scaleLiveLogFactory: Option[String => EventLog] = None) {
 
   import JanusApi._
 
   final class QueryHandle private[JanusApi] (
       val queryId: String,
-      resultQueue: LinkedBlockingQueue[QueryResult],
+      results: ResultQueue,
       statusRef: java.util.concurrent.atomic.AtomicReference[ExecutionStatus],
-      val live: Option[LiveStreamProcessing],
-      /** Cluster-scale live execution (present when the api was built
-        * with `scaleLiveLogFactory`): the compiled query runs per fire
-        * over EventLog-backed distributed windows instead of a
-        * driver-side event buffer. */
-      val compiledLive: Option[graft.streaming.CompiledLiveStream],
+      liveSide: Option[LiveSide],
       threads: Seq[Thread],
       warmupDone: CountDownLatch) {
 
-    /** Feed live events through whichever live path is active. */
-    def addLiveEvents(streamUri: String, events: Seq[graft.core.RdfEvent])
-        : Unit = {
-      live.foreach(_.addEvents(streamUri, events))
-      compiledLive.foreach(_.processBatch(graft.core.RdfEvent.toDF(
-        spark, events.map(_.copy(graph = streamUri)))))
-    }
+    /** Feed events of `streamUri` to the live engine, which appends them
+      * to the query's live log and fires every window they close before
+      * returning: each fire's results are in the queue by then. A
+      * stream that none of the query's live windows reads is refused,
+      * since no fire would ever read its rows. */
+    def addLiveEvents(streamUri: String, events: Seq[RdfEvent]): Unit =
+      liveSide.filter(_.streams.contains(streamUri)).getOrElse(
+        throw ApiException(
+          s"Query '$queryId' has no live window on stream '$streamUri'"))
+        .feed(RdfEvent.toDF(spark, events.map(_.copy(graph = streamUri))))
+
+    /** The live side's counters (None: the query has no live window);
+      * after a stop, those it had when it stopped. */
+    def live: Option[LiveCounters] = liveSide.map(_.counters)
 
     def status: ExecutionStatus = statusRef.get
 
     def receive(timeoutMs: Long = 5000): Option[QueryResult] =
-      Option(resultQueue.poll(timeoutMs, TimeUnit.MILLISECONDS))
+      results.poll(timeoutMs)
 
-    def tryReceive(): Option[QueryResult] = Option(resultQueue.poll())
+    def tryReceive(): Option[QueryResult] = results.poll(0)
 
     /** Block until the baseline warm-up finished (test convenience). */
     def awaitWarmup(timeoutMs: Long = 30000): Boolean =
@@ -145,6 +163,53 @@ final class JanusApi(
       threads.foreach(_.join(100))
       threads.foreach(_.interrupt())
       statusRef.set(ExecutionStatus.Stopped)
+      liveSide.foreach(_.close())
+    }
+  }
+
+  /** A query's one bounded result queue: a producer that finds it full
+    * evicts the OLDEST result and counts the drop (see
+    * [[JanusApi.QueueCapacity]]). */
+  private final class ResultQueue {
+    private val queue = new LinkedBlockingQueue[QueryResult](QueueCapacity)
+    private val dropped = new AtomicLong
+
+    def put(r: QueryResult): Unit =
+      while (!queue.offer(r))
+        if (queue.poll() != null) dropped.incrementAndGet()
+
+    def poll(timeoutMs: Long): Option[QueryResult] =
+      Option(queue.poll(timeoutMs, TimeUnit.MILLISECONDS))
+
+    def droppedCount: Long = dropped.get
+  }
+
+  /** A query's live engine and the log it appends to. `ownedDir` is
+    * the temporary directory holding a log this api made, deleted at
+    * [[close]]; a factory's log belongs to its caller. Feeding and
+    * closing take the same lock, so a closed log is never written
+    * again. */
+  private final class LiveSide(queryId: String,
+      val engine: CompiledLiveStream, log: EventLog, results: ResultQueue,
+      ownedDir: Option[Path]) {
+    private var closedWith = Option.empty[LiveCounters]
+
+    /** The streams the query's live windows read. */
+    val streams: Set[String] =
+      engine.parsed.liveWindows.map(_.streamName).toSet
+
+    def feed(batch: DataFrame): Unit = synchronized {
+      if (closedWith.isDefined)
+        throw ApiException(s"Query '$queryId' is not running")
+      engine.processBatch(batch)
+    }
+
+    def counters: LiveCounters = synchronized(closedWith.getOrElse(
+      LiveCounters(results.droppedCount, log.committedRows)))
+
+    def close(): Unit = synchronized {
+      closedWith = Some(counters)
+      ownedDir.foreach(deleteDir)
     }
   }
 
@@ -155,16 +220,6 @@ final class JanusApi(
   private val lastStatus =
     new ConcurrentHashMap[String, ExecutionStatus]()
   private val startLock = new Object
-
-  /** Unified-queue capacity; producers drop the OLDEST result when a
-    * consumer stalls (the bounded-buffer discipline the live path's
-    * drop-oldest buffer establishes — an unbounded queue here would
-    * defeat it and grow the driver without limit). */
-  private val QueueCapacity = 65536
-
-  private def enqueue(queue: LinkedBlockingQueue[QueryResult],
-      r: QueryResult): Unit =
-    while (!queue.offer(r)) queue.poll()
 
   /** Record a failure unless the query was deliberately stopped — a
     * worker interrupted by shutdown must not overwrite Stopped with
@@ -207,7 +262,7 @@ final class JanusApi(
       .orElse(Option(lastStatus.get(queryId)))
       .orElse(registry.get(queryId).map(_ => ExecutionStatus.Registered))
 
-  /** O2: start — historical workers, live processor, baseline warm-up,
+  /** O2: start — historical workers, live engine, baseline warm-up,
     * one unified result queue (`janus_api.rs:197-515`). Serialized under
     * a lock: a naked check-then-put would let two concurrent starts of
     * the same id both succeed, leaking the first handle's threads. */
@@ -219,56 +274,16 @@ final class JanusApi(
     lastStatus.remove(queryId)
 
     val parsed = meta.parsed
-    val queue = new LinkedBlockingQueue[QueryResult](QueueCapacity)
+    val results = new ResultQueue
     val isHybrid =
       parsed.liveWindows.nonEmpty && parsed.historicalWindows.nonEmpty
     val statusRef = new java.util.concurrent.atomic.AtomicReference[ExecutionStatus](
       if (isHybrid) ExecutionStatus.WarmingBaseline else ExecutionStatus.Running)
     val warmupDone = new CountDownLatch(if (isHybrid) 1 else 0)
 
-    // scale mode: the compiled plan per fire over distributed windows;
-    // one QueryResult per solution, like the parity poller emits. Each
-    // fire's frame is driver-local, so collecting it runs no Spark job
-    val compiledLive =
-      if (parsed.liveWindows.nonEmpty && scaleLiveLogFactory.isDefined) {
-        val log = scaleLiveLogFactory.get(queryId)
-        val sink: (DataFrame, Long, Long) => Unit = (df, _, to) =>
-          collectBindings(df, Seq.empty).foreach { b =>
-            registry.incrementExecutions(queryId)
-            enqueue(queue, QueryResult(queryId, to, ResultSource.Live, Seq(b)))
-          }
-        Some(new graft.streaming.CompiledLiveStream(spark, meta.queryText,
-          log, sink))
-      } else None
-
-    val live =
-      if (parsed.liveWindows.nonEmpty && compiledLive.isEmpty) {
-        val p = new LiveStreamProcessing(spark, meta.queryText)
-        parsed.liveWindows.foreach(w => p.registerStream(w.streamName))
-        p.startProcessing()
-        Some(p)
-      } else None
-
-    // live results drain into the unified queue via a poller thread
-    // (reference: 10 ms try_receive loop, janus_api.rs:443-471)
-    val pollerThread = live.map { p =>
-      val t = new Thread(() => {
-        try {
-          while (!Thread.currentThread().isInterrupted) {
-            p.tryReceiveResult() match {
-              case Some(r) =>
-                registry.incrementExecutions(queryId)
-                enqueue(queue, QueryResult(queryId, r.timestampTo,
-                  ResultSource.Live, Seq(r.bindings)))
-              case None => Thread.sleep(10)
-            }
-          }
-        } catch { case _: InterruptedException => () }
-      }, s"graft-live-poller-$queryId")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
+    val liveSide =
+      if (parsed.liveWindows.isEmpty) None
+      else Some(openLive(meta, results))
 
     // historical workers: one thread per historical window
     val now = clock()
@@ -284,7 +299,7 @@ final class JanusApi(
                 val bindings = collectBindings(out,
                   Seq("timestamp_from", "timestamp_to"))
                 registry.incrementExecutions(queryId)
-                enqueue(queue, QueryResult(queryId, window.end.get,
+                results.put(QueryResult(queryId, window.end.get,
                   ResultSource.Historical, bindings))
               case WindowType.HistoricalSliding =>
                 val spec = HistoricalExecutor.SlidingSpec(
@@ -296,7 +311,7 @@ final class JanusApi(
                 // batch per window, janus_api.rs:276-298)
                 slidingBatches(out, spec).foreach { bindings =>
                   registry.incrementExecutions(queryId)
-                  enqueue(queue, QueryResult(queryId, now,
+                  results.put(QueryResult(queryId, now,
                     ResultSource.Historical, bindings))
                 }
               case WindowType.Live => ()
@@ -321,9 +336,7 @@ final class JanusApi(
           val mode = parsed.baseline.map(_.mode).getOrElse(meta.baselineMode)
           val targetWindow = parsed.baseline.map(_.windowName)
           val statements = computeBaseline(parsed, targetWindow, mode, now)
-          live.foreach(_.addStaticData(
-            BaselineBootstrap.asStaticQuads(statements)))
-          compiledLive.foreach(_.setStaticData(graft.core.RdfEvent.toDF(
+          liveSide.foreach(_.engine.setStaticData(RdfEvent.toDF(
             spark, BaselineBootstrap.asStaticQuads(statements))))
           if (statusRef.compareAndSet(ExecutionStatus.WarmingBaseline,
             ExecutionStatus.Running)) ()
@@ -340,7 +353,7 @@ final class JanusApi(
 
     // completion watcher: historical-only queries flip to Completed once
     // every window worker finished (`janus_api.rs` status transitions)
-    if (live.isEmpty && compiledLive.isEmpty) {
+    if (liveSide.isEmpty) {
       val t = new Thread(() => {
         historicalThreads.foreach(_.join())
         statusRef.compareAndSet(ExecutionStatus.Running,
@@ -350,13 +363,39 @@ final class JanusApi(
       t.start()
     }
 
-    val handle = new QueryHandle(queryId, queue, statusRef, live,
-      compiledLive,
-      historicalThreads ++ pollerThread.toSeq ++ baselineThread.toSeq,
-      warmupDone)
+    val handle = new QueryHandle(queryId, results, statusRef, liveSide,
+      historicalThreads ++ baselineThread.toSeq, warmupDone)
     running.put(queryId, handle)
     handle
   }
+
+  /** The live side of a query with a live window: the one live engine,
+    * over the factory's log or over a log in a temporary directory of
+    * its own, delivering one QueryResult per solution. Each fire's
+    * frame is driver-local, so collecting it runs no Spark job. */
+  private def openLive(meta: QueryMetadata, results: ResultQueue): LiveSide = {
+    val queryId = meta.queryId
+    val (log, ownedDir) = scaleLiveLogFactory match {
+      case Some(factory) => (factory(queryId), None)
+      case None =>
+        val dir = Files.createTempDirectory(
+          "graft-live-" + queryId.filter(_.isLetterOrDigit))
+        (new EventLog(spark, dir.resolve("log").toString,
+          bucketMs = meta.parsed.liveWindows.map(_.slide).min), Some(dir))
+    }
+    val sink: (DataFrame, Long, Long) => Unit = (df, _, to) =>
+      collectBindings(df, Seq.empty).foreach { b =>
+        registry.incrementExecutions(queryId)
+        results.put(QueryResult(queryId, to, ResultSource.Live, Seq(b)))
+      }
+    val engine =
+      try new CompiledLiveStream(spark, meta.queryText, log, sink)
+      catch { case e: Throwable => ownedDir.foreach(deleteDir); throw e }
+    new LiveSide(queryId, engine, log, results, ownedDir)
+  }
+
+  private def deleteDir(dir: Path): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
 
   def stopQuery(queryId: String): Unit = {
     val handle = Option(running.remove(queryId)).getOrElse(

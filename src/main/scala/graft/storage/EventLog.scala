@@ -554,7 +554,9 @@ final class EventLog(
     try {
       var lo = Long.MaxValue
       var hi = Long.MinValue
+      var rows = 0L
       rdr.getFooter.getBlocks.forEach { block =>
+        rows += block.getRowCount
         block.getColumns.forEach { c =>
           if (c.getPath.toDotString == "timestamp") {
             val stats = c.getStatistics
@@ -568,7 +570,7 @@ final class EventLog(
         }
       }
       if (lo <= hi) Some(EventLog.IndexedFile(status,
-        EventLog.FileSpan(file.toString, lo, hi)))
+        EventLog.FileSpan(file.toString, lo, hi), rows))
       else None
     } finally rdr.close()
   }
@@ -594,6 +596,10 @@ final class EventLog(
     fileIndex.collect {
       case f if f.span.minTs <= end && f.span.maxTs >= start => f.status
     }
+
+  /** Rows in the live data files, summed from the row counts of the
+    * footers the index holds: no job, and no data read. */
+  def committedRows: Long = fileIndex.map(_.rows).sum
 
   /** A scan relation over exactly `files`, in the five canonical
     * columns (no partition column). Its file list is the relation's
@@ -911,9 +917,10 @@ object EventLog {
   /** One data file's ts span in the driver-side sparse index. */
   final case class FileSpan(path: String, minTs: Long, maxTs: Long)
 
-  /** A sparse-index entry: the file's status (for scans) and ts span. */
+  /** A sparse-index entry: the file's status (for scans), ts span and
+    * row count. */
   private final case class IndexedFile(
-      status: org.apache.hadoop.fs.FileStatus, span: FileSpan)
+      status: org.apache.hadoop.fs.FileStatus, span: FileSpan, rows: Long)
 
   /** A fixed file list as a Spark file index: what [[EventLog.scanOf]]
     * reads. Listing is the list itself; no partition values. */

@@ -1,7 +1,10 @@
 package graft.streaming
 
+import graft.core.RdfEvent
 import graft.janusql.{JanusQLParser, ParsedJanusQuery, WindowDefinition}
-import graft.sparql.{AggItem, Items, Query, SelectQuery, SparqlCompiler}
+import graft.sparql.{AggItem, GBgp, GBind, GGroup, GMinus, GOptional, GPath,
+  GSubquery, GUnion, GValues, GroupPattern, Iri, Items, Query, SelectQuery,
+  SparqlCompiler, SparqlParser, Star, Term, VarItem}
 import graft.storage.EventLog
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
@@ -17,16 +20,13 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** Cluster-scale live RSP path: ARBITRARY compiled queries per window
-  * fire, with NO driver-side event buffering (SURVEY.md §7.3.3;
-  * reference behavior `/root/reference/src/stream/live_stream_processing.rs:466-552`,
-  * which re-evaluates the full registered query on every window close).
-  *
-  * [[LiveStreamProcessing]] is the semantics-parity twin: it buffers
-  * window contents in driver memory, exactly like the reference holds
-  * them in-process. That is correct but caps window volume at driver
-  * heap. Here the same fire-time semantics run against a DISTRIBUTED
-  * snapshot store:
+/** The live RSP engine (SURVEY.md §2.2 W1/W2/W5; reference behavior
+  * `src/stream/live_stream_processing.rs:466-552` in the reference,
+  * which re-evaluates the full registered query on every window close):
+  * ARBITRARY compiled queries per window fire, with NO driver-side event
+  * buffering (SURVEY.md §7.3.3). The reference holds window contents
+  * in-process; here the same fire-time semantics run against a
+  * DISTRIBUTED snapshot store:
   *
   *   - micro-batches land in an [[EventLog]] (`foreachBatch` append —
   *     immutable parquet files, so a fire reads only the files whose ts
@@ -54,20 +54,20 @@ import scala.jdk.CollectionConverters._
   *     API's sink does, per solution) pays itself;
   *   - buckets no future fire can reach are PRUNED from the log
   *     (`EventLog.pruneBefore`) after each advance — storage stays
-  *     bounded by `max(RANGE) + slide`, the distributed analogue of
-  *     [[LiveStreamProcessing]]'s buffer eviction.
+  *     bounded by `max(RANGE) + slide`, the distributed analogue of the
+  *     reference's eviction on window slide.
   *
   * Failure note: `foreachBatch` is at-least-once on restart — a
   * replayed batch re-appends its quads. The reference's in-process bus
   * offers no stronger guarantee; exactly-once would need idempotent
   * (content-keyed) appends.
   *
-  * Window semantics mirror [[LiveStreamProcessing]] exactly (asserted
-  * by CompiledLiveStreamSpec on the ported timing scenario): a window
-  * fires at boundary `c = k*slide` once ITS stream's event time
-  * reaches `c`, covers `[c-range, c)`, merges every window's content
-  * at `c`, and sentinel events advance time without appearing in
-  * results.
+  * Window semantics are the reference's (CompiledLiveStreamSpec compares
+  * them against a driver-buffered port of it): a window fires at
+  * boundary `c = k*slide` once ITS stream's event time reaches `c`,
+  * covers `[c-range, c)`, merges every window's content at `c`, and
+  * sentinel events ([[CompiledLiveStream.sentinel]]) advance time
+  * without appearing in results.
   */
 final class CompiledLiveStream(
     spark: SparkSession,
@@ -76,14 +76,12 @@ final class CompiledLiveStream(
     resultSink: (DataFrame, Long, Long) => Unit) {
 
   import CompiledLiveStream._
-  import LiveStreamProcessing.{DefaultGraph, SentinelSubject}
 
   val parsed: ParsedJanusQuery = JanusQLParser.parse(queryText)
   require(parsed.liveWindows.nonEmpty,
     "CompiledLiveStream requires at least one ON STREAM window")
 
-  private val compiledQuery: Query =
-    LiveStreamProcessing.buildCombinedQuery(parsed)
+  private val compiledQuery: Query = buildCombinedQuery(parsed)
 
   /** Does an EMPTY solution sequence still emit a row? True exactly
     * for aggregate SELECTs with no GROUP BY — the implicit single
@@ -136,8 +134,8 @@ final class CompiledLiveStream(
     * A DataFrame — at cluster scale this is the materialized baseline
     * table, not driver memory. Row-level presence is probed ONCE here:
     * the fire-time empty-snapshot shortcut must see a zero-row static
-    * frame as "no static data" (parity checks staticQuads.isEmpty
-    * row-wise), and a non-empty one lets fires skip their emptiness
+    * frame as "no static data" (the reference checks its static
+    * quads row-wise), and a non-empty one lets fires skip their emptiness
     * probe. Rebuilds the fire template over the new static side. */
   def setStaticData(quads: DataFrame): Unit =
     template.set(Some(
@@ -204,10 +202,10 @@ final class CompiledLiveStream(
       .trigger(Trigger.ProcessingTime(0))
       .start()
 
-  /** Fire every due window in close-time order (same order as
-    * [[LiveStreamProcessing]]'s one-at-a-time loop — the due set is
-    * fixed for the whole advance, so enumerating it up front is
-    * equivalent), then prune the log.
+  /** Fire every due window in close-time order (the order of the
+    * reference's one-at-a-time loop — the due set is fixed for the whole
+    * advance, so enumerating it up front is equivalent), then prune the
+    * log.
     *
     * Every advance evaluates its due fires together ([[fireBatch]]),
     * keyed per fire through the compiler's `extraKeys` channel (the
@@ -273,10 +271,10 @@ final class CompiledLiveStream(
       byFire.getOrElseUpdate(r.getLong(fireIdx), mutable.ArrayBuffer.empty) +=
         Row.fromSeq(keepIdx.map(r.get))
     }
-    // which fires have ANY snapshot row: parity emits nothing at all
-    // for an entirely empty snapshot (LiveStreamProcessing.fire's
-    // windowQuads.isEmpty && staticQuads.isEmpty shortcut), so those
-    // closes are skipped, not evaluated to an implicit-group row.
+    // which fires have ANY snapshot row: the reference emits nothing
+    // at all for an entirely empty snapshot (no window and no static
+    // quads), so those closes are skipped, not evaluated to an
+    // implicit-group row.
     // Static rows make every close present; otherwise the template's
     // probe reported them (see FireTemplate.probes), and a plan the
     // optimizer proved empty has no probe and no present close
@@ -430,6 +428,99 @@ final class CompiledLiveStream(
 }
 
 object CompiledLiveStream {
+  val SentinelSubject = "urn:rsp:sentinel:subject"
+  val SentinelPredicate = "urn:rsp:sentinel:predicate"
+  val SentinelObject = "urn:rsp:sentinel:object"
+
+  /** Graph tag for static/baseline data in the per-fire snapshot (the
+    * reference's default graph). */
+  val DefaultGraph = "urn:graft:default"
+
+  /** Sentinel close (`live_stream_processing.rs:248-264`): fed on a
+    * stream, it advances that stream's event time to `finalTs`, so
+    * every window up to it fires, and never appears in results. */
+  def sentinel(finalTs: Long): RdfEvent =
+    RdfEvent(finalTs, SentinelSubject, SentinelPredicate, SentinelObject, "")
+
+  /** Build the single combined SPARQL-subset query for live evaluation:
+    * WINDOW blocks become per-window GRAPH scopes, non-window patterns
+    * (baseline joins) are scoped to the static default graph, filters
+    * stay top-level — reproducing the reference's store layout (window
+    * quads in window named graphs, static data in the default graph,
+    * `live_stream_processing.rs:509-552`).
+    */
+  def buildCombinedQuery(parsed: ParsedJanusQuery): Query = {
+    val prefixText = parsed.prefixes
+      .map { case (p, ns) => s"PREFIX $p: <$ns>" }.mkString("\n")
+
+    def parseGroup(body: String): GroupPattern =
+      SparqlParser.parse(s"$prefixText\nSELECT * WHERE {\n$body\n}")
+        .asInstanceOf[SelectQuery].where
+
+    // recursively pin every pattern of a group (incl. those inside
+    // OPTIONAL/UNION/MINUS/subqueries and path patterns) to a graph —
+    // window bodies may use the full SPARQL surface
+    def scope(g: GroupPattern, graph: Term): GroupPattern = g.copy(
+      elems = g.elems.map {
+        case GBgp(ps) =>
+          GBgp(ps.map(p => p.copy(g = p.g.orElse(Some(graph)))))
+        case GPath(pp)     => GPath(pp.copy(g = pp.g.orElse(Some(graph))))
+        case GOptional(og) => GOptional(scope(og, graph))
+        case GMinus(mg)    => GMinus(scope(mg, graph))
+        case GUnion(alts)  => GUnion(alts.map(scope(_, graph)))
+        case GSubquery(sq) => GSubquery(sq.copy(where = scope(sq.where, graph)))
+        case GGroup(gg)    => GGroup(scope(gg, graph))
+        case other @ (_: GBind | _: GValues) => other
+      })
+
+    def merge(gs: Seq[GroupPattern]): GroupPattern =
+      GroupPattern(gs.flatMap(_.elems), gs.flatMap(_.filters))
+
+    // static patterns + filters (everything outside WINDOW blocks)
+    val nonWindow =
+      JanusQLParser.extractNonWindowWherePatterns(parsed.whereClause)
+    val staticScoped =
+      if (nonWindow.trim.isEmpty) GroupPattern(Nil, Nil)
+      else scope(parseGroup(nonWindow), Iri(DefaultGraph))
+
+    // each live window's body, scoped to the window graph
+    val windowGroups = parsed.liveWindows.flatMap { w =>
+      JanusQLParser.findWindowBody(parsed.ast.whereWindows, w,
+        parsed.prefixes).map(body => (w, parseGroup(body)))
+    }
+    val windowScoped = windowGroups.map { case (w, g) =>
+      scope(g, Iri(w.windowName))
+    }
+
+    val where = merge(staticScoped +: windowScoped)
+
+    // projection from the SELECT clause (parse it against a dummy body)
+    val projection = {
+      val sel =
+        if (parsed.selectClause.trim.isEmpty) "SELECT *"
+        else parsed.selectClause
+      SparqlParser.parse(s"$prefixText\n$sel WHERE { ?__a ?__b ?__c }") match {
+        case q: SelectQuery => q.projection
+        case _              => Star
+      }
+    }
+    // drop projected vars that no pattern binds (e.g. historical-only
+    // vars in a hybrid query) — the reference's rspql adaptation keeps
+    // the original SELECT and Oxigraph returns unbound as absent
+    val bound = where.boundVars.toSet
+    val prunedProjection = projection match {
+      case Items(items) =>
+        val kept = items.filter {
+          case VarItem(n) => bound.contains(n)
+          case _          => true
+        }
+        if (kept.isEmpty) Star else Items(kept)
+      case Star => Star
+    }
+
+    SelectQuery(prunedProjection, where, groupBy = Nil)
+  }
+
   /** The fire id column: a fire's close time. */
   private val FireCol = "__fire_id"
 

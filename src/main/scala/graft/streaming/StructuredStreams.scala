@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 
-/** Structured Streaming formulations of the stream-side operators —
-  * the cluster-scale counterparts of the driver-side
-  * [[LiveStreamProcessing]] (which mirrors the reference's semantics
-  * 1:1 for parity tests).
+/** Structured Streaming formulations of the stream-side operators,
+  * beside the live RSP engine ([[CompiledLiveStream]], which answers
+  * Janus-QL `ON STREAM` windows with the reference's semantics).
   *
   *   - [[ingest]]: `readStream` N-Quads lines → parse → `foreachBatch`
   *     append into the event log. The micro-batch commit IS the

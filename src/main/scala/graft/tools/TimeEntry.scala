@@ -12,8 +12,6 @@ object TimeEntry {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("GRAFT_ADAPTIVE_FIRES").foreach(v =>
-      spark.conf.set("spark.graft.live.adaptiveFires", v))
     val t0ByJob = scala.collection.concurrent.TrieMap.empty[Int, (String, Long)]
     val wall = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
     val cnt = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)

@@ -43,9 +43,6 @@ class DriverBoundSpec extends AnyFunSuite {
     * - Clustering: k×d centroid tables per iteration.
     * - Bench: benchmark harness (drains results to time them).
     * - ScaleProbe: probe instrument (pilot-sized by design).
-    * - LiveStreamProcessing: driver-parity twin — holds window
-    *   contents BY DESIGN (documented cap; the scale path is
-    *   CompiledLiveStream).
     * - BucketedTables: bucket spec row (1 row).
     * - Packing: two-phase prefix partials (rows = partitions).
     * - JanusApi: O3 result conversion — result-sized under the API's
@@ -61,7 +58,6 @@ class DriverBoundSpec extends AnyFunSuite {
     "pipeline/Clustering.scala" -> 2,
     "Bench.scala" -> 2,
     "tools/ScaleProbe.scala" -> 1,
-    "streaming/LiveStreamProcessing.scala" -> 1,
     "storage/BucketedTables.scala" -> 1,
     "pipeline/Packing.scala" -> 1,
     "api/JanusApi.scala" -> 1)

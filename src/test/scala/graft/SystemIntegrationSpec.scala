@@ -3,6 +3,7 @@ package graft
 import graft.api.{JanusApi, QueryRegistry}
 import graft.core.RdfEvent
 import graft.storage.{EventLog, ReplayBus}
+import graft.streaming.CompiledLiveStream
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,26 +60,28 @@ class SystemIntegrationSpec extends AnyFunSuite {
 
     // 4. live feed: sensor0 spikes to 60 (|60-20| > 15 → anomaly),
     //    sensor1 stays at 82 (|82-80| < 15 → quiet)
-    val live = handle.live.get
-    live.addEvent("http://example.org/feed",
+    //    the sentinel closes the window [0, 1000)
+    handle.addLiveEvents("http://example.org/feed", Seq(
       RdfEvent(100, "http://example.org/sensor0",
-        "http://example.org/reading", "60", ""))
-    live.addEvent("http://example.org/feed",
+        "http://example.org/reading", "60", ""),
       RdfEvent(200, "http://example.org/sensor1",
-        "http://example.org/reading", "82", ""))
-    live.closeStream("http://example.org/feed", 1000)
+        "http://example.org/reading", "82", ""),
+      CompiledLiveStream.sentinel(1000)))
 
     // 5. unified results: historical batch + exactly one live anomaly
     val deadline = System.currentTimeMillis() + 15000
     var historical = Vector.empty[JanusApi.QueryResult]
     var liveResults = Vector.empty[JanusApi.QueryResult]
-    while (liveResults.isEmpty && System.currentTimeMillis() < deadline) {
-      handle.tryReceive().foreach {
-        case r if r.source == JanusApi.ResultSource.Historical =>
+    // the live fire delivered before addLiveEvents returned; the
+    // historical worker runs on its own thread and may still be going
+    while ((liveResults.isEmpty || historical.isEmpty) &&
+        System.currentTimeMillis() < deadline) {
+      handle.tryReceive() match {
+        case Some(r) if r.source == JanusApi.ResultSource.Historical =>
           historical :+= r
-        case r => liveResults :+= r
+        case Some(r) => liveResults :+= r
+        case None => Thread.sleep(50)
       }
-      if (liveResults.isEmpty) Thread.sleep(50)
     }
     assert(historical.nonEmpty, "expected the historical window batch")
     assert(historical.head.bindings.length === 20)

@@ -2,9 +2,13 @@ package graft.api
 
 import graft.TestSpark
 import graft.core.RdfEvent
-import graft.janusql.BaselineMode
+import graft.storage.EventLog
+import graft.streaming.CompiledLiveStream
 
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** Ports the lifecycle flows of
   * `/root/reference/tests/janus_api_integration_test.rs`: register/
@@ -131,52 +135,55 @@ class JanusApiSpec extends AnyFunSuite {
     assert(registry.executionCount("qe") === 3)
   }
 
+  private val hybridQuery =
+    """PREFIX ex: <http://example.org/>
+      |PREFIX baseline: <https://janus.rs/baseline#>
+      |PREFIX janus: <https://janus.rs/fn#>
+      |REGISTER RStream ex:out AS
+      |SELECT ?sensor ?live ?hist
+      |FROM NAMED WINDOW ex:hist ON LOG ex:store [START 0 END 9000]
+      |FROM NAMED WINDOW ex:live ON STREAM ex:liveStream [RANGE 1000 STEP 1000]
+      |USING BASELINE ex:hist AGGREGATE
+      |WHERE {
+      |    WINDOW ex:hist { ?sensor ex:reading ?hist }
+      |    WINDOW ex:live { ?sensor ex:reading ?live }
+      |    ?sensor baseline:hist ?mean .
+      |    FILTER(janus:absolute_threshold_exceeded(?live, ?mean, 10))
+      |}""".stripMargin
+
+  private val LiveStream = "http://example.org/liveStream"
+
+  /** sensor0's historical readings are 20,22,24,26,28 (mean 24), so a
+    * live 40 is an anomaly; sensor1's mean is 25, so 26 is not. The
+    * sentinel closes the window [0, 1000). */
+  private val hybridFeed = Seq(
+    RdfEvent(100L, "http://example.org/sensor0",
+      "http://example.org/reading", "40", ""),
+    RdfEvent(200L, "http://example.org/sensor1",
+      "http://example.org/reading", "26", ""),
+    CompiledLiveStream.sentinel(1000L))
+
+  /** Every Live result in the queue now. A fire delivers before
+    * `addLiveEvents` returns, so nothing is still on its way. */
+  private def liveResults(h: JanusApi#QueryHandle): Seq[QueryResult] =
+    Iterator.continually(h.tryReceive()).takeWhile(_.isDefined).flatten
+      .filter(_.source == ResultSource.Live).toSeq
+
   test("hybrid query: WarmingBaseline → Running, live joins baseline " +
       "(janus_api_integration_test.rs:624-682)") {
     val (api, _) = newApi()
-    api.registerQuery("hybrid",
-      """PREFIX ex: <http://example.org/>
-        |PREFIX baseline: <https://janus.rs/baseline#>
-        |PREFIX janus: <https://janus.rs/fn#>
-        |REGISTER RStream ex:out AS
-        |SELECT ?sensor ?live ?hist
-        |FROM NAMED WINDOW ex:hist ON LOG ex:store [START 0 END 9000]
-        |FROM NAMED WINDOW ex:live ON STREAM ex:liveStream [RANGE 1000 STEP 1000]
-        |USING BASELINE ex:hist AGGREGATE
-        |WHERE {
-        |    WINDOW ex:hist { ?sensor ex:reading ?hist }
-        |    WINDOW ex:live { ?sensor ex:reading ?live }
-        |    ?sensor baseline:hist ?mean .
-        |    FILTER(janus:absolute_threshold_exceeded(?live, ?mean, 10))
-        |}""".stripMargin)
+    api.registerQuery("hybrid", hybridQuery)
     val handle = api.startQuery("hybrid")
     assert(handle.status === ExecutionStatus.WarmingBaseline ||
       handle.status === ExecutionStatus.Running)
     assert(handle.awaitWarmup())
     assert(handle.status === ExecutionStatus.Running)
 
-    // sensor0 historical readings: 20,22,24,26,28 → mean 24
-    val live = handle.live.getOrElse(fail("no live processor"))
-    live.addEvent("http://example.org/liveStream",
-      RdfEvent(100L, "http://example.org/sensor0",
-        "http://example.org/reading", "40", "")) // |40-24| > 10 → anomaly
-    live.addEvent("http://example.org/liveStream",
-      RdfEvent(200L, "http://example.org/sensor1",
-        "http://example.org/reading", "26", "")) // sensor1 mean 25 → fine
-    live.closeStream("http://example.org/liveStream", 1000)
-
-    val deadline = System.currentTimeMillis() + 10000
-    var liveResults = Seq.empty[QueryResult]
-    while (liveResults.isEmpty && System.currentTimeMillis() < deadline) {
-      liveResults = Iterator.continually(handle.tryReceive())
-        .takeWhile(_.isDefined).flatten
-        .filter(_.source == ResultSource.Live).toSeq
-      if (liveResults.isEmpty) Thread.sleep(50)
-    }
-    assert(liveResults.nonEmpty, "expected a live anomaly result")
-    val b = liveResults.head.bindings.head
-    assert(b("sensor") === "http://example.org/sensor0")
-    assert(b("live") === "40")
+    handle.addLiveEvents(LiveStream, hybridFeed)
+    val live = liveResults(handle)
+    assert(live.map(_.bindings) ===
+      Seq(Seq(Map("sensor" -> "http://example.org/sensor0", "live" -> "40"))))
+    assert(live.head.timestamp === 1000L)
     api.stopQuery("hybrid")
   }
 
@@ -203,57 +210,109 @@ class JanusApiSpec extends AnyFunSuite {
     assert(result.bindings.map(_("sensor")) === Seq("http://example.org/a"))
   }
 
-  test("scale-live mode runs the hybrid query through CompiledLiveStream " +
-      "with the same results as the parity path") {
+  /** This JVM's temporary directories that hold a live log of
+    * `queryId` made by JanusApi itself. */
+  private def ownedLiveDirs(queryId: String): Seq[Path] = {
+    val tmp = Files.list(Path.of(System.getProperty("java.io.tmpdir")))
+    try tmp.iterator().asScala
+      .filter(_.getFileName.toString.startsWith(s"graft-live-$queryId"))
+      .toSeq
+    finally tmp.close()
+  }
+
+  test("without a factory a live query's log lives in a temporary " +
+      "directory of its own, which stopQuery deletes") {
+    val (api, _) = newApi()
+    api.registerQuery("ownedLog", hybridQuery)
+    assert(ownedLiveDirs("ownedLog").isEmpty)
+    val handle = api.startQuery("ownedLog")
+    assert(handle.awaitWarmup())
+    handle.addLiveEvents(LiveStream, hybridFeed)
+    assert(liveResults(handle).size === 1)
+    assert(ownedLiveDirs("ownedLog").size === 1)
+    assert(handle.live.exists(_.bufferedEventCount > 0))
+    api.stopQuery("ownedLog")
+    assert(ownedLiveDirs("ownedLog").isEmpty,
+      "the query's live log outlived stopQuery")
+    // a stopped query takes no more events (they would land in a log
+    // nobody reads); its counters stay readable
+    assertThrows[ApiException](handle.addLiveEvents(LiveStream, hybridFeed))
+    assert(ownedLiveDirs("ownedLog").isEmpty)
+    assert(handle.live.exists(_.bufferedEventCount > 0))
+  }
+
+  test("a scaleLiveLogFactory says where each query's live log lives; " +
+      "the caller keeps it after stopQuery") {
+    val dir = Files.createTempDirectory("scale-live")
     val registry = new QueryRegistry()
     val api = new JanusApi(spark, registry, _ => store, () => 10000L,
-      scaleLiveLogFactory = Some(id => new graft.storage.EventLog(spark,
-        java.nio.file.Files.createTempDirectory(s"scale-live-$id")
-          .resolve("log").toString, bucketMs = 1000L)))
-    api.registerQuery("hybrid2",
-      """PREFIX ex: <http://example.org/>
-        |PREFIX baseline: <https://janus.rs/baseline#>
-        |PREFIX janus: <https://janus.rs/fn#>
-        |REGISTER RStream ex:out AS
-        |SELECT ?sensor ?live ?hist
-        |FROM NAMED WINDOW ex:hist ON LOG ex:store [START 0 END 9000]
-        |FROM NAMED WINDOW ex:live ON STREAM ex:liveStream [RANGE 1000 STEP 1000]
-        |USING BASELINE ex:hist AGGREGATE
-        |WHERE {
-        |    WINDOW ex:hist { ?sensor ex:reading ?hist }
-        |    WINDOW ex:live { ?sensor ex:reading ?live }
-        |    ?sensor baseline:hist ?mean .
-        |    FILTER(janus:absolute_threshold_exceeded(?live, ?mean, 10))
-        |}""".stripMargin)
+      scaleLiveLogFactory = Some(id => new EventLog(spark,
+        dir.resolve(id).toString, bucketMs = 1000L)))
+    api.registerQuery("hybrid2", hybridQuery)
     val handle = api.startQuery("hybrid2")
-    assert(handle.live.isEmpty)
-    assert(handle.compiledLive.isDefined)
     assert(handle.awaitWarmup())
     assert(handle.status === ExecutionStatus.Running)
-    // same feed as the parity-path hybrid test: sensor0 anomaly (mean
-    // 24, live 40), sensor1 in range; a sentinel advances time to fire
-    handle.addLiveEvents("http://example.org/liveStream", Seq(
-      RdfEvent(100L, "http://example.org/sensor0",
-        "http://example.org/reading", "40", ""),
-      RdfEvent(200L, "http://example.org/sensor1",
-        "http://example.org/reading", "26", ""),
-      RdfEvent(1000L,
-        graft.streaming.LiveStreamProcessing.SentinelSubject,
-        graft.streaming.LiveStreamProcessing.SentinelPredicate,
-        graft.streaming.LiveStreamProcessing.SentinelObject, "")))
-    val deadline = System.currentTimeMillis() + 10000
-    var liveResults = Seq.empty[QueryResult]
-    while (liveResults.isEmpty && System.currentTimeMillis() < deadline) {
-      liveResults = Iterator.continually(handle.tryReceive())
-        .takeWhile(_.isDefined).flatten
-        .filter(_.source == ResultSource.Live).toSeq
-      if (liveResults.isEmpty) Thread.sleep(50)
-    }
-    assert(liveResults.nonEmpty, "expected a live anomaly result")
-    val b = liveResults.head.bindings.head
-    assert(b("sensor") === "http://example.org/sensor0")
-    assert(b("live") === "40")
+    handle.addLiveEvents(LiveStream, hybridFeed)
+    // the same results as with a log of the api's own
+    assert(liveResults(handle).map(_.bindings) ===
+      Seq(Seq(Map("sensor" -> "http://example.org/sensor0", "live" -> "40"))))
+    assert(handle.live.map(_.bufferedEventCount) === Some(
+      new EventLog(spark, dir.resolve("hybrid2").toString).read().count()))
     api.stopQuery("hybrid2")
+    assert(Files.isDirectory(dir.resolve("hybrid2")))
+    assert(ownedLiveDirs("hybrid2").isEmpty)
+  }
+
+  test("addLiveEvents refuses a stream that no live window reads") {
+    val (api, _) = newApi()
+    api.registerQuery("oneStream", hybridQuery)
+    val handle = api.startQuery("oneStream")
+    assert(handle.awaitWarmup())
+    val e = intercept[ApiException](handle.addLiveEvents(
+      "http://example.org/otherStream", hybridFeed))
+    assert(e.msg.contains("http://example.org/otherStream"))
+    // nothing reached the live log
+    assert(handle.live.map(_.bufferedEventCount) === Some(0L))
+    api.stopQuery("oneStream")
+    // a query without live windows reads no stream at all
+    api.registerQuery("histOnly", historicalOnly)
+    val hist = api.startQuery("histOnly")
+    assert(hist.live.isEmpty)
+    assertThrows[ApiException](hist.addLiveEvents(LiveStream, hybridFeed))
+    api.stopQuery("histOnly")
+  }
+
+  test("a slow consumer loses the OLDEST results, and each drop is " +
+      "counted in droppedResults (server.rs:34 broadcast-channel " +
+      "semantics)") {
+    val (api, _) = newApi()
+    // every pair of a window's readings is a solution: n readings make
+    // n * n results per fire
+    api.registerQuery("pairs",
+      """PREFIX ex: <http://example.org/>
+        |SELECT ?a ?b
+        |FROM NAMED WINDOW ex:w ON STREAM ex:s [RANGE 1000 STEP 1000]
+        |WHERE { WINDOW ex:w { ?a ex:p ?x . ?b ex:p ?y } }""".stripMargin)
+    val handle = api.startQuery("pairs")
+    val n = 200
+    def readings(from: Long) = (0 until n).map(i => RdfEvent(from + i,
+      s"http://example.org/e$from-$i", "http://example.org/p", s"$i", ""))
+    // two fires with NO consumer polling in between: 2 n² results, more
+    // than the queue holds
+    handle.addLiveEvents("http://example.org/s", readings(0L) ++
+      readings(1000L) :+ CompiledLiveStream.sentinel(2000L))
+    val perFire = n.toLong * n
+    val dropped = 2 * perFire - QueueCapacity
+    assert(handle.live.map(_.droppedResults) === Some(dropped))
+    // the kept results are the newest: the tail of the first fire, then
+    // all of the second, in order
+    val kept = Iterator.continually(handle.tryReceive())
+      .takeWhile(_.isDefined).flatten.map(_.timestamp).toSeq
+    assert(kept.size === QueueCapacity)
+    assert(kept === kept.sorted)
+    assert(kept.count(_ == 1000L) === perFire - dropped)
+    assert(kept.count(_ == 2000L) === perFire)
+    api.stopQuery("pairs")
   }
 
   test("registry enforces max queries and supports unregister/list") {

@@ -118,7 +118,9 @@ class BaselineBootstrapSpec extends AnyFunSuite {
     val stmts = statementsLocal(
       Seq(Seq(Map("sensor" -> s1, "reading" -> "10"),
         Map("sensor" -> s1, "reading" -> "20"))), Aggregate)
-    val live = new graft.streaming.LiveStreamProcessing(spark,
+    val results = scala.collection.mutable.ArrayBuffer.empty[
+      (Map[String, String], Long)]
+    val live = new graft.streaming.CompiledLiveStream(spark,
       """PREFIX ex: <http://example.org/>
         |PREFIX baseline: <https://janus.rs/baseline#>
         |PREFIX janus: <https://janus.rs/fn#>
@@ -129,16 +131,18 @@ class BaselineBootstrapSpec extends AnyFunSuite {
         |    WINDOW ex:w { ?sensor ex:reading ?live . }
         |    ?sensor baseline:reading ?hist .
         |    FILTER(janus:absolute_threshold_exceeded(?live, ?hist, 10))
-        |}""".stripMargin)
-    live.registerStream("http://example.org/stream")
-    live.addStaticData(asStaticQuads(stmts))
-    live.startProcessing()
-    live.addEvent("http://example.org/stream", graft.core.RdfEvent(
-      100L, s1, "http://example.org/reading", "40", ""))
-    live.closeStream("http://example.org/stream", 1000)
-    val results = live.collectResults()
+        |}""".stripMargin,
+      new graft.storage.EventLog(spark, java.nio.file.Files
+        .createTempDirectory("baseline-live").resolve("log").toString),
+      (df, _, to) => df.collect().foreach(r =>
+        results += ((r.getValuesMap[String](df.columns.toSeq), to))))
+    live.setStaticData(graft.core.RdfEvent.toDF(spark, asStaticQuads(stmts)))
+    live.processBatch(graft.core.RdfEvent.toDF(spark, Seq(
+      graft.core.RdfEvent(100L, s1, "http://example.org/reading", "40", ""),
+      graft.streaming.CompiledLiveStream.sentinel(1000L))
+      .map(_.copy(graph = "http://example.org/stream"))))
     assert(results.length === 1)
-    assert(results.head.bindings("hist") === "15")
-    assert(results.head.bindings("live") === "40")
+    assert(results.head._1("hist") === "15")
+    assert(results.head._1("live") === "40")
   }
 }

@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.api.{JanusApi, QueryRegistry}
 import graft.core.RdfEvent
-import graft.streaming.LiveStreamProcessing
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -80,14 +80,15 @@ class MqttTransportSpec extends AnyFunSuite {
 
   test("MQTT → live engine end-to-end: published N-Quads fire windows") {
     withBroker { broker =>
-      val live = new LiveStreamProcessing(spark,
+      val api = new JanusApi(spark, new QueryRegistry(),
+        _ => spark.emptyDataFrame)
+      api.registerQuery("mqtt",
         """PREFIX ex: <http://example.org/>
           |REGISTER RStream <out> AS
           |SELECT ?s ?o
           |FROM NAMED WINDOW ex:w ON STREAM ex:s [RANGE 1000 STEP 1000]
           |WHERE { WINDOW ex:w { ?s ex:p ?o } }""".stripMargin)
-      live.registerStream("http://example.org/s")
-      live.startProcessing()
+      val live = api.startQuery("mqtt")
       // subscriber feeds the live engine, preserving SOURCE timestamps
       // (now() passthrough of the parsed line needs no overwrite here:
       // drive event time from the payload by keeping parse timestamps)
@@ -106,7 +107,8 @@ class MqttTransportSpec extends AnyFunSuite {
           graft.parsing.NQuadsParser.parseLine(
             new String(p, StandardCharsets.UTF_8),
             () => System.currentTimeMillis()).foreach(ev =>
-            live.addEvent("http://example.org/s", ev.copy(graph = ""))))
+            live.addLiveEvents("http://example.org/s",
+              Seq(ev.copy(graph = "")))))
       engineFeed.subscribeTopics(Seq("janus"))
       Thread.sleep(200)
       val pub = new MqttConnection("127.0.0.1", broker.boundPort, "pub3")
@@ -119,18 +121,14 @@ class MqttTransportSpec extends AnyFunSuite {
       assert(seen.await(10, TimeUnit.SECONDS))
       // window [0,1000) fired once stream time reached 1000 via the
       // second event
-      val deadline = System.currentTimeMillis() + 15000
-      var results = Seq.empty[live.LiveResult]
-      while (results.isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-        results = live.collectResults()
-      }
-      assert(results.nonEmpty, "no live results from MQTT-fed engine")
-      assert(results.exists(_.bindings.get("s")
+      val result = live.receive(15000)
+      assert(result.nonEmpty, "no live results from MQTT-fed engine")
+      assert(result.get.bindings.exists(_.get("s")
         .contains("http://e.org/a")))
       pub.close()
       engineFeed.close()
       src.stop()
+      api.stopQuery("mqtt")
     }
   }
 }

@@ -20,87 +20,41 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** The cluster-scale live path must produce EXACTLY the results of the
-  * driver-buffered parity path ([[LiveStreamProcessing]], itself ported
-  * from `tests/live_stream_integration_test.rs`) — same fires, same
-  * bindings, same window spans — while holding no events on the driver
-  * and keeping the distributed log pruned. */
+/** The live engine must produce EXACTLY the results of a
+  * driver-buffered port of the reference's live path
+  * ([[LiveStreamProcessing]]) — same fires, same bindings, same window
+  * spans — while holding no events on the driver and keeping the
+  * distributed log pruned. */
 class CompiledLiveStreamSpec extends AnyFunSuite {
+
+  import LiveFeed._
 
   private lazy val spark = TestSpark.spark
 
-  private val basicQuery =
-    """PREFIX ex: <http://example.org/>
-      |REGISTER RStream <output> AS
-      |SELECT ?s ?p ?o
-      |FROM NAMED WINDOW ex:w1 ON STREAM ex:stream1 [RANGE 1000 STEP 300]
-      |WHERE {
-      |    WINDOW ex:w1 { ?s ?p ?o }
-      |}""".stripMargin
-
-  private val Stream1 = "http://example.org/stream1"
-
-  /** Collected result rows as (bindings, from, to) — the same shape
-    * LiveStreamProcessing emits. */
-  private final class SinkBuffer {
-    val rows = mutable.ArrayBuffer.empty[(Map[String, String], Long, Long)]
-    def sink(df: DataFrame, from: Long, to: Long): Unit = {
-      val cols = df.columns
-      df.collect().foreach { row =>
-        val b = cols.zipWithIndex.collect {
-          case (name, i) if !row.isNullAt(i) =>
-            name -> String.valueOf(row.get(i))
-        }.toMap
-        rows += ((b, from, to))
-      }
-    }
-  }
-
-  private def newLog(): EventLog = {
-    val dir = Files.createTempDirectory("clslog")
-    new EventLog(spark, dir.resolve("log").toString, bucketMs = 1000L)
-  }
-
-  private def quadsDF(events: Seq[(String, RdfEvent)]): DataFrame =
-    RdfEvent.toDF(spark,
-      events.map { case (stream, e) => e.copy(graph = stream) })
-
-  /** The driver-buffered parity path's results for an event feed. */
+  /** The driver-buffered parity reference's results for an event feed. */
   private def parityOf(query: String, events: Seq[(String, RdfEvent)],
       static: Seq[RdfEvent] = Nil): Set[(Map[String, String], Long, Long)] = {
     val p = new LiveStreamProcessing(spark, query)
-    events.map(_._1).distinct.foreach(p.registerStream)
-    if (static.nonEmpty) p.addStaticData(static)
-    p.startProcessing()
+    p.addStaticData(static)
     events.foreach { case (s, e) => p.addEvent(s, e) }
-    p.collectResults()
-      .map(r => (r.bindings, r.timestampFrom, r.timestampTo)).toSet
+    p.collectResults().toSet
   }
 
   /** Run the same event feed through both paths; return (parity results,
-    * compiled results). `batches` groups events into micro-batches. */
+    * compiled results). */
   private def runBoth(query: String,
       batches: Seq[Seq[(String, RdfEvent)]],
       static: Seq[RdfEvent] = Nil)
       : (Set[(Map[String, String], Long, Long)],
-         Set[(Map[String, String], Long, Long)]) = {
-    val parity = parityOf(query, batches.flatten, static)
-    // compiled path
-    val buf = new SinkBuffer
-    val c = new CompiledLiveStream(spark, query, newLog(), buf.sink)
-    if (static.nonEmpty)
-      c.setStaticData(RdfEvent.toDF(spark, static.toSeq))
-    batches.foreach(b => c.processBatch(quadsDF(b)))
-    (parity, buf.rows.toSet)
-  }
+         Set[(Map[String, String], Long, Long)]) =
+    (parityOf(query, batches.flatten, static),
+      compiledOf(query, batches, static).toSet)
 
   test("parity with LiveStreamProcessing on the ported timing scenario") {
     val events = (0 to 10).map { i =>
       Stream1 -> RdfEvent(i * 100L, s"http://example.org/s$i",
         "http://example.org/p", s"o$i", "")
-    } :+ (Stream1 -> RdfEvent(3000L, LiveStreamProcessing.SentinelSubject,
-      LiveStreamProcessing.SentinelPredicate,
-      LiveStreamProcessing.SentinelObject, ""))
+    } :+ sentinel(3000L)
     // one event per micro-batch — fires interleave with appends
     val (parity, compiled) = runBoth(basicQuery, events.map(Seq(_)))
     assert(parity.nonEmpty)
@@ -111,9 +65,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     val events = (0 to 10).map { i =>
       Stream1 -> RdfEvent(i * 100L, s"http://example.org/s$i",
         "http://example.org/p", s"o$i", "")
-    } :+ (Stream1 -> RdfEvent(3000L, LiveStreamProcessing.SentinelSubject,
-      LiveStreamProcessing.SentinelPredicate,
-      LiveStreamProcessing.SentinelObject, ""))
+    } :+ sentinel(3000L)
     val (parity, compiled) = runBoth(basicQuery, events.grouped(4).toSeq)
     assert(compiled === parity)
   }
@@ -145,9 +97,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
         "http://example.org/value", "102", ""), // |102-100| < 5 → dropped
       Stream1 -> RdfEvent(600L, "http://example.org/a",
         "http://example.org/value", "11", ""), // |11-10| > 5 false → dropped
-      Stream1 -> RdfEvent(2000L, LiveStreamProcessing.SentinelSubject,
-        LiveStreamProcessing.SentinelPredicate,
-        LiveStreamProcessing.SentinelObject, ""))
+      sentinel(2000L))
     val (parity, compiled) = runBoth(query, Seq(events), static)
     assert(parity.nonEmpty)
     assert(compiled === parity)
@@ -181,11 +131,6 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     Stream1 -> RdfEvent(i * 100L + 50L,
       s"http://example.org/${if (i % 2 == 0) "a" else "b"}",
       "http://example.org/value", (50 + i).toString, "")
-
-  private def sentinel(ts: Long): (String, RdfEvent) =
-    Stream1 -> RdfEvent(ts, LiveStreamProcessing.SentinelSubject,
-      LiveStreamProcessing.SentinelPredicate,
-      LiveStreamProcessing.SentinelObject, "")
 
   /** Spark jobs one steady single fire of [[hybridQuery]] runs: the
     * baseline broadcast and the one action that collects the fire.
@@ -270,14 +215,11 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     val after = (6 until 14).map(reading) :+ sentinel(3000L)
 
     val p = new LiveStreamProcessing(spark, hybridQuery)
-    p.registerStream(Stream1)
     p.addStaticData(first)
-    p.startProcessing()
     before.foreach { case (st, e) => p.addEvent(st, e) }
     p.addStaticData(second) // the parity engine's static side accumulates
     after.foreach { case (st, e) => p.addEvent(st, e) }
-    val parity = p.collectResults()
-      .map(r => (r.bindings, r.timestampFrom, r.timestampTo)).toSet
+    val parity = p.collectResults().toSet
 
     val buf = new SinkBuffer
     val c = new CompiledLiveStream(spark, hybridQuery, newLog(), buf.sink)
@@ -403,9 +345,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
         "http://example.org/label", "hot", ""),
       Stream1 -> RdfEvent(200L, "http://example.org/b",
         "http://example.org/value", "2", ""),
-      Stream1 -> RdfEvent(2000L, LiveStreamProcessing.SentinelSubject,
-        LiveStreamProcessing.SentinelPredicate,
-        LiveStreamProcessing.SentinelObject, ""))
+      sentinel(2000L))
     val (parity, compiled) = runBoth(query, Seq(events))
     assert(parity.nonEmpty)
     assert(compiled === parity)
@@ -450,9 +390,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     val events = Seq(100L, 250L, 700L, 1300L, 1499L).map { ts =>
       Stream1 -> RdfEvent(ts, s"http://example.org/s$ts",
         "http://example.org/p", s"o$ts", "")
-    } :+ (Stream1 -> RdfEvent(1500L, LiveStreamProcessing.SentinelSubject,
-      LiveStreamProcessing.SentinelPredicate,
-      LiveStreamProcessing.SentinelObject, ""))
+    } :+ sentinel(1500L)
     val (parity, compiled) = runBoth(query, Seq(events))
     assert(compiled === parity)
     val byClose = compiled.toSeq.sortBy(_._3)
@@ -482,9 +420,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
         "http://example.org/OTHER", "o2", ""),
       Stream1 -> RdfEvent(700L, "http://example.org/c",
         "http://example.org/p", "o3", ""),
-      Stream1 -> RdfEvent(900L, LiveStreamProcessing.SentinelSubject,
-        LiveStreamProcessing.SentinelPredicate,
-        LiveStreamProcessing.SentinelObject, ""))
+      sentinel(900L))
     val (parity, compiled) = runBoth(query, Seq(events))
     assert(compiled === parity)
     val byClose = compiled.toSeq.sortBy(_._3)
@@ -515,9 +451,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
         "http://example.org/p", "o3", ""),
         Stream1 -> RdfEvent(1300L, "http://example.org/d",
           "http://example.org/p", "o4", "")),
-      Seq(Stream1 -> RdfEvent(2000L, LiveStreamProcessing.SentinelSubject,
-        LiveStreamProcessing.SentinelPredicate,
-        LiveStreamProcessing.SentinelObject, "")))
+      Seq(sentinel(2000L)))
     /** Every sink call in order: (from, to, sorted rendered rows). */
     def fires(query: String, distributed: Boolean)
         : Seq[(Long, Long, Seq[String])] = {

@@ -1,108 +1,56 @@
 package graft.streaming
 
 import graft.TestSpark
+import graft.api.{JanusApi, QueryRegistry}
 import graft.core.RdfEvent
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports the timing/behavioral assertions of
-  * `/root/reference/tests/live_stream_integration_test.rs` (reformulated
-  * as event-time window assertions per SURVEY.md §7.3 item 1). */
+  * the reference's `tests/live_stream_integration_test.rs` (reformulated
+  * as event-time window assertions per SURVEY.md §7.3 item 1), run on
+  * the live engine; named after the reference's
+  * `live_stream_processing.rs`, whose contract they pin. */
 class LiveStreamProcessingSpec extends AnyFunSuite {
+
+  import LiveFeed._
 
   private lazy val spark = TestSpark.spark
 
-  private val basicQuery =
-    """PREFIX ex: <http://example.org/>
-      |REGISTER RStream <output> AS
-      |SELECT ?s ?p ?o
-      |FROM NAMED WINDOW ex:w1 ON STREAM ex:stream1 [RANGE 1000 STEP 300]
-      |WHERE {
-      |    WINDOW ex:w1 { ?s ?p ?o }
-      |}""".stripMargin
-
-  test("stream registration is idempotent") {
-    val p = new LiveStreamProcessing(spark, basicQuery)
-    p.registerStream("http://example.org/stream1")
-    p.registerStream("http://example.org/stream1")
-    assert(p.getRegisteredStreams === Seq("http://example.org/stream1"))
-  }
-
   test("window timing: closes every STEP, range == RANGE " +
       "(live_stream_integration_test.rs:119-161)") {
-    val p = new LiveStreamProcessing(spark, basicQuery)
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    (0 to 10).foreach { i =>
-      p.addEvent("http://example.org/stream1",
-        RdfEvent(i * 100L, s"http://example.org/s$i",
-          "http://example.org/p", s"o$i", ""))
-    }
-    p.closeStream("http://example.org/stream1", 3000)
-    val results = p.collectResults()
-    assert(results.nonEmpty)
+    val rows = compiledOf(basicQuery,
+      ((0 to 10).map(i => ev(i * 100L, s"s$i", "p", s"o$i")) :+
+        sentinel(3000L)).map(Seq(_)))
+    assert(rows.nonEmpty)
     // every result spans exactly RANGE
-    assert(results.forall(r => r.timestampTo - r.timestampFrom === 1000L))
+    assert(rows.forall { case (_, from, to) => to - from === 1000L })
     // at least 3 distinct window closures produced results
-    val closes = results.map(_.timestampTo).distinct.sorted
+    val closes = rows.map(_._3).distinct.sorted
     assert(closes.length >= 3)
     // closes are multiples of STEP
     assert(closes.forall(_ % 300 === 0))
     // sentinel never leaks into bindings
-    assert(results.forall(!_.bindings.values.exists(_.contains("sentinel"))))
-  }
-
-  test("bounded result buffer drops OLDEST results with lag accounting " +
-      "(slow consumer; server.rs:34 broadcast-channel semantics)") {
-    val p = new LiveStreamProcessing(spark, basicQuery,
-      maxBufferedResults = 3)
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    // 6 events, one per step window → more results than the buffer holds,
-    // with NO consumer polling in between
-    (0 until 6).foreach { i =>
-      p.addEvent("http://example.org/stream1",
-        RdfEvent(i * 300L + 1, s"http://example.org/s$i",
-          "http://example.org/p", s"o$i", ""))
-    }
-    p.closeStream("http://example.org/stream1", 3000)
-    val kept = p.collectResults()
-    assert(kept.length === 3)
-    assert(p.droppedResults > 0)
-    // the KEPT results are the newest fires (drop-oldest): last event
-    // (ts 1501) is covered through close 2400 ([1400, 2400))
-    val allCloses = kept.map(_.timestampTo)
-    assert(allCloses === allCloses.sorted)
-    assert(allCloses.last === 2400L)
+    assert(rows.forall(!_._1.values.exists(_.contains("sentinel"))))
   }
 
   test("window content: fire at c covers [c-range, c) only") {
-    val p = new LiveStreamProcessing(spark, basicQuery)
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(100L, "http://example.org/a", "http://example.org/p", "1", ""))
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(1500L, "http://example.org/b", "http://example.org/p", "2", ""))
-    p.closeStream("http://example.org/stream1", 2400)
-    val results = p.collectResults()
-    // window closing at 300 contains only event a; at 1800 only event b;
-    // at 1200 both (a@100 ∈ [200,1200)? no — a@100 < 200; b@1500 ≥ 1200 no)
-    val byClose = results.groupBy(_.timestampTo)
-      .view.mapValues(_.map(_.bindings("s")).toSet).toMap
+    val rows = compiledOf(basicQuery, Seq(ev(100L, "a", "p", "1"),
+      ev(1500L, "b", "p", "2"), sentinel(2400L)).map(Seq(_)))
+    val byClose = rows.groupBy(_._3)
+      .view.mapValues(_.map(_._1("s")).toSet).toMap
+    // the close at 300 covers [-700, 300): only a@100; the one at 1800
+    // covers [800, 1800): only b@1500
     assert(byClose(300L) === Set("http://example.org/a"))
     assert(byClose(1800L) === Set("http://example.org/b"))
-    // window closing at 1200 covers [200,1200): neither a@100 nor b@1500
+    // the close at 1200 covers [200, 1200): neither a@100 nor b@1500
     assert(!byClose.contains(1200L))
   }
 
   test("empty windows produce no results") {
-    val p = new LiveStreamProcessing(spark,
-      basicQuery.replace("RANGE 1000 STEP 300", "RANGE 1000 STEP 500"))
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    p.closeStream("http://example.org/stream1", 5000)
-    assert(p.collectResults().isEmpty)
+    assert(compiledOf(
+      basicQuery.replace("RANGE 1000 STEP 300", "RANGE 1000 STEP 500"),
+      Seq(Seq(sentinel(5000L)))).isEmpty)
   }
 
   test("extension-function FILTER on the live path") {
@@ -118,16 +66,9 @@ class LiveStreamProcessingSpec extends AnyFunSuite {
         |        FILTER(janus:absolute_threshold_exceeded(?v, "50", "10"))
         |    }
         |}""".stripMargin
-    val p = new LiveStreamProcessing(spark, q)
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(100L, "http://example.org/hot", "http://example.org/value", "95", ""))
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(200L, "http://example.org/ok", "http://example.org/value", "55", ""))
-    p.closeStream("http://example.org/stream1", 1000)
-    val results = p.collectResults()
-    assert(results.map(_.bindings("s")).toSet === Set("http://example.org/hot"))
+    val rows = compiledOf(q, Seq(ev(100L, "hot", "value", "95"),
+      ev(200L, "ok", "value", "55"), sentinel(1000L)).map(Seq(_)))
+    assert(rows.map(_._1("s")).toSet === Set("http://example.org/hot"))
   }
 
   test("stream-static join: baseline quads join live readings (R10)") {
@@ -143,25 +84,17 @@ class LiveStreamProcessingSpec extends AnyFunSuite {
         |    ?sensor baseline:mean ?mean .
         |    FILTER(janus:absolute_threshold_exceeded(?reading, ?mean, 5))
         |}""".stripMargin
-    val p = new LiveStreamProcessing(spark, q)
-    p.registerStream("http://example.org/stream1")
-    p.addStaticData(Seq(
+    val static = Seq(
       RdfEvent(0L, "http://example.org/s1", "https://janus.rs/baseline#mean",
         "20", ""),
       RdfEvent(0L, "http://example.org/s2", "https://janus.rs/baseline#mean",
-        "50", "")))
-    p.startProcessing()
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(100L, "http://example.org/s1", "http://example.org/reading",
-        "40", "")) // |40-20| > 5 → anomaly
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(200L, "http://example.org/s2", "http://example.org/reading",
-        "52", "")) // |52-50| < 5 → fine
-    p.closeStream("http://example.org/stream1", 1000)
-    val results = p.collectResults()
-    assert(results.map(_.bindings("sensor")).toSet ===
-      Set("http://example.org/s1"))
-    assert(results.head.bindings("mean") === "20")
+        "50", ""))
+    val rows = compiledOf(q, Seq(
+      ev(100L, "s1", "reading", "40"), // |40-20| > 5 → anomaly
+      ev(200L, "s2", "reading", "52"), // |52-50| < 5 → fine
+      sentinel(1000L)).map(Seq(_)), static)
+    assert(rows.map(_._1("sensor")).toSet === Set("http://example.org/s1"))
+    assert(rows.head._1("mean") === "20")
   }
 
   test("cross-window merge: two windows join at fire time (W2)") {
@@ -175,19 +108,11 @@ class LiveStreamProcessingSpec extends AnyFunSuite {
         |    WINDOW ex:w1 { ?s ex:a ?a . }
         |    WINDOW ex:w2 { ?s ex:b ?b . }
         |}""".stripMargin
-    val p = new LiveStreamProcessing(spark, q)
-    p.registerStream("http://example.org/stream1")
-    p.registerStream("http://example.org/stream2")
-    p.startProcessing()
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(100L, "http://example.org/x", "http://example.org/a", "1", ""))
-    p.addEvent("http://example.org/stream2",
-      RdfEvent(200L, "http://example.org/x", "http://example.org/b", "2", ""))
-    p.closeStream("http://example.org/stream1", 1000)
-    p.closeStream("http://example.org/stream2", 1000)
-    val results = p.collectResults()
-    assert(results.exists(r => r.bindings.get("a").contains("1") &&
-      r.bindings.get("b").contains("2")))
+    val rows = compiledOf(q, Seq(ev(100L, "x", "a", "1"),
+      ev(200L, "x", "b", "2", Stream2), sentinel(1000L),
+      sentinel(1000L, Stream2)).map(Seq(_)))
+    assert(rows.exists { case (b, _, _) =>
+      b.get("a").contains("1") && b.get("b").contains("2") })
   }
 
   test("a window fires only when ITS stream's event time advances") {
@@ -201,52 +126,44 @@ class LiveStreamProcessingSpec extends AnyFunSuite {
         |    WINDOW ex:w1 { ?s ex:a ?o . }
         |    WINDOW ex:w2 { ?s ex:a ?o . }
         |}""".stripMargin
-    val p = new LiveStreamProcessing(spark, q)
-    p.registerStream("http://example.org/stream1")
-    p.registerStream("http://example.org/stream2")
-    p.startProcessing()
+    val buf = new SinkBuffer
+    val c = new CompiledLiveStream(spark, q, newLog(), buf.sink)
     // identical (s,o) in both streams so the cross-window join matches
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(50L, "http://example.org/x", "http://example.org/a", "1", ""))
-    p.addEvent("http://example.org/stream2",
-      RdfEvent(100L, "http://example.org/x", "http://example.org/a", "1", ""))
+    Seq(ev(50L, "x", "a", "1"), ev(100L, "x", "a", "1", Stream2))
+      .foreach(e => c.processBatch(quadsDF(Seq(e))))
     // stream1 reaches 1000 → ONLY w1 fires (merging w2's content);
     // w2's own stream time is still 100, so w2 must not fire yet
-    p.closeStream("http://example.org/stream1", 1000)
-    val first = p.collectResults()
-    assert(first.length === 1, s"expected exactly one fire, got $first")
+    c.processBatch(quadsDF(Seq(sentinel(1000L))))
+    assert(buf.rows.length === 1, s"expected exactly one fire, got ${buf.rows}")
     // stream2 reaches 1000 → now w2 fires too
-    p.closeStream("http://example.org/stream2", 1000)
-    val second = p.collectResults()
-    assert(second.length === 1, s"expected exactly one more fire, got $second")
-  }
-
-  test("buffers evict events no future window can cover") {
-    val p = new LiveStreamProcessing(spark, basicQuery) // RANGE 1000 STEP 300
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    (0 until 20).foreach(i => p.addEvent("http://example.org/stream1",
-      RdfEvent(i * 50L, s"http://example.org/s$i", "http://example.org/p",
-        s"$i", "")))
-    // some early events already dropped as windows fired during the adds
-    assert(p.bufferedEventCount <= 20)
-    // advance far past the events: everything below nextClose-range drops
-    p.closeStream("http://example.org/stream1", 60000)
-    assert(p.bufferedEventCount <= 1) // only the sentinel can remain
+    c.processBatch(quadsDF(Seq(sentinel(1000L, Stream2))))
+    assert(buf.rows.length === 2,
+      s"expected exactly one more fire, got ${buf.rows}")
   }
 
   test("literal and IRI objects both flow through") {
-    val p = new LiveStreamProcessing(spark, basicQuery)
-    p.registerStream("http://example.org/stream1")
-    p.startProcessing()
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(100L, "http://example.org/s", "http://example.org/p",
-        "http://example.org/obj", ""))
-    p.addEvent("http://example.org/stream1",
-      RdfEvent(150L, "http://example.org/s", "http://example.org/p",
-        "plain text", ""))
-    p.closeStream("http://example.org/stream1", 300)
-    val objs = p.collectResults().map(_.bindings("o")).toSet
-    assert(objs === Set("http://example.org/obj", "plain text"))
+    val rows = compiledOf(basicQuery, Seq(
+      ev(100L, "s", "p", "http://example.org/obj"),
+      ev(150L, "s", "p", "plain text"), sentinel(300L)).map(Seq(_)))
+    assert(rows.map(_._1("o")).toSet ===
+      Set("http://example.org/obj", "plain text"))
+  }
+
+  test("buffers evict events no future window can cover") {
+    // without a factory the query's live log is bucketed by its STEP
+    val api = new JanusApi(spark, new QueryRegistry(),
+      _ => spark.emptyDataFrame)
+    api.registerQuery("evict", basicQuery) // RANGE 1000 STEP 300
+    val handle = api.startQuery("evict")
+    (0 until 20).foreach(i => handle.addLiveEvents(Stream1,
+      Seq(ev(i * 50L, s"s$i", "p", s"$i")._2)))
+    // some early events already pruned as windows fired during the adds
+    assert(handle.live.exists(_.bufferedEventCount <= 20))
+    // advance far past the events: every bucket below the next close
+    // minus RANGE is dropped
+    handle.addLiveEvents(Stream1, Seq(sentinel(60000L)._2))
+    // only the sentinel can remain
+    assert(handle.live.exists(_.bufferedEventCount <= 1))
+    api.stopQuery("evict")
   }
 }
