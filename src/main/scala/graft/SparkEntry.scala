@@ -3,8 +3,9 @@ package graft
 import graft.sources.EventsAsQuads
 import graft.sparql.{SparqlCompiler, SparqlParser}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -270,6 +271,28 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("r1_bgp_join")(spark, "/root/testdata/sf0.001")
+
+  /** A live engine sink that keeps every fire's rows, each tagged with
+    * its fire's `timestamp_from` and `timestamp_to`, in emission order:
+    * the rows are on the driver already, so [[frame]] is a local one. */
+  private final class FireRows(s: SparkSession) {
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    private var schema = Option.empty[StructType]
+
+    def sink(fire: Seq[Row], fireSchema: StructType, from: Long,
+        to: Long): Unit = {
+      schema = Some(fireSchema.add("timestamp_from", LongType)
+        .add("timestamp_to", LongType))
+      rows ++= fire.map(r => Row.fromSeq(r.toSeq :+ from :+ to))
+    }
+
+    /** Every fire's rows; the engine must have fired at least once. */
+    def frame: DataFrame = {
+      import scala.jdk.CollectionConverters._
+      s.createDataFrame(rows.asJava,
+        schema.getOrElse(throw new IllegalStateException("no fire")))
+    }
+  }
 
   /** (|a|, |distinct(a) ∩ distinct(b)|, |b|) in ONE Spark action — the
     * self-verifying incremental entries compared `a.count()`,
@@ -733,13 +756,11 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("w1live")
       val log = new graft.storage.EventLog(s,
         tmp.resolve("log").toString, bucketMs = 86400000L)
-      val fires = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val fires = new FireRows(s)
       val cls = new graft.streaming.CompiledLiveStream(s, query, log,
-        (df, from, to) => fires += df
-          .withColumn("timestamp_from", lit(from))
-          .withColumn("timestamp_to", lit(to)))
+        fires.sink)
       cls.processBatch(quads)
-      fires.reduce(_ unionByName _)
+      fires.frame
         .select(col("timestamp_from"), col("timestamp_to"), col("n"),
           round(col("avg_val"), 6).as("avg_val"))
     }),
@@ -777,15 +798,13 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("w1ooo")
       val log = new graft.storage.EventLog(s,
         tmp.resolve("log").toString, bucketMs = 86400000L)
-      val fires = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // sink frames are driver-local (each advance's fires are
-      // collected by one action inside the engine), so the lazily-held
-      // frames stay valid after the log prunes superseded segments —
-      // no per-fire re-pin, no per-fire Spark job
+      // fire rows reach the sink on the driver (each advance's fires
+      // are collected by one action inside the engine), so the held
+      // rows stay valid after the log prunes superseded segments — no
+      // per-fire re-pin, no per-fire Spark job
+      val fires = new FireRows(s)
       val cls = new graft.streaming.CompiledLiveStream(s, query, log,
-        (df, from, to) => fires += df
-          .withColumn("timestamp_from", lit(from))
-          .withColumn("timestamp_to", lit(to)))
+        fires.sink)
       // arrival CHUNK = 3 arrival days (due closes inside a chunk still
       // fire in close order, batched as one job); a held-back day-d
       // event has arrival day d+1, which is never in an earlier chunk
@@ -800,7 +819,7 @@ object SparkEntry {
         cls.processBatch(arr.where(col("__arr") === d).drop("__arr"))
       }
       arr.unpersist()
-      fires.reduce(_ unionByName _)
+      fires.frame
         .select(col("timestamp_from"), col("timestamp_to"), col("n"),
           round(col("avg_val"), 6).as("avg_val"))
     }),
@@ -835,18 +854,15 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("w2live")
       val log = new graft.storage.EventLog(s,
         tmp.resolve("log").toString, bucketMs = 86400000L)
-      // each fire yields ONE aggregate row — evaluate it eagerly (a
-      // lazy union of ~60 join plans would materialize every broadcast
-      // stage of every fire in a single action) and rebuild the tiny
-      // per-fire emission table on the driver, like the reference's
-      // one-message-per-fire channel
-      val fires = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      // each fire yields ONE aggregate row, already on the driver: the
+      // tiny per-fire emission table is rebuilt there, like the
+      // reference's one-message-per-fire channel
+      val fires = new FireRows(s)
       val cls = new graft.streaming.CompiledLiveStream(s, query, log,
-        (df, from, to) => fires +=
-          ((from, to, df.selectExpr("cast(n_pairs as long)").head.getLong(0))))
+        fires.sink)
       cls.processBatch(quads)
-      import s.implicits._
-      fires.toSeq.toDF("timestamp_from", "timestamp_to", "n_pairs")
+      fires.frame.select(col("timestamp_from"), col("timestamp_to"),
+        col("n_pairs").cast("long").as("n_pairs"))
     }),
 
     "w4_sliding_gap" -> ((s, dir) => {

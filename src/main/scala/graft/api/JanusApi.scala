@@ -4,10 +4,12 @@ import graft.baseline.BaselineBootstrap
 import graft.core.RdfEvent
 import graft.historical.HistoricalExecutor
 import graft.janusql._
+import graft.sparql.Query
 import graft.storage.EventLog
 import graft.streaming.CompiledLiveStream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, LinkedBlockingQueue, TimeUnit}
@@ -285,57 +287,46 @@ final class JanusApi(
       if (parsed.liveWindows.isEmpty) None
       else Some(openLive(meta, results))
 
-    // historical workers: one thread per historical window
+    // historical workers: one thread per historical window, except the
+    // windows that feed a hybrid query's baseline (USING BASELINE names
+    // the window, or names none): those run once, on the warm-up thread,
+    // which emits their Historical results from the same pass
     val now = clock()
-    val historicalThreads = parsed.compiledHistoricalQueries.map {
-      case (window, query) =>
-        val t = new Thread(() => {
-          try {
-            val quads = logProvider(window.streamName)
-            window.windowType match {
-              case WindowType.HistoricalFixed =>
-                val out = HistoricalExecutor.executeFixed(quads, query,
-                  window.start.get, window.end.get)
-                val bindings = collectBindings(out,
-                  Seq("timestamp_from", "timestamp_to"))
-                registry.incrementExecutions(queryId)
-                results.put(QueryResult(queryId, window.end.get,
-                  ResultSource.Historical, bindings))
-              case WindowType.HistoricalSliding =>
-                val spec = HistoricalExecutor.SlidingSpec(
-                  window.offset.get, window.width, window.slide)
-                val out = HistoricalExecutor.executeSliding(quads, query,
-                  now, spec)
-                // one result batch per window in window order, INCLUDING
-                // empty windows (the reference emits an empty bindings
-                // batch per window, janus_api.rs:276-298)
-                slidingBatches(out, spec).foreach { bindings =>
-                  registry.incrementExecutions(queryId)
-                  results.put(QueryResult(queryId, now,
-                    ResultSource.Historical, bindings))
-                }
-              case WindowType.Live => ()
-            }
-          } catch {
-            case _: InterruptedException => () // shutdown interrupt
-            case e: Exception =>
-              failUnlessStopped(statusRef, e.getMessage)
-          }
-        }, s"graft-hist-$queryId-${window.windowName}")
-        t.setDaemon(true)
-        t.start()
-        t
+    val targetWindow = parsed.baseline.map(_.windowName)
+    val (baselineWindows, workerWindows) =
+      parsed.compiledHistoricalQueries.partition { case (window, _) =>
+        isHybrid && targetWindow.forall(_ == window.windowName)
+      }
+    def emit(ts: Long, bindings: Seq[Map[String, String]]): Unit = {
+      registry.incrementExecutions(queryId)
+      results.put(QueryResult(queryId, ts, ResultSource.Historical, bindings))
+    }
+    val historicalThreads = workerWindows.map { case (window, query) =>
+      val t = new Thread(() => {
+        try evaluateWindow(window, query, now).foreach {
+          case (ts, bindings) => emit(ts, bindings)
+        }
+        catch {
+          case _: InterruptedException => () // shutdown interrupt
+          case e: Exception =>
+            failUnlessStopped(statusRef, e.getMessage)
+        }
+      }, s"graft-hist-$queryId-${window.windowName}")
+      t.setDaemon(true)
+      t.start()
+      t
     }
 
-    // B5: async baseline warm-up for hybrid queries — compute baseline
-    // from the historical side, materialize into the live static data,
-    // flip WarmingBaseline → Running (`janus_api.rs:352-412`)
+    // B5: async baseline warm-up for hybrid queries — evaluate the
+    // baseline windows (emitting each batch as a Historical result),
+    // fold the same batches into baseline statements, materialize them
+    // into the live static data, flip WarmingBaseline → Running
+    // (`janus_api.rs:352-412`)
     val baselineThread = if (isHybrid) {
       val t = new Thread(() => {
         try {
           val mode = parsed.baseline.map(_.mode).getOrElse(meta.baselineMode)
-          val targetWindow = parsed.baseline.map(_.windowName)
-          val statements = computeBaseline(parsed, targetWindow, mode, now)
+          val statements = computeBaseline(baselineWindows, mode, now, emit)
           liveSide.foreach(_.engine.setStaticData(RdfEvent.toDF(
             spark, BaselineBootstrap.asStaticQuads(statements))))
           if (statusRef.compareAndSet(ExecutionStatus.WarmingBaseline,
@@ -371,8 +362,9 @@ final class JanusApi(
 
   /** The live side of a query with a live window: the one live engine,
     * over the factory's log or over a log in a temporary directory of
-    * its own, delivering one QueryResult per solution. Each fire's
-    * frame is driver-local, so collecting it runs no Spark job. */
+    * its own, delivering one QueryResult per solution. Each fire's rows
+    * arrive already on the driver, so delivering them runs no Spark job
+    * and plans nothing. */
   private def openLive(meta: QueryMetadata, results: ResultQueue): LiveSide = {
     val queryId = meta.queryId
     val (log, ownedDir) = scaleLiveLogFactory match {
@@ -383,10 +375,14 @@ final class JanusApi(
         (new EventLog(spark, dir.resolve("log").toString,
           bucketMs = meta.parsed.liveWindows.map(_.slide).min), Some(dir))
     }
-    val sink: (DataFrame, Long, Long) => Unit = (df, _, to) =>
-      collectBindings(df, Seq.empty).foreach { b =>
-        registry.incrementExecutions(queryId)
-        results.put(QueryResult(queryId, to, ResultSource.Live, Seq(b)))
+    val sink: (Seq[Row], StructType, Long, Long) => Unit =
+      (rows, schema, _, to) => {
+        val toBinding = rowToBinding(schema.fieldNames, Seq.empty) _
+        rows.foreach { r =>
+          registry.incrementExecutions(queryId)
+          results.put(QueryResult(queryId, to, ResultSource.Live,
+            Seq(toBinding(r))))
+        }
       }
     val engine =
       try new CompiledLiveStream(spark, meta.queryText, log, sink)
@@ -447,40 +443,50 @@ final class JanusApi(
     }
   }
 
-  /** Baseline over the (optionally USING BASELINE-selected) historical
-    * windows (`janus_api.rs:575-670`). Statements are computed PER
-    * historical window and concatenated (janus_api.rs:606-640): LAST-mode
-    * clearing applies only across one window's sub-batches, never across
-    * window definitions, and AGGREGATE never blends means across
-    * windows. */
-  private def computeBaseline(parsed: ParsedJanusQuery,
-      targetWindow: Option[String], mode: BaselineMode, now: Long)
+  /** One historical window's result batches with their Historical
+    * timestamps: a fixed window yields one batch at its END; a sliding
+    * window yields one batch per window, in window order and empty
+    * windows included, as the reference does (janus_api.rs:276-298;
+    * [[slidingBatches]]), all at `now`. Both the
+    * window workers and the baseline warm-up evaluate through it. */
+  private def evaluateWindow(window: WindowDefinition, query: Query,
+      now: Long): Iterator[(Long, Seq[Map[String, String]])] = {
+    val quads = logProvider(window.streamName)
+    window.windowType match {
+      case WindowType.HistoricalFixed =>
+        val out = HistoricalExecutor.executeFixed(quads, query,
+          window.start.get, window.end.get)
+        Iterator.single(window.end.get ->
+          collectBindings(out, Seq("timestamp_from", "timestamp_to")))
+      case WindowType.HistoricalSliding =>
+        val spec = HistoricalExecutor.SlidingSpec(
+          window.offset.get, window.width, window.slide)
+        slidingBatches(HistoricalExecutor.executeSliding(quads, query,
+          now, spec), spec).map(now -> _)
+      case WindowType.Live => Iterator.empty
+    }
+  }
+
+  /** Baseline over the windows that feed it (`janus_api.rs:575-670`),
+    * each evaluated once: every batch goes to `emit` as it streams by,
+    * then into the fold. Statements are computed PER historical window
+    * and concatenated (janus_api.rs:606-640): LAST-mode clearing applies
+    * only across one window's sub-batches, never across window
+    * definitions, and AGGREGATE never blends means across windows. */
+  private def computeBaseline(windows: Seq[(WindowDefinition, Query)],
+      mode: BaselineMode, now: Long,
+      emit: (Long, Seq[Map[String, String]]) => Unit)
       : Seq[(String, String, String)] = {
     val bootMode = mode match {
       case BaselineMode.Last      => BaselineBootstrap.Last
       case BaselineMode.Aggregate => BaselineBootstrap.Aggregate
     }
-    parsed.compiledHistoricalQueries.flatMap { case (window, query) =>
-      if (targetWindow.exists(_ != window.windowName)) Nil
-      else {
-        val quads = logProvider(window.streamName)
-        window.windowType match {
-          case WindowType.HistoricalFixed =>
-            val out = HistoricalExecutor.executeFixed(quads, query,
-              window.start.get, window.end.get)
-            BaselineBootstrap.statementsLocal(
-              Iterator.single(collectBindings(out,
-                Seq("timestamp_from", "timestamp_to"))), bootMode)
-          case WindowType.HistoricalSliding =>
-            val spec = HistoricalExecutor.SlidingSpec(
-              window.offset.get, window.width, window.slide)
-            val out = HistoricalExecutor.executeSliding(quads, query,
-              now, spec)
-            BaselineBootstrap.statementsLocal(
-              slidingBatches(out, spec), bootMode)
-          case WindowType.Live => Nil
-        }
-      }
+    windows.flatMap { case (window, query) =>
+      BaselineBootstrap.statementsLocal(
+        evaluateWindow(window, query, now).map { case (ts, bindings) =>
+          emit(ts, bindings)
+          bindings
+        }, bootMode)
     }
   }
 
@@ -491,7 +497,7 @@ final class JanusApi(
   }
 
   private def rowToBinding(cols: Array[String], drop: Seq[String])(
-      row: org.apache.spark.sql.Row): Map[String, String] =
+      row: Row): Map[String, String] =
     cols.zipWithIndex.collect {
       case (name, i) if !drop.contains(name) && !row.isNullAt(i) =>
         name -> String.valueOf(row.get(i))

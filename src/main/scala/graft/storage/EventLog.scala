@@ -404,19 +404,8 @@ final class EventLog(
     * files no manifest names, which [[compact]] sweeps once they are
     * older than the grace period. */
   private[graft] def appendLocal(batch: LocalQuads): Unit = {
-    val sqlConf = spark.sessionState.conf
-    // the options of every Spark write of the log (see writeAndCommit)
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConfWithOptions(
-        LocalFs + ("parquet.enable.dictionary" -> "false")))
-    val factory = org.apache.spark.sql.execution.datasources.parquet
-      .ParquetUtils.prepareWrite(sqlConf, job, batch.schema,
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetOptions(Map("compression" -> compression), sqlConf))
-    val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID(
-        "graft-append", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
-    val fs = root.getFileSystem(job.getConfiguration)
+    val (factory, task) = localWriter(batch.schema)
+    val fs = root.getFileSystem(task.getConfiguration)
     current(fs) // migrate a pre-manifest log before adding files to it
     val ext = factory.getFileExtension(task)
     val written = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -441,6 +430,35 @@ final class EventLog(
     commit(fs, written.toSeq)
     maybeAutoCompact()
   }
+
+  /** The parquet writer setup of [[appendLocal]] for one data schema:
+    * its output writer factory and the task context its writers open
+    * files under. `prepareWrite` stores the schema in the job's conf,
+    * so each schema (the data schema with one input's nullability, see
+    * [[EventLog.LocalQuads]]) gets a job of its own; each is built once
+    * per log, on its first append, like [[hadoopConf]] for reads. */
+  @transient private lazy val localWriters = scala.collection.mutable
+    .HashMap.empty[org.apache.spark.sql.types.StructType, (
+      org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+      org.apache.hadoop.mapreduce.TaskAttemptContext)]
+
+  private def localWriter(schema: org.apache.spark.sql.types.StructType)
+      : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+        org.apache.hadoop.mapreduce.TaskAttemptContext) =
+    localWriters.synchronized(localWriters.getOrElseUpdate(schema, {
+      val sqlConf = spark.sessionState.conf
+      // the options of every Spark write of the log (see writeAndCommit)
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(
+        spark.sessionState.newHadoopConfWithOptions(
+          LocalFs + ("parquet.enable.dictionary" -> "false")))
+      val factory = org.apache.spark.sql.execution.datasources.parquet
+        .ParquetUtils.prepareWrite(sqlConf, job, schema,
+          new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetOptions(Map("compression" -> compression), sqlConf))
+      (factory, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID(
+          "graft-append", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0)))
+    }))
 
   /** Backfill append for inputs spanning many buckets: hash-repartition
     * on the bucket id so each task writes into few bucket directories

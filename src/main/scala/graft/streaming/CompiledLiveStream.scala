@@ -8,7 +8,7 @@ import graft.sparql.{AggItem, GBgp, GBind, GGroup, GMinus, GOptional, GPath,
 import graft.storage.EventLog
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
@@ -18,7 +18,6 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import java.util.concurrent.atomic.AtomicReference
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** The live RSP engine (SURVEY.md §2.2 W1/W2/W5; reference behavior
   * `src/stream/live_stream_processing.rs:466-552` in the reference,
@@ -46,12 +45,12 @@ import scala.jdk.CollectionConverters._
   *     fire-varying literal in generated code, so Spark's code
   *     generation cache serves every fire after the first;
   *   - each advance evaluates its due fires with ONE Spark action and
-  *     hands every fire's rows to `resultSink` as a driver-local frame
-  *     (a `LocalRelation`, see [[fireBatch]]): reading it schedules no
-  *     Spark job, and no file backs it, so a sink may hold frames for as
-  *     long as it likes. The cost is that results reach the driver
-  *     inside the engine — what a consumer that collects anyway (the
-  *     API's sink does, per solution) pays itself;
+  *     hands every fire's rows, with their schema, to `resultSink`
+  *     (see [[fireBatch]]): they are already on the driver, so no file
+  *     backs them and a sink may hold them for as long as it likes. The
+  *     cost is that results reach the driver inside the engine — what a
+  *     consumer that collects anyway (the API's sink delivers one result
+  *     per solution) pays itself;
   *   - buckets no future fire can reach are PRUNED from the log
   *     (`EventLog.pruneBefore`) after each advance — storage stays
   *     bounded by `max(RANGE) + slide`, the distributed analogue of the
@@ -73,7 +72,7 @@ final class CompiledLiveStream(
     spark: SparkSession,
     queryText: String,
     log: EventLog,
-    resultSink: (DataFrame, Long, Long) => Unit) {
+    resultSink: (Seq[Row], StructType, Long, Long) => Unit) {
 
   import CompiledLiveStream._
 
@@ -211,12 +210,14 @@ final class CompiledLiveStream(
     * keyed per fire through the compiler's `extraKeys` channel (the
     * same machinery that makes N historical windows one plan), from the
     * template compiled once per static side. Per advance, Spark runs
-    * the baseline broadcast stage (hybrid queries) and the one action
-    * that evaluates the fires; the driver binds the fire's file list
-    * and close list into the template and re-plans it, with no compile
-    * and no new generated code. The fires' rows are on the driver once
-    * that action returns, so nothing the sink holds reads the log, and
-    * the buckets no future snapshot can reach are dropped at once. */
+    * the one action that evaluates the fires. For a hybrid query its
+    * join broadcasts the fire's live-log scan (the build side); the
+    * baseline is a local table the join streams. The driver binds the
+    * fire's file list and close list into the template and re-plans it,
+    * with no compile and no new generated code. The fires' rows are on
+    * the driver once that action returns, so nothing the sink holds
+    * reads the log, and the buckets no future snapshot can reach are
+    * dropped at once. */
   private def advance(): Unit = {
     // every due (window, close) pair, closes enumerated per window
     val due = parsed.liveWindows.flatMap { w =>
@@ -242,15 +243,14 @@ final class CompiledLiveStream(
     * span covers them (each row paired with the tiny close list), and
     * the compiled plan runs once with the fire id as an orchestration
     * key. That one action ([[collectRows]]) brings the result to the
-    * driver, and each fire's rows go to the sink as a local frame, in
-    * close-time order.
+    * driver, and each fire's rows go to the sink, in close-time order.
     *
     * The driver bound is the advance's result: at most one row per fire
     * for a single-group aggregate (the reference's one-message-per-fire
     * channel, live_stream_processing.rs result bus), one row per match
-    * otherwise. A consumer that collects its frames (the API's sink
-    * does) holds those rows on the driver in any case; a sink that
-    * writes its frames out receives them through the driver.
+    * otherwise. A consumer that keeps its rows (the API's sink does)
+    * holds them on the driver in any case; a sink that writes them out
+    * receives them through the driver.
     *
     * A fire with no result rows emits nothing, except for a
     * single-group aggregate whose snapshot has rows: per-fire semantics
@@ -269,7 +269,7 @@ final class CompiledLiveStream(
     val byFire = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Row]]
     collectRows(resultPart).foreach { r =>
       byFire.getOrElseUpdate(r.getLong(fireIdx), mutable.ArrayBuffer.empty) +=
-        Row.fromSeq(keepIdx.map(r.get))
+        new GenericRowWithSchema(keepIdx.map(r.get).toArray, outSchema)
     }
     // which fires have ANY snapshot row: the reference emits nothing
     // at all for an entirely empty snapshot (no window and no static
@@ -283,8 +283,7 @@ final class CompiledLiveStream(
       else probe.fold(Set.empty[Long])(observedFires)
     due.foreach { case (w, c) =>
       byFire.get(c) match {
-        case Some(rows) => resultSink(localFrame(rows.toSeq, outSchema),
-          c - w.width, c)
+        case Some(rows) => resultSink(rows.toSeq, outSchema, c - w.width, c)
         case None if emitsOnEmptyGroup && snapHas.contains(c) =>
           fire(t, w, c)
         case None => () // no solutions for this fire
@@ -304,20 +303,15 @@ final class CompiledLiveStream(
     * for a fire whose snapshot has rows but whose keyed aggregation
     * produced no group (the implicit single group must emit e.g.
     * `COUNT = 0`), from the template's single-fire plan. Its one row
-    * reaches the sink as a local frame, like every other fire's. */
+    * reaches the sink like every other fire's. */
   private def fire(t: FireTemplate, w: WindowDefinition, c: Long): Unit = {
     val out = t.bind(t.single, Seq(c))._1
-    resultSink(localFrame(collectRows(out).toSeq, out.schema), c - w.width, c)
+    resultSink(collectRows(out).toSeq, out.schema, c - w.width, c)
   }
 
   /** `df`'s rows on the driver, from one Spark action: the engine's only
     * result pull (see [[fireBatch]] for what bounds it). */
   private def collectRows(df: DataFrame): Array[Row] = df.collect()
-
-  /** `rows` as a driver-local frame: a `LocalRelation`, so reading it
-    * runs no Spark job and it stays readable whatever the log prunes. */
-  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
 
   /** The query's fire plans over one static side, compiled and
     * optimized ONCE ([[SparqlCompiler]]'s only caller here) against a

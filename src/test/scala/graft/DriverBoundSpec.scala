@@ -38,7 +38,7 @@ class DriverBoundSpec extends AnyFunSuite {
     *   bounded by an advance's result: ≤1 row per fire for
     *   single-group aggregates (the reference's per-fire message
     *   channel), one row per match otherwise, which the API's sink
-    *   collects in any case; maxima and the aggregate path's snapshot
+    *   keeps in any case; maxima and the aggregate path's snapshot
     *   presence are observed metrics, not collects.
     * - Clustering: k×d centroid tables per iteration.
     * - Bench: benchmark harness (drains results to time them).

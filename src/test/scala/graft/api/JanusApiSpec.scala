@@ -187,6 +187,104 @@ class JanusApiSpec extends AnyFunSuite {
     api.stopQuery("hybrid")
   }
 
+  /** An api over [[store]] whose logProvider records each call as
+    * (source IRI, calling thread's name). */
+  private def countingApi()
+      : (JanusApi, QueryRegistry, () => Seq[(String, String)]) = {
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val registry = new QueryRegistry()
+    val api = new JanusApi(spark, registry, { src =>
+      calls.add(src -> Thread.currentThread.getName)
+      store
+    }, () => 10000L)
+    (api, registry, () => calls.asScala.toSeq)
+  }
+
+  /** The next `n` results, all of which must be Historical. */
+  private def historical(h: JanusApi#QueryHandle, n: Int): Seq[QueryResult] = {
+    val rs = (1 to n).flatMap(_ => h.receive(10000))
+    assert(rs.size === n && rs.forall(_.source === ResultSource.Historical))
+    rs
+  }
+
+  test("a hybrid start reads each historical window's source once: the " +
+      "baseline window runs only on the warm-up thread") {
+    val (api, registry, calls) = countingApi()
+    api.registerQuery("once", hybridQuery)
+    val handle = api.startQuery("once")
+    assert(handle.awaitWarmup())
+    assert(handle.status === ExecutionStatus.Running)
+    historical(handle, 1)
+    assert(calls().map(_._1) === Seq("http://example.org/store"))
+    assert(calls().forall(_._2 === "graft-baseline-once"))
+    assert(registry.executionCount("once") === 1)
+    api.stopQuery("once")
+  }
+
+  test("the baseline window's Historical result is the one the same " +
+      "window gives as a historical-only query") {
+    val (api, registry) = newApi()
+    api.registerQuery("hyb", hybridQuery)
+    val hyb = api.startQuery("hyb")
+    assert(hyb.awaitWarmup())
+    val fromHybrid = historical(hyb, 1).head
+    // the baseline still joins the live side after its batch was emitted
+    hyb.addLiveEvents(LiveStream, hybridFeed)
+    assert(liveResults(hyb).map(_.bindings) ===
+      Seq(Seq(Map("sensor" -> "http://example.org/sensor0", "live" -> "40"))))
+    assert(registry.executionCount("hyb") === 2)
+    api.stopQuery("hyb")
+
+    api.registerQuery("alone",
+      """PREFIX ex: <http://example.org/>
+        |SELECT ?sensor ?hist
+        |FROM NAMED WINDOW ex:hist ON LOG ex:store [START 0 END 9000]
+        |WHERE {
+        |    WINDOW ex:hist { ?sensor ex:reading ?hist }
+        |}""".stripMargin)
+    val alone = historical(api.startQuery("alone"), 1).head
+    assert(fromHybrid.timestamp === 9000L)
+    assert(fromHybrid.timestamp === alone.timestamp)
+    assert(fromHybrid.bindings.length === 10)
+    assert(fromHybrid.bindings.sortBy(_.toString) ===
+      alone.bindings.sortBy(_.toString))
+    assert(registry.executionCount("alone") === 1)
+  }
+
+  test("when USING BASELINE names one of two historical windows, the " +
+      "other still emits from its own worker") {
+    val (api, registry, calls) = countingApi()
+    api.registerQuery("two",
+      """PREFIX ex: <http://example.org/>
+        |PREFIX baseline: <https://janus.rs/baseline#>
+        |REGISTER RStream ex:out AS
+        |SELECT ?sensor ?live ?a ?b
+        |FROM NAMED WINDOW ex:histA ON LOG ex:storeA [START 0 END 4000]
+        |FROM NAMED WINDOW ex:histB ON LOG ex:storeB [START 5000 END 9000]
+        |FROM NAMED WINDOW ex:live ON STREAM ex:liveStream [RANGE 1000 STEP 1000]
+        |USING BASELINE ex:histA AGGREGATE
+        |WHERE {
+        |    WINDOW ex:histA { ?sensor ex:reading ?a }
+        |    WINDOW ex:histB { ?sensor ex:reading ?b }
+        |    WINDOW ex:live { ?sensor ex:reading ?live }
+        |    ?sensor baseline:a ?mean .
+        |}""".stripMargin)
+    val handle = api.startQuery("two")
+    assert(handle.awaitWarmup())
+    val rs = historical(handle, 2)
+    // readings at ts 0..4000 and 5000..9000: five solutions each
+    assert(rs.map(r => r.timestamp -> r.bindings.length).toSet ===
+      Set(4000L -> 5, 9000L -> 5))
+    assert(rs.find(_.timestamp == 4000L).get.bindings.forall(_.contains("a")))
+    assert(rs.find(_.timestamp == 9000L).get.bindings.forall(_.contains("b")))
+    assert(calls().toSet === Set(
+      "http://example.org/storeA" -> "graft-baseline-two",
+      "http://example.org/storeB" -> "graft-hist-two-http://example.org/histB"))
+    assert(calls().size === 2)
+    assert(registry.executionCount("two") === 2)
+    api.stopQuery("two")
+  }
+
   test("historical window ON STREAM scopes to the stream's named graph " +
       "(janusql_parser.rs:556-558)") {
     // quads from two streams, tagged with their stream graph

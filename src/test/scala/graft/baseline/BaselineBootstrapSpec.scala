@@ -134,8 +134,8 @@ class BaselineBootstrapSpec extends AnyFunSuite {
         |}""".stripMargin,
       new graft.storage.EventLog(spark, java.nio.file.Files
         .createTempDirectory("baseline-live").resolve("log").toString),
-      (df, _, to) => df.collect().foreach(r =>
-        results += ((r.getValuesMap[String](df.columns.toSeq), to))))
+      (rows, schema, _, to) => rows.foreach(r =>
+        results += ((r.getValuesMap[String](schema.fieldNames.toSeq), to))))
     live.setStaticData(graft.core.RdfEvent.toDF(spark, asStaticQuads(stmts)))
     live.processBatch(graft.core.RdfEvent.toDF(spark, Seq(
       graft.core.RdfEvent(100L, s1, "http://example.org/reading", "40", ""),

@@ -7,11 +7,12 @@ import graft.storage.EventLog
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,7 +134,8 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
       "http://example.org/value", (50 + i).toString, "")
 
   /** Spark jobs one steady single fire of [[hybridQuery]] runs: the
-    * baseline broadcast and the one action that collects the fire.
+    * broadcast of its join's build side (the fire's live-log scan) and
+    * the one action that collects the fire.
     * Per-fire compilation ran 3 (measured with this spec's listener on
     * that engine): the broadcast, an eager checkpoint and the sink's
     * read of it. */
@@ -143,7 +145,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
       "than per-fire compilation did") {
     val fired = mutable.ArrayBuffer.empty[Long]
     val c = new CompiledLiveStream(spark, hybridQuery, newLog(),
-      (df, _, to) => { df.collect(); fired += to })
+      (_, _, _, to) => fired += to)
     c.setStaticData(RdfEvent.toDF(spark,
       Seq(baseline("a", 10), baseline("b", 100))))
     // warm-up: the first fires generate the code, and by batch 12 the
@@ -172,11 +174,12 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
   test("row-per-match fire frames are consumed with 0 Spark jobs and " +
       "stay readable after the log prunes their buckets") {
     val dir = Files.createTempDirectory("clsprune").resolve("log")
-    // LAZY sink: holds every frame and reads none until the feed is done
-    val fires = mutable.ArrayBuffer.empty[(DataFrame, Long, Long)]
+    // LAZY sink: holds every fire's rows and reads none until the feed
+    // is done
+    val fires = mutable.ArrayBuffer.empty[(Seq[Row], StructType, Long, Long)]
     val c = new CompiledLiveStream(spark, basicQuery,
       new EventLog(spark, dir.toString, bucketMs = 1000L),
-      (df, from, to) => fires += ((df, from, to)))
+      (rows, schema, from, to) => fires += ((rows, schema, from, to)))
     val events = (0 until 20).map { i =>
       Stream1 -> RdfEvent(i * 1000L, s"http://example.org/s$i",
         "http://example.org/p", s"o$i", "")
@@ -197,7 +200,8 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     val consumed = new SinkBuffer
     spark.sparkContext.addSparkListener(listener)
     try {
-      fires.foreach { case (df, from, to) => consumed.sink(df, from, to) }
+      fires.foreach { case (rows, schema, from, to) =>
+        consumed.sink(rows, schema, from, to) }
       Thread.sleep(2000)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() === 0,
@@ -277,7 +281,7 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
     // a LAZY sink: the only reads of the log are the fires' own scans
     val fired = mutable.ArrayBuffer.empty[Long]
     val c = new CompiledLiveStream(spark, query, log,
-      (_, _, to) => fired += to)
+      (_, _, _, to) => fired += to)
     // one single-quad file per batch, at ts 1000 i + 500: batch i makes
     // close 1000 i due, whose window [1000 i - 5000, 1000 i) holds the
     // five previous batches' files
@@ -457,8 +461,8 @@ class CompiledLiveStreamSpec extends AnyFunSuite {
         : Seq[(Long, Long, Seq[String])] = {
       val out = mutable.ArrayBuffer.empty[(Long, Long, Seq[String])]
       val c = new CompiledLiveStream(spark, query, newLog(),
-        (df, from, to) =>
-          out += ((from, to, df.collect().map(_.toString).toSeq.sorted)))
+        (rows, _, from, to) =>
+          out += ((from, to, rows.map(_.toString).sorted)))
       batches.foreach { b =>
         val df = quadsDF(b)
         assert(EventLog.localQuads(df).isDefined)

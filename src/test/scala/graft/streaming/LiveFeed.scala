@@ -4,7 +4,8 @@ import graft.TestSpark
 import graft.core.RdfEvent
 import graft.storage.EventLog
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 import scala.collection.mutable
@@ -31,9 +32,10 @@ object LiveFeed {
     * the parity reference emits. */
   final class SinkBuffer {
     val rows = mutable.ArrayBuffer.empty[(Map[String, String], Long, Long)]
-    def sink(df: DataFrame, from: Long, to: Long): Unit = {
-      val cols = df.columns
-      df.collect().foreach { row =>
+    def sink(fireRows: Seq[Row], schema: StructType, from: Long,
+        to: Long): Unit = {
+      val cols = schema.fieldNames
+      fireRows.foreach { row =>
         val b = cols.zipWithIndex.collect {
           case (name, i) if !row.isNullAt(i) =>
             name -> String.valueOf(row.get(i))

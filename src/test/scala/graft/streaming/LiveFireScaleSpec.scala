@@ -5,7 +5,7 @@ import graft.core.RdfEvent
 import graft.storage.EventLog
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -52,12 +52,12 @@ class LiveFireScaleSpec extends AnyFunSuite {
       "driver heap, correct per-fire slices") {
     // LAZY sink: records the slice and its span, evaluates nothing —
     // per-fire evaluation jobs would hide in the sink otherwise
-    val fires = mutable.ArrayBuffer.empty[(DataFrame, Long, Long)]
+    val fires = mutable.ArrayBuffer.empty[(Seq[Row], Long, Long)]
     val log = new EventLog(spark,
       Files.createTempDirectory("firescale").resolve("log").toString,
       bucketMs = 1000L)
     val cls = new CompiledLiveStream(spark, query, log,
-      (df, from, to) => fires += ((df, from, to)))
+      (rows, _, from, to) => fires += ((rows, from, to)))
 
     val jobs = new AtomicInteger
     val listener = new SparkListener {
@@ -99,7 +99,7 @@ class LiveFireScaleSpec extends AnyFunSuite {
     // spot-check slices (evaluated AFTER job counting): fire at close c
     // holds the events with ts in [c-200, c), joined p1×p2 per event id
     def rowsAt(c: Long): Set[(String, String, String)] =
-      fires.filter(_._3 == c).head._1.collect()
+      fires.filter(_._3 == c).head._1
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     val at1000 = rowsAt(1000L)
     val expect1000 = (80 to 99).map(i =>
@@ -127,8 +127,8 @@ class LiveFireScaleSpec extends AnyFunSuite {
       "consuming every fire frame afterwards costs ZERO Spark jobs") {
     // the reference's one-message-per-fire bus: an aggregate with no
     // GROUP BY emits ≤ 1 row per fire, so the engine collects the
-    // fire-keyed result ONCE and hands the sink LocalTableScan-backed
-    // frames — downstream reads must not schedule anything
+    // fire-keyed result ONCE and hands the sink each fire's rows —
+    // downstream reads must not schedule anything
     val aggQuery =
       """PREFIX ex: <http://example.org/>
         |REGISTER RStream <out> AS
@@ -137,12 +137,12 @@ class LiveFireScaleSpec extends AnyFunSuite {
         |WHERE {
         |    WINDOW ex:wa { ?e ex:p1 ?a }
         |}""".stripMargin
-    val fires = mutable.ArrayBuffer.empty[(DataFrame, Long, Long)]
+    val fires = mutable.ArrayBuffer.empty[(Seq[Row], Long, Long)]
     val log = new EventLog(spark,
       Files.createTempDirectory("firechan").resolve("log").toString,
       bucketMs = 1000L)
     val cls = new CompiledLiveStream(spark, aggQuery, log,
-      (df, from, to) => fires += ((df, from, to)))
+      (rows, _, from, to) => fires += ((rows, from, to)))
     cls.processBatch(quads(1 to 1000)) // 100 closes due at once
     assert(fires.size == 100, s"expected 100 fires, got ${fires.size}")
 
@@ -153,7 +153,7 @@ class LiveFireScaleSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     val counts = try {
-      val r = fires.map { case (df, _, to) => to -> df.collect() }
+      val r = fires.map { case (rows, _, to) => to -> rows.toArray }
       Thread.sleep(2000)
       r
     } finally spark.sparkContext.removeSparkListener(listener)
